@@ -24,12 +24,6 @@ def extract_text_udf(html: pd.Series) -> pd.Series:
     return html.map(extract_text)
 
 
-@F.pandas_udf(T.StringType())
-def sha256_text_udf(text: pd.Series) -> pd.Series:
-    import hashlib
-    return text.map(lambda s: hashlib.sha256((s or "").encode()).hexdigest())
-
-
 # ---------------------------------------------------------------------------
 # JVM-side text analysis (documents table / training-data pipeline family)
 # ---------------------------------------------------------------------------

@@ -83,8 +83,9 @@ def registrable_domain(url: Column,
     host = url_host(url)
     last2 = F.regexp_extract(host, r"([^.]+\.[^.]+)$", 0)
     last3 = F.regexp_extract(host, r"([^.]+\.[^.]+\.[^.]+)$", 0)
+    suffixes = PSL2_SNAPSHOT if psl is None else psl
     return F.when(
-        last2.isin(*sorted(psl or PSL2_SNAPSHOT)) & (last3 != ""),
+        last2.isin(*sorted(suffixes)) & (last3 != ""),
         last3).otherwise(last2)
 
 

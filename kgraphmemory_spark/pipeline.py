@@ -11,7 +11,8 @@ Two execution modes:
   last committed stage (tests/test_resume.py kills between stages).
 
 Every transform is a pure function of committed inputs and deterministic
-ids, so resume is idempotent by construction.
+ids, so resume is idempotent by construction.  The stages from alias_table
+on are ``build_graph``, which the streaming finalizes call too.
 """
 
 from __future__ import annotations
@@ -94,6 +95,36 @@ def same_as_edges(spark: SparkSession) -> DataFrame:
     )
 
 
+def _stager(spark: SparkSession, cat: SnapshotCatalog | None,
+            cache_intermediates: bool, resumed: list[str]):
+    """→ ``stage(name, build, lineage_extra=None)``: in memory (``cat``
+    None) build and cache all but the wide fan-out stages; checkpointed,
+    resume a committed stage (named on ``resumed``) or build and commit."""
+    no_cache = {"mentions", "raw_triples", "linked"}
+
+    def stage(name: str, build, lineage_extra=None) -> DataFrame:
+        if cat is None:
+            df = build()
+            if cache_intermediates and name not in no_cache:
+                df = df.cache()
+            return df
+        if cat.committed(name):
+            resumed.append(name)
+            return cat.read(spark, name)
+
+        def _lineage(df: DataFrame) -> DataFrame | None:
+            # url-keyed stages carry per-bucket lineage; global stages
+            # (canonical map, entity/relation rollups) are audited by the
+            # manifest row counts instead.
+            if "url" not in df.columns:
+                return None
+            return lineage_by_url(df, name, extra_aggs=lineage_extra)
+
+        return cat.stage(spark, name, build, lineage_of=_lineage)
+
+    return stage
+
+
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
@@ -123,31 +154,29 @@ def run_pipeline(
     docs / 19M mentions)."""
     cat = SnapshotCatalog(workdir) if workdir else None
     resumed: list[str] = []
-    _no_cache = {"mentions", "raw_triples", "linked"}
-
-    def stage(name: str, build, lineage_extra=None) -> DataFrame:
-        if cat is None:
-            df = build()
-            if cache_intermediates and name not in _no_cache:
-                df = df.cache()
-            return df
-        if cat.committed(name):
-            resumed.append(name)
-            return cat.read(spark, name)
-
-        def _lineage(df: DataFrame) -> DataFrame | None:
-            # url-keyed stages carry per-bucket lineage; global stages
-            # (canonical map, entity/relation rollups) are audited by the
-            # manifest row counts instead.
-            if "url" not in df.columns:
-                return None
-            return lineage_by_url(df, name, extra_aggs=lineage_extra)
-
-        return cat.stage(spark, name, build, lineage_of=_lineage)
-
+    stage = _stager(spark, cat, cache_intermediates, resumed)
     docs_clean = stage("docs_clean", lambda: extract_docs(pages))
     mentions = stage("mentions", lambda: extract_mentions(docs_clean))
     raw_triples = stage("raw_triples", lambda: extract_raw_triples(docs_clean))
+    return build_graph(spark, cat, docs_clean, mentions, raw_triples,
+                       resumed, link_strategy, graph, cache_intermediates)
+
+
+def build_graph(spark: SparkSession, cat: SnapshotCatalog | None,
+                docs_clean: DataFrame, mentions: DataFrame,
+                raw_triples: DataFrame, resumed: list[str] | None = None,
+                link_strategy: str = "auto", graph: str = DEFAULT_GRAPH,
+                cache_intermediates: bool = True,
+                canonical_of=None) -> KGTables:
+    """The stages alias_table through provenance over staged docs_clean,
+    mentions and raw_triples: the one stage graph behind ``run_pipeline``
+    and the streaming finalizes.  ``cat`` and ``resumed`` as in
+    ``_stager``.  ``canonical_of(ents)`` replaces the canonical_map build
+    over the ranked entity set (the streaming delta-CC).  Stage builders
+    are looked up as this module's globals at call time, so wrapping
+    ``pipeline.<builder>`` observes the path a build took."""
+    resumed = [] if resumed is None else resumed
+    stage = _stager(spark, cat, cache_intermediates, resumed)
 
     # alias table: vocabulary-sized — committed as its own snapshot /
     # cached, since both linking and canonicalization read it.  Discovered
@@ -206,6 +235,8 @@ def run_pipeline(
         # the DataFrame CC path's ~6 fixed-latency mini-jobs, which
         # otherwise sit in the scaling run's serial floor.
         ents = ranked.select("entity_id").distinct()
+        if canonical_of is not None:
+            return canonical_of(ents)
         if use_docagg:
             ids = [r["entity_id"] for r in ents.collect()]
             pairs = [("ent:" + a, "ent:" + b) for a, b in SYNONYMS]
@@ -268,18 +299,9 @@ def run_pipeline(
 
     relations = stage("relations", _relations)
 
-    if cat is None:
-        frames, slots = build_frames_slots(relations)
-        if cache_intermediates:
-            frames, slots = frames.cache(), slots.cache()
-    else:
-        if cat.committed("frames") and cat.committed("slots"):
-            resumed += ["frames", "slots"]
-            frames, slots = cat.read(spark, "frames"), cat.read(spark, "slots")
-        else:
-            frames, slots = build_frames_slots(relations)
-            frames = cat.commit("frames", frames)
-            slots = cat.commit("slots", slots)
+    frames_slots = build_frames_slots(relations)      # two lazy plans
+    frames = stage("frames", lambda: frames_slots[0])
+    slots = stage("slots", lambda: frames_slots[1])
 
     triples = stage("triples", lambda: build_triples(entities, frames, graph))
 

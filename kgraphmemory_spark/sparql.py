@@ -2005,12 +2005,16 @@ class SparqlEngine:
                     # variable set), then solution-joined, so an
                     # already-bound ?ep prunes via the equi-join.
                     # Sorted iteration keeps the plan deterministic.
+                    # ?ep also bound inside the pattern (SERVICE ?ep
+                    # { ?ep ?p ?o }): the arm keeps only the solutions
+                    # where it equals the endpoint IRI
                     arms = []
                     for iri in sorted(self.services):
                         adf, avars = _svc_eval(self.services[iri])
-                        arms.append((adf.select(
-                            F.lit(iri).alias(ep[1]), "*"),
-                            avars | {ep[1]}))
+                        adf = (adf.where(F.col(ep[1]) == iri)
+                               if ep[1] in avars else
+                               adf.select(F.lit(iri).alias(ep[1]), "*"))
+                        arms.append((adf, avars | {ep[1]}))
                     if not arms:
                         # no registered endpoints: the variable has
                         # nothing to range over — empty solution set
@@ -2020,8 +2024,10 @@ class SparqlEngine:
                         # projection of one must see NULL-typed columns,
                         # not an unbound-variable error).
                         adf, avars = _svc_eval(self.triples.limit(0))
-                        sdf = adf.select(
-                            F.lit(None).cast("string").alias(ep[1]), "*")
+                        sdf = (adf.where(F.lit(False))
+                               if ep[1] in avars else adf.select(
+                                   F.lit(None).cast("string").alias(ep[1]),
+                                   "*"))
                         df, bound = self._join(df, bound, sdf,
                                                avars | {ep[1]})
                         continue

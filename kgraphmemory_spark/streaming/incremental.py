@@ -7,9 +7,9 @@ streaming analog sketched there: page batches arrive as files, each
 micro-batch runs the *map-side* pipeline stages (extract → mentions →
 raw triples) through ``foreachBatch`` appends, and a finalize step runs the
 *global* stages (alias discovery, linking, canonicalization,
-materialization) over everything accumulated — exactly the same operator
-functions as the batch pipeline, so streamed output == batch output
-(asserted in tests/test_streaming.py).
+materialization) over everything accumulated — the same stage function as
+the batch pipeline (``pipeline.build_graph``), so streamed output == batch
+output (asserted in tests/test_streaming.py).
 
 Idempotency / exactly-once: Structured Streaming may replay a micro-batch
 after a crash; appended stage rows are therefore deduplicated at finalize
@@ -31,20 +31,9 @@ from pyspark.sql import functions as F
 
 from ..datagen import PAGE_SCHEMA
 from ..io.snapshots import MANIFEST, SnapshotCatalog
-from ..operators.cc import canonical_mapping, merge_components
+from ..operators.cc import merge_components
 from ..operators.extraction import extract_docs, extract_mentions, extract_raw_triples
-from ..operators.linking import discovered_alias_table, link_mentions, rank_candidates
-from ..operators.materialize import (
-    DEFAULT_GRAPH,
-    build_entities,
-    build_frames_slots,
-    build_provenance,
-    build_relations,
-    build_triples,
-)
-from ..pipeline import KGTables, same_as_edges
-
-_STAGES = ("docs_clean", "mentions", "raw_triples")
+from ..pipeline import KGTables, build_graph, same_as_edges
 
 
 def _stream_dir(workdir: str, stage: str) -> str:
@@ -124,9 +113,7 @@ def _accum_token(spark: SparkSession, workdir: str) -> str:
     return f"e{int(row['n'])}_{int(row['mx'])}"
 
 
-def finalize(spark: SparkSession, workdir: str,
-             link_strategy: str = "broadcast",
-             graph: str = DEFAULT_GRAPH) -> KGTables:
+def finalize(spark: SparkSession, workdir: str) -> KGTables:
     """Run the global stages over everything streamed so far.  Replayed
     micro-batches are collapsed here by natural-key dedup, so the result is
     identical to the batch pipeline over the same pages.  The snapshot
@@ -134,43 +121,9 @@ def finalize(spark: SparkSession, workdir: str,
     ingest-more-then-finalize-again recomputes in a fresh catalog instead
     of returning the previous cycle's committed tables."""
     docs, mentions, raw_triples = _accumulated(spark, workdir)
-
     cat = SnapshotCatalog(os.path.join(
         workdir, f"final_{_accum_token(spark, workdir)}"))
-    alias = cat.stage(spark, "alias_table",
-                      lambda: discovered_alias_table(mentions))
-    linked = cat.stage(spark, "linked",
-                       lambda: link_mentions(mentions, alias,
-                                             strategy=link_strategy))
-
-    def _canonical():
-        ents = rank_candidates(alias).select("entity_id").distinct()
-        return canonical_mapping(ents, same_as_edges(spark))
-
-    canonical = cat.stage(spark, "canonical_map", _canonical)
-    linked_canonical = linked.join(F.broadcast(canonical), "entity_id").select(
-        "url", "pos", "surface", "kind", "entity_id", "link_score",
-        "canonical_id")
-
-    entities = cat.stage(spark, "entities",
-                         lambda: build_entities(linked_canonical))
-    relations = cat.stage(spark, "relations",
-                          lambda: build_relations(raw_triples, canonical))
-    frames, slots = build_frames_slots(relations)
-    frames = cat.stage(spark, "frames", lambda: frames)
-    slots = cat.stage(spark, "slots", lambda: slots)
-    triples = cat.stage(spark, "triples",
-                        lambda: build_triples(entities, frames, graph))
-    provenance = cat.stage(
-        spark, "provenance",
-        lambda: build_provenance(linked_canonical, raw_triples))
-
-    return KGTables(
-        docs_clean=docs, mentions=mentions, raw_triples=raw_triples,
-        linked=linked_canonical, canonical=canonical, entities=entities,
-        relations=relations, frames=frames, slots=slots, triples=triples,
-        provenance=provenance,
-    )
+    return build_graph(spark, cat, docs, mentions, raw_triples)
 
 
 def _generations(workdir: str) -> tuple[list[int], int]:
@@ -194,9 +147,7 @@ def _generations(workdir: str) -> tuple[list[int], int]:
     return sorted(committed), (max(seen) + 1 if seen else 0)
 
 
-def finalize_incremental(spark: SparkSession, workdir: str,
-                         link_strategy: str = "broadcast",
-                         graph: str = DEFAULT_GRAPH) -> KGTables:
+def finalize_incremental(spark: SparkSession, workdir: str) -> KGTables:
     """Generation-aware finalize: call it after each ingest pass; each call
     commits ``final_v<k>`` snapshots.
 
@@ -220,17 +171,8 @@ def finalize_incremental(spark: SparkSession, workdir: str,
     cat = SnapshotCatalog(os.path.join(workdir, f"final_v{gen}"))
     markers: list[str] = []
 
-    alias = cat.stage(spark, "alias_table",
-                      lambda: discovered_alias_table(mentions))
-    linked = cat.stage(spark, "linked",
-                       lambda: link_mentions(mentions, alias,
-                                             strategy=link_strategy))
-    ents = rank_candidates(alias).select("entity_id").distinct()
-
-    def _canonical() -> DataFrame:
+    def _delta_cc(ents: DataFrame) -> DataFrame:
         same = same_as_edges(spark)
-        if not gens:
-            return canonical_mapping(ents, same_as=same)
         prev = SnapshotCatalog(os.path.join(workdir, f"final_v{gens[-1]}"))
         committed = prev.read(spark, "canonical_map").select(
             F.col("entity_id").alias("node"),
@@ -253,34 +195,14 @@ def finalize_incremental(spark: SparkSession, workdir: str,
         merged = merge_components(committed, delta, "src", "dst")
         markers.append("canonical_map:delta")
         # isolated new entities (no same-as edge) → themselves
-        out = (
+        return (
             ents.join(merged, ents["entity_id"] == merged["node"], "left")
             .select("entity_id",
                     F.coalesce("component", "entity_id").alias("canonical_id"))
         )
-        return out
 
-    canonical = cat.stage(spark, "canonical_map", _canonical)
-    linked_canonical = linked.join(F.broadcast(canonical), "entity_id").select(
-        "url", "pos", "surface", "kind", "entity_id", "link_score",
-        "canonical_id")
-
-    entities = cat.stage(spark, "entities",
-                         lambda: build_entities(linked_canonical))
-    relations = cat.stage(spark, "relations",
-                          lambda: build_relations(raw_triples, canonical))
-    frames, slots = build_frames_slots(relations)
-    frames = cat.stage(spark, "frames", lambda: frames)
-    slots = cat.stage(spark, "slots", lambda: slots)
-    triples = cat.stage(spark, "triples",
-                        lambda: build_triples(entities, frames, graph))
-    provenance = cat.stage(
-        spark, "provenance",
-        lambda: build_provenance(linked_canonical, raw_triples))
-
-    return KGTables(
-        docs_clean=docs, mentions=mentions, raw_triples=raw_triples,
-        linked=linked_canonical, canonical=canonical, entities=entities,
-        relations=relations, frames=frames, slots=slots, triples=triples,
-        provenance=provenance, stages_resumed=markers,
-    )
+    # generation 0 has no committed map to start from: plain CC
+    kg = build_graph(spark, cat, docs, mentions, raw_triples,
+                     canonical_of=_delta_cc if gens else None)
+    kg.stages_resumed += markers
+    return kg

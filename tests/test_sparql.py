@@ -1325,6 +1325,26 @@ def test_service_variable_endpoint(spark):
     assert [(r.ep, r.sc) for r in got] == [("urn:svc:b", "7")]
 
 
+def test_service_variable_endpoint_bound_inside(spark):
+    """SERVICE ?ep { ?ep ?p ?o }: the endpoint variable also occurs in
+    the pattern, so each arm keeps only the rows whose ?ep equals its
+    endpoint IRI — with no registered endpoint the result is empty."""
+    svc_a = [("urn:svc:a", "urn:p", "self", None, None, None),
+             ("urn:svc:b", "urn:p", "other", None, None, None)]
+    svc_b = [("urn:svc:b", "urn:p", "self-b", None, None, None)]
+    rows = [("urn:x", "urn:p", "y", None, None, None)]
+    eng2 = SparqlEngine(
+        spark.createDataFrame(rows, SCHEMA),
+        services={"urn:svc:a": spark.createDataFrame(svc_a, SCHEMA),
+                  "urn:svc:b": spark.createDataFrame(svc_b, SCHEMA)})
+    q = 'SELECT ?ep ?o WHERE { SERVICE ?ep { ?ep ?p ?o } } ORDER BY ?ep'
+    got = eng2.query(q).collect()
+    assert [(r.ep, r.o) for r in got] == [
+        ("urn:svc:a", "self"), ("urn:svc:b", "self-b")]
+    bare = SparqlEngine(spark.createDataFrame(rows, SCHEMA))
+    assert bare.query(q).collect() == []
+
+
 def test_service_own_dataset_outside_from_scope(spark):
     """A FROM dataset clause scopes the OUTER pattern only — the SERVICE
     pattern evaluates against the endpoint's own table (§13.2 vs

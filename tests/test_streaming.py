@@ -13,6 +13,9 @@ from kgraphmemory_spark.streaming.incremental import (
     ingest_stream,
 )
 
+GRAPH_TABLES = ("canonical", "entities", "relations", "frames", "slots",
+                "triples", "provenance")
+
 
 @pytest.fixture(scope="module")
 def streamed(spark, tmp_path_factory):
@@ -42,10 +45,45 @@ def test_multiple_microbatches(streamed):
 
 def test_stream_equals_batch(streamed):
     _, _, kg_stream, kg_batch = streamed
-    for name in ("relations", "entities", "triples"):
+    for name in GRAPH_TABLES:
         s = {tuple(r) for r in getattr(kg_stream, name).collect()}
         b = {tuple(r) for r in getattr(kg_batch, name).collect()}
         assert s == b, name
+
+
+DOCAGG_PATH = ("canonical_mapping_local", "build_entities_docagg",
+               "build_relations_docagg", "extract_provenance_docagg")
+SHUFFLE_PATH = ("canonical_mapping", "build_entities_preagg",
+                "build_relations", "build_provenance")
+
+
+def test_finalize_under_the_ceiling_takes_the_docagg_path(
+        spark, tmp_path, monkeypatch):
+    """A streamed vocabulary under the doc-aggregate ceiling is finalized
+    by the same builders as a batch run: the four doc-aggregate paths,
+    none of the shuffle paths."""
+    from kgraphmemory_spark import pipeline
+
+    input_dir = str(tmp_path / "pages_in")
+    workdir = str(tmp_path / "work")
+    spark.createDataFrame(datagen.generate_pages_rows(20, seed=5),
+                          schema=datagen.PAGE_SCHEMA) \
+        .coalesce(1).write.parquet(input_dir)
+    ingest_stream(spark, input_dir, workdir)
+
+    called: set[str] = set()
+
+    def wrap(name, orig):
+        def recorded(*args, **kwargs):
+            called.add(name)
+            return orig(*args, **kwargs)
+        return recorded
+
+    for name in DOCAGG_PATH + SHUFFLE_PATH:
+        monkeypatch.setattr(pipeline, name,
+                            wrap(name, getattr(pipeline, name)))
+    finalize(spark, workdir)
+    assert called == set(DOCAGG_PATH)
 
 
 def test_replay_is_idempotent(spark, streamed):
@@ -119,7 +157,7 @@ def test_incremental_finalize_equals_batch_over_three_batches(
             assert "canonical_map:delta" in kg_inc.stages_resumed
         kg_batch = run_pipeline(
             spark, spark.createDataFrame(seen, schema=datagen.PAGE_SCHEMA))
-        for name in ("relations", "entities", "triples"):
+        for name in GRAPH_TABLES:
             s = {tuple(r) for r in getattr(kg_inc, name).collect()}
             b = {tuple(r) for r in getattr(kg_batch, name).collect()}
             assert s == b, (k, name)

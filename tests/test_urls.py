@@ -91,8 +91,15 @@ def test_registrable_domain_psl(spark):
 
 
 def test_registrable_domain_psl_override_seam(spark):
-    """A provisioned fuller snapshot replaces the built-in one."""
+    """A provisioned snapshot replaces the built-in one — an empty one
+    too, which turns the two-label suffix rule off."""
     df = spark.createDataFrame([("https://a.b.custom.tld/",)], "u string")
     got = df.select(U.registrable_domain(
         F.col("u"), psl=frozenset({"custom.tld"})).alias("d")).collect()
     assert got[0].d == "b.custom.tld"
+    uk = spark.createDataFrame([("https://a.b.co.uk/",)], "u string")
+    got = uk.select(
+        U.registrable_domain(F.col("u")).alias("d"),
+        U.registrable_domain(F.col("u"), psl=frozenset()).alias("e"),
+    ).collect()
+    assert (got[0].d, got[0].e) == ("b.co.uk", "co.uk")

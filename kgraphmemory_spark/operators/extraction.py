@@ -1,11 +1,16 @@
-"""Stage 1-2: page extraction, mention detection, raw triple extraction.
+"""Stage 1-2: page extraction, mention detection, raw triple extraction,
+and the doc-aggregate kernel behind the entity, relation and provenance
+fast paths.
 
-Everything except the HTML→text decode is pure `pyspark.sql.functions`
-(whole-stage codegen): tokenization = `split`, mention/adjacency fan-out =
-`posexplode`/`transform` over token arrays.  The HTML decode is the one
-mandated pandas UDF (Arrow-batched) and wraps the SAME pure function the
-pytest oracle uses (`semantics.extract_text`) — the byte-identical-text
-invariant holds by construction.
+Mentions and raw triples are pure `pyspark.sql.functions` (whole-stage
+codegen): tokenization = `split`, mention/adjacency fan-out =
+`posexplode`/`zip_with` over token arrays.  Python runs in two places:
+- the HTML decode, a pandas UDF (Arrow-batched) that wraps the SAME pure
+  function the pytest oracle uses (`semantics.extract_text`) — the
+  byte-identical-text invariant holds by construction;
+- `extract_docagg`, one Arrow-batched map pass over docs_clean that emits
+  the doc-local aggregates of entities, relations and provenance under
+  the vocabulary ceiling (its docstring says why and what it mirrors).
 
 Rule-set: semantics.py (webtext-v1).
 """
@@ -17,17 +22,6 @@ from pyspark.sql import functions as F
 
 from ..functions.text import extract_text_udf
 from ..semantics import BIGRAM_ALIASES, REL_NEXT
-
-
-def _as_broadcast(docs: DataFrame, canonical_map):
-    """Accept either a plain dict (broadcast here) or an existing
-    ``pyspark.Broadcast`` handle — run_pipeline broadcasts the canonical
-    map ONCE and hands the same handle to all three doc-agg extractors,
-    instead of shipping up-to-hundreds-of-MB of dict three times."""
-    from pyspark.broadcast import Broadcast
-    if isinstance(canonical_map, Broadcast):
-        return canonical_map
-    return docs.sparkSession.sparkContext.broadcast(canonical_map)
 
 
 def extract_docs(pages: DataFrame) -> DataFrame:
@@ -99,239 +93,67 @@ def extract_raw_triples(docs: DataFrame) -> DataFrame:
     )
 
 
-def extract_canonical_pair_counts(docs: DataFrame, canonical_map) -> DataFrame:
-    """docs_clean → (url, subj, obj, cnt): per-document CANONICAL pair
-    counts, one row per distinct canonical pair per document — the
-    doc-local half of the relations aggregate pushed into the extraction
-    pass.
+# extract_docagg's flat tagged output: each row kind names the columns it
+# uses of the shared string (s1, s2) and count (n1, n2, n3) slots
+DOCAGG_SCHEMA = "tag string, s1 string, s2 string, n1 long, n2 long, n3 long"
+_DOCAGG_COLUMNS = {
+    "entities": ("canonical_id", "name", "big", "cnt", None),
+    "relations": ("subj", "obj", "cnt", "ndocs", None),
+    "provenance": ("url", None, "n_mentions", "n_entities", "n_triples"),
+}
 
-    Why: ``build_relations`` needs weight = Σ occurrences and ndocs =
-    distinct docs per canonical pair.  Every pair of a document comes from
-    ONE docs_clean row, so the (pair, url) level of that aggregate is
-    computable entirely map-side; grouping it on the cluster instead
-    shuffles the whole pair stream — measured 2.3 GB + 2.7 GB shuffle and
-    ~1200 CPU-s over 3 stages at 2M pages, the pipeline's scaling
-    bottleneck.  Here one Arrow batch pass emits the already-deduped
-    per-doc rows and the global agg becomes a groupBy over the canonical
-    pair space with full map-side combine (shuffle ≈ distinct pairs per
-    partition — KBs on a bounded vocabulary).
 
-    Canonicalization happens INSIDE the pass (tokens mapped through the
-    vocabulary-sized ``canonical_map`` dict, shipped as a Spark broadcast)
-    because per-doc dedup must run on canonical pairs: two surface pairs
-    that merge under canonicalization within one document count that
-    document ONCE, exactly like the countDistinct(url) in the shuffle
-    path.  Tokens without a canonical entry are dropped (the shuffle
-    path's inner probe join).  Assumes url is unique per docs_clean row
-    (it is the input table's key — BASELINE input_hint).
+def docagg_rows(docagg: DataFrame, tag: str) -> DataFrame:
+    """The ``tag`` rows of ``extract_docagg`` under their own column names."""
+    return docagg.where(F.col("tag") == tag).select(*[
+        F.col(slot).alias(name) for slot, name in
+        zip(("s1", "s2", "n1", "n2", "n3"), _DOCAGG_COLUMNS[tag]) if name])
+
+
+def extract_docagg(docs: DataFrame, canonical_map: dict) -> DataFrame:
+    """docs_clean → the doc-aggregate rows of entities, relations and
+    provenance in one ``DOCAGG_SCHEMA`` table, from ONE Arrow pass that
+    tokenizes, factorizes and canonicalizes each batch once.
+    ``docagg_rows`` projects each kind.
+
+    Why: every mention, adjacency pair and raw triple of a document comes
+    from ONE docs_clean row, so the doc level of all three aggregates is
+    computable map-side.  The shuffle paths group the 10^2×-wider mention
+    and pair streams instead: relations alone measured 2.3 GB + 2.7 GB
+    shuffle and ~1200 CPU-s over 3 stages at 2M pages, provenance 57 s
+    against the cost of one docs_clean scan (2M pages / 16 cores).
+
+    - ``entities``: one partial row per canonical id per batch (mention
+      count, min surface, bigram flag — all decomposable, and under the
+      discovered-alias pipeline entity_id is a pure function of (surface,
+      kind): ``ent:<surface>`` / ``BIGRAM_ALIASES[surface]``), finished by
+      ``build_entities_docagg``.  The mention explode never materializes.
+    - ``relations``: one partial row per canonical adjacency pair per
+      batch (Σ occurrences, number of batch documents holding the pair),
+      summed by ``build_relations_docagg``.  Per-doc dedup runs on
+      CANONICAL pairs: two surface pairs that merge under canonicalization
+      within one document count that document ONCE, exactly like the
+      countDistinct(url) in the shuffle path.  Assumes url is unique per
+      docs_clean row (it is the input table's key — BASELINE input_hint).
+    - ``provenance``: the finished per-doc rows.  n_mentions = unigram
+      tokens + phrase-table bigram hits whose canonical lookup succeeds;
+      n_entities = distinct canonical ids over those mentions; n_triples
+      = adjacency pairs = max(len(tokens)-1, 0), NOT canonical-filtered
+      (build_provenance counts raw_triples); docs with zero surviving
+      mentions emit no row (build_provenance's left join hangs triples
+      off the mention side).
+
+    Tokens and bigrams without a canonical entry are dropped — the shuffle
+    paths' alias-join ∘ canonical-join composition (with the pipeline's
+    discovered alias every token resolves; the .get guard is defensive).
+    Semantics are pinned against the shuffle paths in
+    tests/test_pipeline_fastpath.py.  Only valid under the vocabulary
+    ceiling where ``canonical_map`` is a driver dict
+    (``pipeline.build_graph`` gates on RELATIONS_DOCAGG_MAX_VOCAB).
     """
-    bmap = _as_broadcast(docs, canonical_map)
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        cmap = bmap.value
-        empty = None
-        for pdf in batches:
-            texts = pdf["text"]
-            mask = texts.str.len() > 0          # mirrors _tokens' filter
-            texts = texts[mask].reset_index(drop=True)
-            urls = pdf["url"][mask].to_numpy()
-            # one explode → flat token stream with doc ids; everything
-            # below is vectorized numpy / one hash-based factorize — no
-            # per-document python loop, no object-array sort
-            ex = texts.str.split(" ").explode()  # mirrors F.split(text," ")
-            flat = ex.to_numpy()
-            di_flat = ex.index.to_numpy()
-            lens = np.bincount(di_flat, minlength=len(texts))
-            tok_codes, uniq = pd.factorize(flat)
-            # factorize through CANONICAL space: distinct surfaces that
-            # merge under canonicalization must share a code, or same-doc
-            # merged pairs would be counted as distinct (ndocs inflation);
-            # one dict lookup per DISTINCT token per batch
-            canon_vals = [cmap.get("ent:" + u) for u in uniq]
-            uniq_canon = sorted({v for v in canon_vals if v is not None})
-            codes = {v: i for i, v in enumerate(uniq_canon)}
-            tok2canon = np.array(
-                [codes.get(v, -1) if v is not None else -1
-                 for v in canon_vals], dtype=np.int64)
-            c = tok2canon[tok_codes]
-            offs = np.cumsum(lens) - lens
-            pos = np.arange(len(flat), dtype=np.int64) - np.repeat(offs, lens)
-            a_mask = pos < np.repeat(lens, lens) - 1   # all but doc-last
-            b_mask = pos > 0                           # all but doc-first
-            ca, cb = c[a_mask], c[b_mask]              # aligned pair codes
-            di = di_flat[a_mask]
-            keep = (ca >= 0) & (cb >= 0)
-            if not keep.any():
-                if empty is None:
-                    empty = pd.DataFrame({
-                        "url": pd.Series([], dtype=str),
-                        "subj": pd.Series([], dtype=str),
-                        "obj": pd.Series([], dtype=str),
-                        "cnt": pd.Series([], dtype="int64")})
-                yield empty
-                continue
-            # count (doc, subj, obj) groups on a packed int64 key — a
-            # C-speed np.unique instead of a pandas groupby over object
-            # strings.  Bounds: docs per Arrow batch ≤ 10^4
-            # (maxRecordsPerBatch), distinct canonical ids per batch
-            # ≤ 10^6 → key < 10^16 << 2^63.
-            nc = len(uniq_canon)
-            key = (di[keep] * nc + ca[keep]) * nc + cb[keep]
-            uk, counts = np.unique(key, return_counts=True)
-            kb = uk % nc
-            rest = uk // nc
-            ka = rest % nc
-            kd = rest // nc
-            canon_arr = np.array(uniq_canon, dtype=object)
-            yield pd.DataFrame({
-                "url": urls[kd],
-                "subj": canon_arr[ka],
-                "obj": canon_arr[kb],
-                "cnt": counts.astype("int64"),
-            })
-
-    return docs.select("url", "text").mapInPandas(
-        gen, schema="url string, subj string, obj string, cnt long")
-
-
-def extract_entity_counts_docagg(docs: DataFrame, canonical_map) -> DataFrame:
-    """docs_clean → per-batch partial entity aggregates
-    (canonical_id, name, big, cnt) — the entities analog of the
-    relations/provenance fast paths.
-
-    ``build_entities_preagg`` aggregates the per-occurrence mention
-    stream by (surface, kind) and then joins the vocabulary tables; all
-    of its aggregate functions (count, min-surface, has-bigram) are
-    decomposable, and under the discovered-alias pipeline entity_id is a
-    pure function of (surface, kind) — ``ent:<surface>`` /
-    ``BIGRAM_ALIASES[surface]`` — so the whole per-surface level can be
-    folded into the extraction pass: each Arrow batch emits one partial
-    row per canonical id seen in the batch (counts summed, names
-    min-ed, bigram flag or-ed by the final vocab-sized groupBy in
-    ``build_entities_docagg``).  The mention explode (10^2× docs rows)
-    never materializes; the shuffle carries batches × batch-vocab rows.
-
-    Tokens/bigrams whose canonical lookup fails are dropped — the
-    shuffle path's alias-join ∘ canonical-join composition (defensive:
-    the pipeline's discovered alias always resolves).  Gated like the
-    other doc-agg paths on the vocabulary ceiling.
-    """
-    bmap = _as_broadcast(docs, canonical_map)
-    first_words = {k.split(" ")[0] for k in BIGRAM_ALIASES}
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        cmap = bmap.value
-        empty = pd.DataFrame({
-            "canonical_id": pd.Series([], dtype=str),
-            "name": pd.Series([], dtype=str),
-            "big": pd.Series([], dtype="int32"),
-            "cnt": pd.Series([], dtype="int64")})
-        for pdf in batches:
-            texts = pdf["text"]
-            texts = texts[texts.str.len() > 0].reset_index(drop=True)
-            if len(texts) == 0:
-                yield empty
-                continue
-            ex = texts.str.split(" ").explode()
-            flat = ex.to_numpy()
-            di_flat = ex.index.to_numpy()
-            lens = np.bincount(di_flat, minlength=len(texts))
-            tok_codes, uniq = pd.factorize(flat)
-            nu = max(len(uniq), 1)
-            canon_vals = [cmap.get("ent:" + u) for u in uniq]
-            # bigram hits (same index algebra as the sibling passes)
-            offs = np.cumsum(lens) - lens
-            pos = np.arange(len(flat), dtype=np.int64) - np.repeat(offs, lens)
-            a_mask = pos < np.repeat(lens, lens) - 1
-            a_tok, b_tok = tok_codes[a_mask], tok_codes[pos > 0]
-            fw = np.array([u in first_words for u in uniq], dtype=bool)
-            cand = np.nonzero(fw[a_tok])[0] if len(a_tok) else \
-                np.array([], dtype=np.int64)
-            pk = a_tok[cand].astype(np.int64) * nu + b_tok[cand]
-            upk, inv = np.unique(pk, return_inverse=True)
-            big_surfs = [uniq[k // nu] + " " + uniq[k % nu] for k in upk]
-            big_vals = []
-            for s in big_surfs:
-                e = BIGRAM_ALIASES.get(s)
-                big_vals.append(cmap.get(e) if e is not None else None)
-            parts: dict = {}   # canonical_id -> [min_name, big, cnt]
-            uni_counts = np.bincount(tok_codes, minlength=len(uniq))
-            for i, v in enumerate(canon_vals):
-                if v is None:
-                    continue
-                s, n = uniq[i], int(uni_counts[i])
-                p = parts.get(v)
-                if p is None:
-                    parts[v] = [s, 0, n]
-                else:
-                    if s < p[0]:
-                        p[0] = s
-                    p[2] += n
-            big_counts = np.bincount(inv, minlength=len(upk)) \
-                if len(cand) else np.array([], dtype=np.int64)
-            for i, v in enumerate(big_vals):
-                if v is None:
-                    continue
-                s, n = big_surfs[i], int(big_counts[i])
-                p = parts.get(v)
-                if p is None:
-                    parts[v] = [s, 1, n]
-                else:
-                    if s < p[0]:
-                        p[0] = s
-                    p[1] = 1
-                    p[2] += n
-            if not parts:
-                yield empty
-                continue
-            keys = sorted(parts)
-            yield pd.DataFrame({
-                "canonical_id": keys,
-                "name": [parts[k][0] for k in keys],
-                "big": pd.Series([parts[k][1] for k in keys],
-                                 dtype="int32"),
-                "cnt": pd.Series([parts[k][2] for k in keys],
-                                 dtype="int64"),
-            })
-
-    return docs.select("text").mapInPandas(
-        gen, schema="canonical_id string, name string, big int, cnt long")
-
-
-def extract_provenance_docagg(docs: DataFrame, canonical_map) -> DataFrame:
-    """docs_clean → provenance(url, n_mentions, n_entities, n_triples),
-    computed entirely doc-locally — the provenance analog of the
-    relations fast path.
-
-    ``build_provenance`` groups the 10^2×-wider linked-mention and
-    raw-triple streams by url, but every one of a document's mentions,
-    entities and adjacency triples lives in ONE docs_clean row, so all
-    three counts are doc-local: one Arrow pass emits the finished rows
-    with no mention/triple fan-out, no linking-join recompute and no
-    shuffle at all (measured: 57 s → the cost of one docs_clean scan at
-    2M pages / 16 cores).
-
-    Semantics mirrored exactly (tests/test_pipeline_fastpath.py):
-    - n_mentions = unigram tokens + phrase-table bigram hits whose
-      canonical lookup succeeds (the shuffle path's alias-join ∘
-      canonical-join composition; with the pipeline's discovered alias
-      every token resolves, the .get guard is defensive);
-    - n_entities = distinct canonical ids over those mentions;
-    - n_triples = adjacency pairs = max(len(tokens)-1, 0) — NOT
-      canonical-filtered (build_provenance counts raw_triples);
-    - docs with zero surviving mentions emit no row (build_provenance's
-      left join hangs triples off the mention side).
-
-    Only valid under the vocabulary ceiling where ``canonical_map`` is a
-    driver dict (run_pipeline gates on RELATIONS_DOCAGG_MAX_VOCAB).
-    """
-    bmap = _as_broadcast(docs, canonical_map)
+    # shipped as a Spark broadcast, not captured in the task closure: the
+    # bytes ceiling lets this vocabulary-sized dict reach ~hundreds of MB
+    bmap = docs.sparkSession.sparkContext.broadcast(canonical_map)
     # 4-entry phrase table → candidate pairs are prefiltered to the few
     # whose first token can open a phrase, so the string lookup below
     # touches a tiny unique set per batch
@@ -341,78 +163,105 @@ def extract_provenance_docagg(docs: DataFrame, canonical_map) -> DataFrame:
         import numpy as np
         import pandas as pd
 
+        def tagged(tag, s1, s2, n1, n2, n3=0):
+            return pd.DataFrame({"tag": tag, "s1": s1, "s2": s2,
+                                 "n1": n1, "n2": n2, "n3": n3})
+
         cmap = bmap.value
-        empty = pd.DataFrame({
-            "url": pd.Series([], dtype=str),
-            "n_mentions": pd.Series([], dtype="int64"),
-            "n_entities": pd.Series([], dtype="int64"),
-            "n_triples": pd.Series([], dtype="int64")})
         for pdf in batches:
             texts = pdf["text"]
             mask = texts.str.len() > 0          # mirrors _tokens' filter
             texts = texts[mask].reset_index(drop=True)
             urls = pdf["url"][mask].to_numpy()
-            ndocs = len(texts)
-            if ndocs == 0:
-                yield empty
+            nd = len(texts)
+            if nd == 0:
                 continue
-            ex = texts.str.split(" ").explode()
+            # one explode → flat token stream with doc ids; everything
+            # below is vectorized numpy / one hash-based factorize — no
+            # per-document python loop, no object-array sort
+            ex = texts.str.split(" ").explode()  # mirrors F.split(text," ")
             flat = ex.to_numpy()
             di_flat = ex.index.to_numpy()
-            lens = np.bincount(di_flat, minlength=ndocs)
+            lens = np.bincount(di_flat, minlength=nd)
             tok_codes, uniq = pd.factorize(flat)
-            nu = max(len(uniq), 1)
-            canon_vals = [cmap.get("ent:" + u) for u in uniq]
-            # adjacent pairs, doc-local (same index algebra as the
-            # relations pass)
+            nu = len(uniq)
+            # adjacent pairs, doc-local: a = all but doc-last token,
+            # b = all but doc-first, aligned
             offs = np.cumsum(lens) - lens
             pos = np.arange(len(flat), dtype=np.int64) - np.repeat(offs, lens)
             a_mask = pos < np.repeat(lens, lens) - 1
             a_tok, b_tok = tok_codes[a_mask], tok_codes[pos > 0]
             di_pair = di_flat[a_mask]
             fw = np.array([u in first_words for u in uniq], dtype=bool)
-            cand = np.nonzero(fw[a_tok])[0] if len(a_tok) else \
-                np.array([], dtype=np.int64)
-            pk = a_tok[cand].astype(np.int64) * nu + b_tok[cand]
-            upk, inv = np.unique(pk, return_inverse=True)
-            big_vals = []
-            for k in upk:
-                e = BIGRAM_ALIASES.get(
-                    uniq[k // nu] + " " + uniq[k % nu])
-                big_vals.append(cmap.get(e) if e is not None else None)
-            # one canonical code space across unigram + bigram entities
-            uniq_canon = sorted(
-                {v for v in canon_vals if v is not None}
-                | {v for v in big_vals if v is not None})
-            nc = max(len(uniq_canon), 1)
-            codes = {v: i for i, v in enumerate(uniq_canon)}
-            tok2c = np.array(
-                [codes[v] if v is not None else -1 for v in canon_vals],
-                dtype=np.int64)
-            big2c = np.array(
-                [codes[v] if v is not None else -1 for v in big_vals],
-                dtype=np.int64)
-            c_uni = tok2c[tok_codes]
-            c_big = big2c[inv] if len(cand) else \
-                np.array([], dtype=np.int64)
-            di_big = di_pair[cand]
-            keep_uni, keep_big = c_uni >= 0, c_big >= 0
-            n_mentions = (
-                np.bincount(di_flat[keep_uni], minlength=ndocs)
-                + np.bincount(di_big[keep_big], minlength=ndocs))
-            ent_keys = np.unique(np.concatenate([
-                di_flat[keep_uni] * nc + c_uni[keep_uni],
-                di_big[keep_big] * nc + c_big[keep_big]]))
-            n_entities = np.bincount(ent_keys // nc, minlength=ndocs)
-            n_triples = np.maximum(lens - 1, 0)
-            keep_doc = n_mentions > 0
-            yield pd.DataFrame({
-                "url": urls[keep_doc],
-                "n_mentions": n_mentions[keep_doc].astype("int64"),
-                "n_entities": n_entities[keep_doc].astype("int64"),
-                "n_triples": n_triples[keep_doc].astype("int64"),
-            })
+            cand = np.nonzero(fw[a_tok])[0]
+            upk, inv = np.unique(a_tok[cand].astype(np.int64) * nu
+                                 + b_tok[cand], return_inverse=True)
+            big_surfs = np.array(
+                [uniq[k // nu] + " " + uniq[k % nu] for k in upk],
+                dtype=object)
+            # one dict lookup per DISTINCT token / bigram per batch, then
+            # factorize through CANONICAL space (one code space across
+            # unigram and bigram entities): distinct surfaces that merge
+            # under canonicalization must share a code, or same-doc merged
+            # pairs would be counted as distinct (ndocs inflation)
+            canon_vals = [cmap.get("ent:" + u) for u in uniq]
+            big_vals = [cmap.get(BIGRAM_ALIASES.get(s)) for s in big_surfs]
+            canon = np.array(
+                sorted({v for v in canon_vals + big_vals if v is not None}),
+                dtype=object)
+            nc = max(len(canon), 1)
+            codes = {v: i for i, v in enumerate(canon)}
+            tok2c = np.array([codes.get(v, -1) for v in canon_vals],
+                             dtype=np.int64)
+            big2c = np.array([codes.get(v, -1) for v in big_vals],
+                             dtype=np.int64)
 
-    return docs.select("url", "text").mapInPandas(
-        gen, schema="url string, n_mentions long, n_entities long, "
-                    "n_triples long")
+            ent = pd.DataFrame({
+                "c": np.concatenate([tok2c, big2c]),
+                "name": np.concatenate([uniq, big_surfs]),
+                "big": np.repeat([0, 1], [nu, len(upk)]),
+                "cnt": np.concatenate([
+                    np.bincount(tok_codes, minlength=nu),
+                    np.bincount(inv, minlength=len(upk))]),
+            })
+            ent = ent[ent["c"] >= 0].groupby("c").agg(
+                name=("name", "min"), big=("big", "max"), cnt=("cnt", "sum"))
+            yield tagged("entities", canon[ent.index.to_numpy()],
+                         ent["name"].to_numpy(), ent["big"].to_numpy(),
+                         ent["cnt"].to_numpy())
+
+            # count (pair, doc) groups on a packed int64 key — a C-speed
+            # np.unique instead of a pandas groupby over object strings —
+            # then the docs per pair.  Bounds: docs per Arrow batch ≤ 10^4
+            # (maxRecordsPerBatch), distinct canonical ids per batch
+            # ≤ 10^6 → key < 10^16 << 2^63.
+            ca, cb = tok2c[a_tok], tok2c[b_tok]
+            keep = (ca >= 0) & (cb >= 0)
+            pair_doc, occ = np.unique(
+                (ca[keep] * nc + cb[keep]) * nd + di_pair[keep],
+                return_counts=True)
+            pairs, first, ndocs = np.unique(
+                pair_doc // nd, return_index=True, return_counts=True)
+            yield tagged("relations", canon[pairs // nc], canon[pairs % nc],
+                         np.add.reduceat(occ, first), ndocs)
+
+            c_uni, c_big = tok2c[tok_codes], big2c[inv]
+            di_big = di_pair[cand]
+            ku, kb = c_uni >= 0, c_big >= 0
+            n_mentions = (np.bincount(di_flat[ku], minlength=nd)
+                          + np.bincount(di_big[kb], minlength=nd))
+            ent_keys = np.unique(np.concatenate([
+                di_flat[ku] * nc + c_uni[ku], di_big[kb] * nc + c_big[kb]]))
+            n_entities = np.bincount(ent_keys // nc, minlength=nd)
+            n_triples = np.maximum(lens - 1, 0)
+            doc = n_mentions > 0
+            yield tagged("provenance", urls[doc], None, n_mentions[doc],
+                         n_entities[doc], n_triples[doc])
+
+    return docs.select("url", "text").mapInPandas(gen, schema=DOCAGG_SCHEMA)
+
+
+def extract_provenance_docagg(docagg: DataFrame) -> DataFrame:
+    """provenance(url, n_mentions, n_entities, n_triples): the finished
+    per-doc rows of ``extract_docagg``."""
+    return docagg_rows(docagg, "provenance")

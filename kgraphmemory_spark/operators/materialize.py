@@ -35,6 +35,7 @@ from ..semantics import (
     TYPE_TOKEN,
     VITAL_TYPE,
 )
+from .extraction import docagg_rows
 
 DEFAULT_GRAPH = "urn:graph:web"
 
@@ -105,13 +106,13 @@ def build_entities_preagg(mentions: DataFrame, ranked_alias: DataFrame,
     )
 
 
-def build_entities_docagg(parts: DataFrame) -> DataFrame:
-    """Finish the entity build from the per-batch partial aggregates of
-    ``extraction.extract_entity_counts_docagg``: one vocabulary-sized
-    hash agg (decomposable min/max/sum), identical rows to
+def build_entities_docagg(docagg: DataFrame) -> DataFrame:
+    """Finish the entity build from the per-batch partial ``entities``
+    rows of ``extraction.extract_docagg``: one vocabulary-sized hash agg
+    (decomposable min/max/sum), identical rows to
     ``build_entities_preagg`` — asserted in tests/test_pipeline_fastpath.py."""
     return (
-        parts.groupBy("canonical_id")
+        docagg_rows(docagg, "entities").groupBy("canonical_id")
         .agg(
             F.min("name").alias("name"),
             F.max("big").alias("_big"),
@@ -173,20 +174,21 @@ def build_relations(raw_triples: DataFrame, canonical: DataFrame,
     )
 
 
-def build_relations_docagg(pair_counts: DataFrame,
+def build_relations_docagg(docagg: DataFrame,
                            pred: str | None = None) -> DataFrame:
-    """relations from ``extract_canonical_pair_counts`` output: the rows
-    are already canonical and deduped per document, so weight = Σ cnt and
-    ndocs = COUNT(*) — ONE aggregation whose map-side combine collapses
-    each partition to its distinct canonical pairs before any shuffle.
-    Identical output to ``build_relations`` (asserted in
+    """relations from the per-batch partial ``relations`` rows of
+    ``extraction.extract_docagg``: the rows are already canonical and
+    carry per-batch doc counts deduped per document, so weight = Σ cnt
+    and ndocs = Σ ndocs — ONE aggregation whose map-side combine
+    collapses each partition to its distinct canonical pairs before any
+    shuffle.  Identical output to ``build_relations`` (asserted in
     tests/test_pipeline_fastpath.py); this is the scale path whenever the
     canonical vocabulary fits a broadcast dict."""
     from ..semantics import REL_NEXT
     return (
-        pair_counts.groupBy("subj", "obj")
+        docagg_rows(docagg, "relations").groupBy("subj", "obj")
         .agg(F.sum("cnt").cast("long").alias("weight"),
-             F.count(F.lit(1)).alias("ndocs"))
+             F.sum("ndocs").cast("long").alias("ndocs"))
         .select("subj", F.lit(pred or REL_NEXT).alias("pred"), "obj",
                 "weight", "ndocs")
     )

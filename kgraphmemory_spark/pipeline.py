@@ -17,6 +17,7 @@ on are ``build_graph``, which the streaming finalizes call too.
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,9 +26,8 @@ from pyspark.sql import functions as F
 from .io.snapshots import SnapshotCatalog, lineage_by_url
 from .operators.cc import canonical_mapping, canonical_mapping_local
 from .operators.extraction import (
-    extract_canonical_pair_counts,
+    extract_docagg,
     extract_docs,
-    extract_entity_counts_docagg,
     extract_mentions,
     extract_provenance_docagg,
     extract_raw_triples,
@@ -247,14 +247,20 @@ def build_graph(spark: SparkSession, cat: SnapshotCatalog | None,
 
     # vocabulary under the dict ceiling (rows AND bytes) → the canonical
     # map lives on the driver and unlocks the doc-aggregated fast paths
-    # for relations, entities and provenance below.  Broadcast ONCE and
-    # hand the same handle to all three extractors — the bytes ceiling
-    # allows this dict to reach ~hundreds of MB, and three independent
-    # broadcasts would ship (and pin) three copies of it (ADVICE r3).
+    # for entities, relations and provenance below.
     cmap = ({r["entity_id"]: r["canonical_id"] for r in canonical.collect()}
             if use_docagg else None)
-    bcmap = (spark.sparkContext.broadcast(cmap)
-             if cmap is not None else None)
+
+    @functools.cache
+    def docagg() -> DataFrame:
+        # the one kernel pass all three fast paths read, held like
+        # ``ranked`` but lazily: it runs inside the job of the first stage
+        # that needs it (entities, unless that stage resumed) and the
+        # later stages read its cached / local-checkpointed blocks
+        out = extract_docagg(docs_clean, cmap)
+        if cat is None and cache_intermediates:
+            return out.cache()
+        return out.localCheckpoint(eager=False)
 
     def _linked_canonical() -> DataFrame:
         canon = F.broadcast(canonical) if broadcast_vocab else canonical
@@ -266,16 +272,15 @@ def build_graph(spark: SparkSession, cat: SnapshotCatalog | None,
     linked_canonical = _linked_canonical()
 
     # entities: under the vocab ceiling the whole per-surface level folds
-    # into one Arrow pass over docs_clean (per-batch partial aggregates in
-    # canonical space — extract_entity_counts_docagg docstring); open
+    # into the doc-aggregate pass over docs_clean (per-batch partial
+    # aggregates in canonical space — extract_docagg docstring); open
     # vocabulary → aggregate the mention stream by (surface, kind) before
     # any join (decomposable aggs — build_entities_preagg docstring).
     # build_entities(linked_canonical) is the reference shape and remains
     # the oracle in tests
     def _entities() -> DataFrame:
         if cmap is not None:
-            return build_entities_docagg(
-                extract_entity_counts_docagg(docs_clean, bcmap))
+            return build_entities_docagg(docagg())
         return build_entities_preagg(
             mentions, ranked, canonical, broadcast_alias=broadcast_vocab)
 
@@ -284,7 +289,7 @@ def build_graph(spark: SparkSession, cat: SnapshotCatalog | None,
     def _relations() -> DataFrame:
         # Scale path: when the canonical vocabulary fits a driver dict,
         # the (pair, url) half of the relations aggregate is computed
-        # per-document inside the extraction pass (every pair of a doc
+        # per-document inside the doc-aggregate pass (every pair of a doc
         # lives in ONE docs_clean row, so the url level never needs a
         # shuffle) and the global agg map-side-combines down to the
         # canonical pair space.  The shuffle path measured 2.3+2.7 GB
@@ -292,8 +297,7 @@ def build_graph(spark: SparkSession, cat: SnapshotCatalog | None,
         # Open vocabulary past the dict ceiling → the original
         # pre-aggregated shuffle path.
         if cmap is not None:
-            return build_relations_docagg(
-                extract_canonical_pair_counts(docs_clean, bcmap))
+            return build_relations_docagg(docagg())
         return build_relations(raw_triples, canonical,
                                broadcast_canonical=broadcast_vocab)
 
@@ -307,10 +311,10 @@ def build_graph(spark: SparkSession, cat: SnapshotCatalog | None,
 
     def _provenance() -> DataFrame:
         # doc-local fast path under the vocab ceiling (all three counts
-        # of a url live in one docs_clean row — extraction.py docstring);
+        # of a url live in one docs_clean row — extract_docagg docstring);
         # open vocabulary → the keyed-aggregate shuffle path
         if cmap is not None:
-            return extract_provenance_docagg(docs_clean, bcmap)
+            return extract_provenance_docagg(docagg())
         return build_provenance(linked_canonical, raw_triples)
 
     provenance = stage("provenance", _provenance)

@@ -142,3 +142,22 @@ def test_headline_carries_battery_noise_evidence():
         "cc_distributed_10m": 9.4}
     assert parsed["throughput"]["battery_gate"]["gate_wait_s"] == 12.3
     assert "battery" not in parsed["throughput"]
+
+
+def test_battery_records_which_rep_was_picked():
+    # BENCH_DETAIL must say WHICH rep a row's time came from (rep 0 is
+    # the cold one), not only its external busy; the pick policy is the
+    # fastest clean rep (ext busy <= 2.5) for the battery, falling back
+    # to the fastest of all, and the fastest of all for kg_pipeline
+    reps = [{"sec": 9.0, "mean_ext_busy": 0.1},
+            {"sec": 4.0, "mean_ext_busy": 3.5},
+            {"sec": 6.0, "mean_ext_busy": 0.2}]
+    assert bench._picked(reps, clean_only=True) == {
+        "reps": reps, "picked_rep": 2, "picked_ext_busy": 0.2}
+    assert bench._picked(reps, clean_only=False)["picked_rep"] == 1
+    noisy = [{"sec": 5.0, "mean_ext_busy": 4.0},
+             {"sec": 3.0, "mean_ext_busy": 3.0}]
+    assert bench._picked(noisy, clean_only=True)["picked_rep"] == 1
+    # ties keep the earlier (cold) rep, as min over the reps always did
+    tie = [{"sec": 2.0, "mean_ext_busy": 0.0}] * 2
+    assert bench._picked(tie, clean_only=True)["picked_rep"] == 0

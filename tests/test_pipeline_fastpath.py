@@ -1,14 +1,15 @@
-"""The doc-aggregated relations fast path (extract_canonical_pair_counts
-+ build_relations_docagg) must be row-identical to the pre-aggregated
-shuffle path (build_relations) — including the subtle case where two
-surface pairs in the SAME document merge under canonicalization (ndocs
-must count that document once, like the shuffle path's countDistinct)."""
+"""The doc-aggregated fast paths (the one extract_docagg kernel, finished
+by build_relations_docagg, build_entities_docagg and
+extract_provenance_docagg) must be row-identical to their shuffle-path
+twins — including the subtle case where two surface pairs in the SAME
+document merge under canonicalization (ndocs must count that document
+once, like the shuffle path's countDistinct)."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from kgraphmemory_spark.operators.extraction import (
-    extract_canonical_pair_counts,
+    extract_docagg,
     extract_docs,
     extract_raw_triples,
 )
@@ -54,8 +55,7 @@ def test_fastpath_equals_shuffle_path(docs, canonical):
     shuffle_path = build_relations(
         extract_raw_triples(docs), canonical, broadcast_canonical=True)
     cmap = {r.entity_id: r.canonical_id for r in canonical.collect()}
-    fast = build_relations_docagg(
-        extract_canonical_pair_counts(docs, cmap))
+    fast = build_relations_docagg(extract_docagg(docs, cmap))
     assert _rows(fast) == _rows(shuffle_path)
     # the merge case concretely: doc a emits (agg,by) twice via two
     # different surface pairs and (by,agg) once — ndocs stays 1
@@ -70,8 +70,7 @@ def test_fastpath_drops_unmapped_tokens(docs, canonical, spark):
     # canonical map contributes no pairs on either path
     partial = canonical.where(F.col("entity_id") != "ent:scan")
     cmap = {r.entity_id: r.canonical_id for r in partial.collect()}
-    fast = build_relations_docagg(
-        extract_canonical_pair_counts(docs, cmap))
+    fast = build_relations_docagg(extract_docagg(docs, cmap))
     shuffle_path = build_relations(
         extract_raw_triples(docs), partial, broadcast_canonical=True)
     assert _rows(fast) == _rows(shuffle_path)
@@ -96,7 +95,7 @@ def test_pipeline_uses_fastpath_and_matches_oracle(spark):
 
 
 def test_provenance_fastpath_equals_shuffle_path(docs, canonical, spark):
-    """extract_provenance_docagg must be row-identical to
+    """The provenance rows of extract_docagg must be row-identical to
     build_provenance over the real linking machinery — including the
     bigram-dropped-by-canonical case (the fixture's canonical map lacks
     ent:group_by, so the 'group by' bigram mention must vanish from
@@ -116,7 +115,7 @@ def test_provenance_fastpath_equals_shuffle_path(docs, canonical, spark):
     lc = linked.join(canonical, "entity_id")
     slow = build_provenance(lc, extract_raw_triples(docs))
     cmap = {r.entity_id: r.canonical_id for r in canonical.collect()}
-    fast = extract_provenance_docagg(docs, cmap)
+    fast = extract_provenance_docagg(extract_docagg(docs, cmap))
     want = sorted(tuple(r) for r in slow.collect())
     got = sorted(tuple(r) for r in fast.collect())
     assert got == want
@@ -160,7 +159,7 @@ def test_provenance_fastpath_counts_bigrams(spark):
     linked = link_mentions(extract_mentions(docs), alias)
     lc = linked.join(canonical, "entity_id")
     slow = build_provenance(lc, extract_raw_triples(docs))
-    fast = extract_provenance_docagg(docs, cmap)
+    fast = extract_provenance_docagg(extract_docagg(docs, cmap))
     assert sorted(tuple(r) for r in fast.collect()) == \
         sorted(tuple(r) for r in slow.collect())
     rows = {r.url: (r.n_mentions, r.n_entities, r.n_triples)
@@ -185,14 +184,10 @@ def test_pipeline_provenance_matches_slow_path(spark):
 
 
 def test_entities_fastpath_equals_preagg_path(spark):
-    """extract_entity_counts_docagg + build_entities_docagg must be
-    row-identical to build_entities_preagg over the real linking
+    """extract_docagg + build_entities_docagg must be row-identical to build_entities_preagg over the real linking
     machinery — bigram flag, min-name across batches, counts summed."""
     from kgraphmemory_spark import datagen, semantics
-    from kgraphmemory_spark.operators.extraction import (
-        extract_entity_counts_docagg,
-        extract_mentions,
-    )
+    from kgraphmemory_spark.operators.extraction import extract_mentions
     from kgraphmemory_spark.operators.linking import (
         discovered_alias_from_docs,
         rank_candidates,
@@ -211,7 +206,7 @@ def test_entities_fastpath_equals_preagg_path(spark):
     canonical = spark.createDataFrame(
         sorted(cmap.items()), "entity_id string, canonical_id string")
     slow = build_entities_preagg(extract_mentions(docs), ranked, canonical)
-    fast = build_entities_docagg(extract_entity_counts_docagg(docs, cmap))
+    fast = build_entities_docagg(extract_docagg(docs, cmap))
     assert sorted(tuple(r) for r in fast.collect()) == \
         sorted(tuple(r) for r in slow.collect())
 
@@ -219,9 +214,6 @@ def test_entities_fastpath_equals_preagg_path(spark):
 def test_entities_fastpath_bigram_and_unmapped(spark):
     """A canonical id fed by both a unigram and a bigram keeps the
     phrase type and the min name; unmapped tokens are dropped."""
-    from kgraphmemory_spark.operators.extraction import (
-        extract_entity_counts_docagg,
-    )
     from kgraphmemory_spark.operators.materialize import (
         build_entities_docagg,
     )
@@ -236,24 +228,29 @@ def test_entities_fastpath_bigram_and_unmapped(spark):
             "ent:hash_join": "ent:hash"}
     got = {r.entity_id: (r.name, r.entity_type, r.mention_count)
            for r in build_entities_docagg(
-               extract_entity_counts_docagg(docs, cmap)).collect()}
+               extract_docagg(docs, cmap)).collect()}
     # ent:hash ← unigram "hash" ×3 + bigram "hash join" ×2 → phrase type,
     # min name "hash"; ent:join ← unigram "join" ×3
     assert got == {"ent:hash": ("hash", "urn:kg:Phrase", 5),
                    "ent:join": ("join", "urn:kg:Token", 3)}
 
 
-@pytest.mark.parametrize("seed", [3, 9])
-def test_fastpaths_random_corpus_differential(spark, seed):
+@pytest.mark.parametrize("seed,max_batch", [
+    pytest.param(3, None, id="3"), pytest.param(9, None, id="9"),
+    pytest.param(3, 7, id="3-batch7"), pytest.param(9, 7, id="9-batch7")])
+def test_fastpaths_random_corpus_differential(spark, seed, max_batch):
     """Randomized differential: all three doc-agg fast paths vs their
     shuffle-path twins over a corpus that mixes empty docs, single
     tokens, heavy repetition, unicode, synonym-merge tokens and every
-    phrase-table bigram."""
+    phrase-table bigram.  ``max_batch`` 7 splits every partition into
+    several Arrow batches, so the cross-batch combine (summed per-batch
+    ndocs, min name, or'd bigram flag) is exercised; None keeps the
+    session default, under which the corpus fits one batch per
+    partition."""
     import random
 
     from kgraphmemory_spark import semantics
     from kgraphmemory_spark.operators.extraction import (
-        extract_entity_counts_docagg,
         extract_mentions,
         extract_provenance_docagg,
     )
@@ -292,17 +289,23 @@ def test_fastpaths_random_corpus_differential(spark, seed):
     def rows_of(df):
         return sorted(tuple(r) for r in df.collect())
 
-    assert rows_of(build_relations_docagg(
-        extract_canonical_pair_counts(docs, cmap))) == \
-        rows_of(build_relations(extract_raw_triples(docs), canonical))
-    assert rows_of(build_entities_docagg(
-        extract_entity_counts_docagg(docs, cmap))) == \
-        rows_of(build_entities_preagg(
-            extract_mentions(docs), ranked, canonical))
-    lc = link_mentions(extract_mentions(docs), alias).join(
-        canonical, "entity_id")
-    assert rows_of(extract_provenance_docagg(docs, cmap)) == \
-        rows_of(build_provenance(lc, extract_raw_triples(docs)))
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    try:
+        if max_batch is not None:
+            spark.conf.set(key, str(max_batch))
+        docagg = extract_docagg(docs, cmap)
+        assert rows_of(build_relations_docagg(docagg)) == \
+            rows_of(build_relations(extract_raw_triples(docs), canonical))
+        assert rows_of(build_entities_docagg(docagg)) == \
+            rows_of(build_entities_preagg(
+                extract_mentions(docs), ranked, canonical))
+        lc = link_mentions(extract_mentions(docs), alias).join(
+            canonical, "entity_id")
+        assert rows_of(extract_provenance_docagg(docagg)) == \
+            rows_of(build_provenance(lc, extract_raw_triples(docs)))
+    finally:
+        spark.conf.set(key, saved)
 
 
 def test_docagg_bytes_cutover_falls_back(spark, monkeypatch):

@@ -52,6 +52,25 @@ def test_partial_resume_after_kill(spark, workdir):
     assert _rel_set(kg2) == want
 
 
+def test_resume_after_entities_builds_the_docagg_pass(spark, workdir):
+    """A kill after the entities commit: the doc-aggregate pass that
+    entities would have run is built by relations, the first stage that
+    still needs it, and relations and provenance come out identical."""
+    pages = datagen.generate_pages(spark, 30, seed=31)
+    kg1 = run_pipeline(spark, pages, workdir=workdir)
+    want = _rel_set(kg1)
+    want_prov = {tuple(r) for r in kg1.provenance.collect()}
+
+    for stage in ("relations", "frames", "slots", "triples", "provenance"):
+        shutil.rmtree(os.path.join(workdir, stage))
+
+    kg2 = run_pipeline(spark, pages, workdir=workdir)
+    assert "entities" in kg2.stages_resumed
+    assert "relations" not in kg2.stages_resumed
+    assert _rel_set(kg2) == want
+    assert {tuple(r) for r in kg2.provenance.collect()} == want_prov
+
+
 def test_uncommitted_stage_not_trusted(spark, workdir):
     """Data dir without a manifest (crash mid-write) is rebuilt."""
     pages = datagen.generate_pages(spark, 10, seed=7)

@@ -75,6 +75,7 @@ def main() -> None:
         generate_pages_distributed,
         pages_from_documents,
     )
+    from kgraphmemory_spark.io.snapshots import SnapshotCatalog
     from kgraphmemory_spark.pipeline import run_pipeline
 
     if args.synthetic_pages:
@@ -89,12 +90,15 @@ def main() -> None:
     t0 = time.time()
     kg = run_pipeline(spark, pages, workdir=args.workdir,
                       link_strategy=args.link_strategy)
+    # row counts as committed: every stage's manifest records its own
+    cat = SnapshotCatalog(args.workdir)
     counts = {
-        "docs": kg.docs_clean.count(),
-        "raw_triples": kg.raw_triples.count(),
-        "entities": kg.entities.count(),
-        "relations": kg.relations.count(),
-        "triples_long": kg.triples.count(),
+        key: cat.manifest(stage)["rows"]
+        for key, stage in (("docs", "docs_clean"),
+                           ("raw_triples", "raw_triples"),
+                           ("entities", "entities"),
+                           ("relations", "relations"),
+                           ("triples_long", "triples"))
     }
     if args.graph_tables_out:
         from kgraphmemory_spark.io.graph_tables import write_graph_tables

@@ -1,10 +1,12 @@
 """Snapshot catalog — Iceberg-shaped checkpointing with a parquet+manifest
 fallback (the sandbox has no Iceberg jars; the interface is the contract).
 
-Every pipeline stage commits atomically:
-1. write data parquet under   <root>/<stage>/data/
-2. write lineage parquet under <root>/<stage>/lineage/   (per-partition
-   rows: url-bucket, counts, optional link-score histogram json)
+Every pipeline stage commits atomically, executing its plan once:
+1. write data parquet under   <root>/<stage>/data/ — the only run of the
+   stage plan; an ``Observation`` on that write counts its rows;
+2. aggregate lineage over the committed snapshot read back from disk and
+   write it under <root>/<stage>/lineage/ (per-partition rows: url-bucket,
+   counts, optional link-score histogram json), counted the same way;
 3. atomically rename a manifest json into place — the commit point.
 
 Resume: a stage whose manifest exists is read back, not recomputed — a
@@ -33,7 +35,7 @@ import re
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST = "_MANIFEST.json"
@@ -58,6 +60,13 @@ def _iceberg_catalog(spark: SparkSession) -> str | None:
     if not name:
         return None
     return name if iceberg_available(spark) else None
+
+
+def _observe_count(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` counting its rows as a side effect of the action that runs
+    it: ``obs.get["n"]`` after that action, with no extra job."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
 
 
 class SnapshotCatalog:
@@ -97,39 +106,41 @@ class SnapshotCatalog:
         return spark.read.parquet(os.path.join(self._dir(stage), "lineage"))
 
     def commit(self, stage: str, df: DataFrame,
-               lineage: DataFrame | None = None,
-               partition_by: list[str] | None = None) -> DataFrame:
+               lineage_of=None) -> DataFrame:
         """Write + manifest-commit a stage; returns the re-read DataFrame
         (reading back pins the stage output — downstream plans scan parquet
-        instead of recomputing the whole upstream lineage)."""
+        instead of recomputing the whole upstream lineage).
+
+        ``df``'s plan runs exactly once, in the data write; the manifest's
+        ``rows`` is observed on that write.  ``lineage_of(out)``, when
+        given, aggregates lineage over the read-back snapshot — the rows
+        actually on disk — and its row count is observed on its write;
+        it may return None for a stage without lineage."""
         d = self._dir(stage)
         if os.path.exists(d):
             shutil.rmtree(d)
         os.makedirs(d, exist_ok=True)
         spark = df.sparkSession
         catalog = _iceberg_catalog(spark)
+        df, rows = _observe_count(df)
         if catalog is not None:
             table = self._table(catalog, stage)
             spark.sql(f"CREATE NAMESPACE IF NOT EXISTS "
                       f"{catalog}.{self.namespace}")
-            w = df.writeTo(table)
-            if partition_by:
-                w = w.partitionedBy(*[F.col(c) for c in partition_by])
-            w.createOrReplace()          # Iceberg metadata swap = commit
+            df.writeTo(table).createOrReplace()  # Iceberg metadata swap
             out = spark.table(table)
         else:
-            w = df.write.mode("overwrite")
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.parquet(os.path.join(d, "data"))
+            df.write.mode("overwrite").parquet(os.path.join(d, "data"))
             out = spark.read.parquet(os.path.join(d, "data"))
+        lineage = lineage_of(out) if lineage_of is not None else None
         n_lineage = 0
         if lineage is not None:
+            lineage, lin_rows = _observe_count(lineage)
             lineage.write.mode("overwrite").parquet(os.path.join(d, "lineage"))
-            n_lineage = lineage.count()
+            n_lineage = lin_rows.get["n"]
         man = {
             "stage": stage,
-            "rows": out.count(),
+            "rows": rows.get["n"],
             "lineage_rows": n_lineage,
             "schema": out.schema.json(),
             "committed_at_epoch": int(time.time()),
@@ -145,16 +156,13 @@ class SnapshotCatalog:
         return out
 
     def stage(self, spark: SparkSession, name: str, build,
-              lineage_of=None, partition_by: list[str] | None = None) -> DataFrame:
+              lineage_of=None) -> DataFrame:
         """Resume-or-build: committed stages load from parquet; otherwise
-        `build()` runs and the result is committed (with optional lineage
-        derived by `lineage_of(df)`)."""
+        `build()` runs and the result is committed, with optional lineage
+        derived by `lineage_of` from the committed snapshot (``commit``)."""
         if self.committed(name):
             return self.read(spark, name)
-        df = build()
-        lineage = lineage_of(df) if lineage_of is not None else None
-        return self.commit(name, df, lineage=lineage,
-                           partition_by=partition_by)
+        return self.commit(name, build(), lineage_of=lineage_of)
 
 
 def url_bucket(col: str = "url", buckets: int = 64):

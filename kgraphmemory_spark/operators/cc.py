@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import driver_frame
+
 
 def _checksum(e: DataFrame) -> tuple[int, int]:
     row = e.agg(
@@ -53,7 +55,7 @@ def _driver_union_find(e: DataFrame, all_nodes: DataFrame) -> DataFrame:
             parent[hi] = lo
     mapping = [(n, find(n)) for n in parent]
     spark = e.sparkSession
-    comp = spark.createDataFrame(mapping, "node string, component string")
+    comp = driver_frame(spark, mapping, "node string, component string")
     return (
         all_nodes.join(F.broadcast(comp), "node", "left")
         .select("node", F.coalesce("component", "node").alias("component"))
@@ -291,14 +293,14 @@ def canonical_mapping_local(spark, entity_ids: list[str],
     """Driver fast path for ``canonical_mapping`` when the caller ALREADY
     knows the entity universe is tiny (the pipeline counts the ranked
     alias table anyway, so no extra job is spent learning it): one
-    driver-side union-find over the live pairs, one ``createDataFrame``
-    back.  The DataFrame path spends ~6 small Spark jobs (checkpoints,
-    size agg, edge collect, mapping join) whose fixed scheduling latency
-    lands in the scaling run's SERIAL floor — at a bounded vocabulary all
-    of them compute over a few dozen rows.  Identical output to
-    ``canonical_mapping`` (lexicographic-min labels, only pairs with both
-    endpoints live fire, isolated ids map to themselves) — asserted in
-    tests/test_cc.py."""
+    driver-side union-find over the live pairs, one Arrow table back
+    (``session.driver_frame``).  The DataFrame path spends ~6 small Spark
+    jobs (checkpoints, size agg, edge collect, mapping join) whose fixed
+    scheduling latency lands in the scaling run's SERIAL floor — at a
+    bounded vocabulary all of them compute over a few dozen rows.
+    Identical output to ``canonical_mapping`` (lexicographic-min labels,
+    only pairs with both endpoints live fire, isolated ids map to
+    themselves) — asserted in tests/test_cc.py."""
     live = set(entity_ids)
     parent = {e: e for e in live}
 
@@ -318,8 +320,7 @@ def canonical_mapping_local(spark, entity_ids: list[str],
                 parent[hi] = lo
     # union-by-min keeps every root the lexicographic min of its class
     rows = [(e, find(e)) for e in sorted(live)]
-    return spark.createDataFrame(rows,
-                                 "entity_id string, canonical_id string")
+    return driver_frame(spark, rows, "entity_id string, canonical_id string")
 
 
 def canonical_mapping(entities: DataFrame, same_as: DataFrame,

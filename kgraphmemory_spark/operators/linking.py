@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..semantics import BIGRAM_ALIASES
+from ..session import driver_frame
 
 DEFAULT_SALT = 16
 
@@ -47,6 +48,16 @@ def resolve_strategy(alias_rows: int,
     return "broadcast" if alias_rows <= broadcast_max_rows else "salted"
 
 
+def _bigram_aliases(spark) -> DataFrame:
+    """The fixed phrase table as alias rows (surface, kind, entity_id,
+    prior) — the bigram arm of every discovered alias table."""
+    return driver_frame(
+        spark,
+        [(k, "bigram", v, 1.0) for k, v in sorted(BIGRAM_ALIASES.items())],
+        "surface string, kind string, entity_id string, prior double",
+    )
+
+
 def discovered_alias_table(mentions: DataFrame) -> DataFrame:
     """Open-vocabulary alias table: every distinct unigram surface maps to
     the deterministic entity id `ent:<surface>`; bigram surfaces map per
@@ -61,12 +72,7 @@ def discovered_alias_table(mentions: DataFrame) -> DataFrame:
             F.lit(1.0).alias("prior"),
         )
     )
-    spark = mentions.sparkSession
-    big = spark.createDataFrame(
-        [(k, "bigram", v, 1.0) for k, v in sorted(BIGRAM_ALIASES.items())],
-        "surface string, kind string, entity_id string, prior double",
-    )
-    return uni.unionByName(big)
+    return uni.unionByName(_bigram_aliases(mentions.sparkSession))
 
 
 def discovered_alias_from_docs(docs: DataFrame) -> DataFrame:
@@ -96,12 +102,7 @@ def discovered_alias_from_docs(docs: DataFrame) -> DataFrame:
             F.lit(1.0).alias("prior"),
         )
     )
-    spark = docs.sparkSession
-    big = spark.createDataFrame(
-        [(k, "bigram", v, 1.0) for k, v in sorted(BIGRAM_ALIASES.items())],
-        "surface string, kind string, entity_id string, prior double",
-    )
-    return uni.unionByName(big)
+    return uni.unionByName(_bigram_aliases(docs.sparkSession))
 
 
 def rank_candidates(alias_table: DataFrame) -> DataFrame:

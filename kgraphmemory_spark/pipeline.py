@@ -63,6 +63,7 @@ from .operators.materialize import (
 RELATIONS_DOCAGG_MAX_VOCAB = 1_000_000
 RELATIONS_DOCAGG_MAX_BYTES = 256 << 20
 from .semantics import SYNONYMS
+from .session import driver_frame
 
 
 @dataclass
@@ -89,8 +90,8 @@ class KGTables:
 
 def same_as_edges(spark: SparkSession) -> DataFrame:
     """The canonicalization config (semantics.SYNONYMS) as an edge DF."""
-    return spark.createDataFrame(
-        [("ent:" + a, "ent:" + b) for a, b in SYNONYMS],
+    return driver_frame(
+        spark, [("ent:" + a, "ent:" + b) for a, b in SYNONYMS],
         "src string, dst string",
     )
 
@@ -115,7 +116,9 @@ def _stager(spark: SparkSession, cat: SnapshotCatalog | None,
         def _lineage(df: DataFrame) -> DataFrame | None:
             # url-keyed stages carry per-bucket lineage; global stages
             # (canonical map, entity/relation rollups) are audited by the
-            # manifest row counts instead.
+            # manifest row counts instead.  ``df`` is the committed
+            # snapshot read back, so lineage audits the rows on disk and
+            # never re-runs the stage plan.
             if "url" not in df.columns:
                 return None
             return lineage_by_url(df, name, extra_aggs=lineage_extra)

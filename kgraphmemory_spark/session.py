@@ -10,7 +10,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -63,3 +64,18 @@ def stop_spark() -> None:
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
+
+
+def driver_frame(spark: SparkSession, rows: list[tuple],
+                 schema: str) -> DataFrame:
+    """Rows held on the driver (tuples in ``schema`` order, DDL string) as
+    a DataFrame built in the JVM: they cross as one Arrow table, where a
+    Python list would go through ``parallelize`` and the Python workers."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = DataType.fromDDL(schema)
+    table = pa.table({f.name: [r[i] for r in rows]
+                      for i, f in enumerate(struct.fields)},
+                     schema=to_arrow_schema(struct))
+    return spark.createDataFrame(table, struct)

@@ -95,6 +95,11 @@ def test_canonical_mapping_local_equivalence(spark):
         local = {r.entity_id: r.canonical_id
                  for r in canonical_mapping_local(spark, ids, pairs).collect()}
         assert local == df_path, f"trial {trial}"
+    # an empty entity set: no rows, same schema, pairs never fire
+    empty = canonical_mapping_local(spark, [], [("ent:a", "ent:b")])
+    assert empty.collect() == []
+    assert empty.schema.simpleString() == \
+        "struct<entity_id:string,canonical_id:string>"
 
 
 def test_distributed_path_at_representative_shape(spark):

@@ -1,14 +1,14 @@
 """Checkpoint/resume: a killed run resumes from the last committed snapshot
 without reprocessing; lineage rows exist per stage (north rule)."""
 
-import json
 import os
 import shutil
 
 import pytest
+from pyspark.sql import functions as F
 
 from kgraphmemory_spark import datagen
-from kgraphmemory_spark.io.snapshots import SnapshotCatalog
+from kgraphmemory_spark.io.snapshots import SnapshotCatalog, lineage_by_url
 from kgraphmemory_spark.pipeline import run_pipeline
 
 
@@ -84,18 +84,62 @@ def test_uncommitted_stage_not_trusted(spark, workdir):
     assert cat.committed("mentions")  # recommitted
 
 
-def test_lineage_rows_written(spark, workdir):
-    pages = datagen.generate_pages(spark, 25, seed=13)
-    run_pipeline(spark, pages, workdir=workdir)
-    cat = SnapshotCatalog(workdir)
-    lin = cat.read_lineage(spark, "linked")
+@pytest.fixture(scope="module")
+def built_catalog(spark, tmp_path_factory):
+    workdir = str(tmp_path_factory.mktemp("lineage") / "kg_snapshots")
+    run_pipeline(spark, datagen.generate_pages(spark, 25, seed=13),
+                 workdir=workdir)
+    return SnapshotCatalog(workdir)
+
+
+@pytest.mark.parametrize("stage", ["docs_clean", "mentions", "raw_triples",
+                                   "linked", "provenance"])
+def test_lineage_rows_written(spark, built_catalog, stage):
+    """Every url-keyed stage: the manifest's row counts agree with the
+    committed data and lineage read back, and lineage sums to the data."""
+    cat = built_catalog
+    man = cat.manifest(stage)
+    lin = cat.read_lineage(spark, stage)
     rows = lin.collect()
     assert {c for c in lin.columns} >= {"bucket", "out_count", "stage"}
-    assert sum(r.out_count for r in rows) == cat.manifest("linked")["rows"]
-    # link-score histogram metric present on the linked stage
-    assert "score_histogram" in lin.columns
-    man = json.load(open(os.path.join(workdir, "linked", "_MANIFEST.json")))
     assert man["rows"] > 0 and man["schema"]
+    assert man["rows"] == cat.read(spark, stage).count() \
+        == sum(r.out_count for r in rows)
+    assert man["lineage_rows"] == len(rows)
+    if stage == "linked":
+        # link-score histogram metric present on the linked stage
+        assert "score_histogram" in lin.columns
+
+
+def test_commit_runs_the_stage_plan_once(spark, tmp_path):
+    """The data write is the only execution of a stage's plan: row counts
+    are observed on it and lineage reads the committed snapshot, so a
+    Python UDF in the plan runs once per row."""
+    calls = spark.sparkContext.accumulator(0)
+
+    def url_of(i):
+        calls.add(1)
+        return f"https://example.org/{i}"
+
+    url = F.udf(url_of, "string")
+    cat = SnapshotCatalog(str(tmp_path / "snap"))
+    cat.stage(spark, "s1",
+              lambda: spark.range(40).select(url("id").alias("url")),
+              lineage_of=lambda df: lineage_by_url(df, "s1"))
+    assert calls.value == 40 == cat.manifest("s1")["rows"]
+
+
+@pytest.mark.parametrize("with_lineage", [True, False])
+def test_empty_stage_commits_zero_rows(spark, tmp_path, with_lineage):
+    """Observed counts of an empty write, and of its empty lineage, are 0."""
+    cat = SnapshotCatalog(str(tmp_path / "snap"))
+    lineage_of = (lambda df: lineage_by_url(df, "s1")) if with_lineage \
+        else None
+    empty = spark.range(0).selectExpr("CAST(id AS string) AS url")
+    out = cat.stage(spark, "s1", lambda: empty, lineage_of=lineage_of)
+    man = cat.manifest("s1")
+    assert (man["rows"], man["lineage_rows"]) == (0, 0)
+    assert out.count() == 0
 
 
 def test_snapshot_backend_recorded(spark, tmp_path):

@@ -9,9 +9,10 @@ parquet-path analog of Iceberg's `bucket(N, key)` partition transform
 metastore).  Point lookups and co-located joins then prune to one
 directory per key:
 
-- `read_graph_table(..., key="ent:x")` computes the bucket on the driver
-  and pushes `id_bucket = b AND key = 'ent:x'` — the scan touches 1/N of
-  the data (PartitionFilters prune the directories);
+- `read_graph_table(..., key="ent:x")` compares `id_bucket` with the same
+  bucket expression over the literal key, which constant-folds to
+  `id_bucket = b AND key = 'ent:x'` — the scan touches 1/N of the data
+  (PartitionFilters prune the directories);
 - two tables written with the same (key expr, buckets) co-locate their
   keys bucket-for-bucket: a reader can join them bucket-wise without a
   full shuffle (join on (id_bucket, key)).
@@ -24,10 +25,10 @@ one directory (no small-files explosion).
 
 from __future__ import annotations
 
-import ctypes
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .snapshots import key_bucket
 
 # key column per graph table (entity-keyed tables use the canonical id;
 # frames/slots key by their frame so a frame's slots co-locate)
@@ -40,17 +41,13 @@ GRAPH_TABLE_KEYS = {
 }
 
 
-def _bucket_col(key: str, buckets: int):
-    return F.pmod(F.xxhash64(F.col(key).cast("string")), F.lit(buckets)).cast("int")
-
-
 def write_graph_tables(kg, root: str, buckets: int = 64) -> dict[str, int]:
     """Write every graph table bucket-partitioned by its entity key.
     Returns rows-per-table (the write-side audit metric)."""
     counts: dict[str, int] = {}
     for table, key in GRAPH_TABLE_KEYS.items():
         df: DataFrame = getattr(kg, table)
-        out = df.withColumn("id_bucket", _bucket_col(key, buckets))
+        out = df.withColumn("id_bucket", key_bucket(key, buckets))
         # one shuffle keyed by the partition dir → each task owns whole
         # buckets, so files-per-bucket stays bounded
         (out.repartition(min(buckets, 64), "id_bucket")
@@ -63,68 +60,6 @@ def write_graph_tables(kg, root: str, buckets: int = 64) -> dict[str, int]:
     return counts
 
 
-def _xxhash64_long(data: bytes, seed: int = 42) -> int:
-    """Driver-side twin of Spark's xxhash64 (XXH64, seed 42) so the
-    reader can compute a key's bucket without a Spark job."""
-    # xxhash64 of a string column hashes its UTF-8 bytes
-    PRIME1 = 0x9E3779B185EBCA87
-    PRIME2 = 0xC2B2AE3D27D4EB4F
-    PRIME3 = 0x165667B19E3779F9
-    PRIME4 = 0x85EBCA77C2B2AE63
-    PRIME5 = 0x27D4EB2F165667C5
-    mask = 0xFFFFFFFFFFFFFFFF
-
-    def rotl(x, r):
-        return ((x << r) | (x >> (64 - r))) & mask
-
-    n = len(data)
-    idx = 0
-    if n >= 32:
-        v1 = (seed + PRIME1 + PRIME2) & mask
-        v2 = (seed + PRIME2) & mask
-        v3 = seed & mask
-        v4 = (seed - PRIME1) & mask
-        while idx <= n - 32:
-            def lane(off):
-                return int.from_bytes(data[idx + off:idx + off + 8], "little")
-            v1 = (rotl((v1 + lane(0) * PRIME2) & mask, 31) * PRIME1) & mask
-            v2 = (rotl((v2 + lane(8) * PRIME2) & mask, 31) * PRIME1) & mask
-            v3 = (rotl((v3 + lane(16) * PRIME2) & mask, 31) * PRIME1) & mask
-            v4 = (rotl((v4 + lane(24) * PRIME2) & mask, 31) * PRIME1) & mask
-            idx += 32
-        h = (rotl(v1, 1) + rotl(v2, 7) + rotl(v3, 12) + rotl(v4, 18)) & mask
-        for v in (v1, v2, v3, v4):
-            h ^= (rotl((v * PRIME2) & mask, 31) * PRIME1) & mask
-            h = ((h * PRIME1) + PRIME4) & mask
-    else:
-        h = (seed + PRIME5) & mask
-    h = (h + n) & mask
-    while idx <= n - 8:
-        k1 = int.from_bytes(data[idx:idx + 8], "little")
-        k1 = (rotl((k1 * PRIME2) & mask, 31) * PRIME1) & mask
-        h = ((rotl(h ^ k1, 27) * PRIME1) + PRIME4) & mask
-        idx += 8
-    if idx <= n - 4:
-        k1 = int.from_bytes(data[idx:idx + 4], "little")
-        h = ((rotl(h ^ ((k1 * PRIME1) & mask), 23) * PRIME2) + PRIME3) & mask
-        idx += 4
-    while idx < n:
-        h = (rotl(h ^ ((data[idx] * PRIME5) & mask), 11) * PRIME1) & mask
-        idx += 1
-    h ^= h >> 33
-    h = (h * PRIME2) & mask
-    h ^= h >> 29
-    h = (h * PRIME3) & mask
-    h ^= h >> 32
-    return ctypes.c_int64(h).value
-
-
-def bucket_of(key_value: str, buckets: int = 64) -> int:
-    """Bucket of a key value — pmod(xxhash64(key), buckets), matching the
-    write side exactly (verified against Spark in tests)."""
-    return _xxhash64_long(str(key_value).encode("utf-8")) % buckets
-
-
 def read_graph_table(spark: SparkSession, root: str, table: str,
                      key: str | None = None,
                      buckets: int = 64) -> DataFrame:
@@ -133,6 +68,6 @@ def read_graph_table(spark: SparkSession, root: str, table: str,
     df = spark.read.parquet(f"{root}/{table}")
     if key is None:
         return df
-    b = bucket_of(key, buckets)
     key_col = GRAPH_TABLE_KEYS[table]
-    return df.where((F.col("id_bucket") == b) & (F.col(key_col) == key))
+    return df.where((F.col("id_bucket") == key_bucket(F.lit(key), buckets))
+                    & (F.col(key_col) == key))

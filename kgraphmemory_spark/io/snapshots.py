@@ -35,7 +35,7 @@ import re
 import shutil
 import time
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST = "_MANIFEST.json"
@@ -165,19 +165,23 @@ class SnapshotCatalog:
         return self.commit(name, build(), lineage_of=lineage_of)
 
 
-def url_bucket(col: str = "url", buckets: int = 64):
-    """Stable url-range bucketing for lineage keys (and partition pruning)."""
-    return F.pmod(F.xxhash64(F.col(col)), F.lit(buckets)).cast("int")
+def key_bucket(key: str | Column, buckets: int = 64) -> Column:
+    """``pmod(xxhash64(key), buckets)`` — the one stable key bucketing:
+    lineage url buckets, graph-table ``id_bucket`` partitions, and a
+    point lookup's bucket (over ``F.lit(value)``, which constant-folds
+    into a partition filter).  ``key`` is a column name or a Column."""
+    c = F.col(key) if isinstance(key, str) else key
+    return F.pmod(F.xxhash64(c.cast("string")), F.lit(buckets)).cast("int")
 
 
-def lineage_by_url(df: DataFrame, stage: str, buckets: int = 64,
+def lineage_by_url(df: DataFrame, stage: str,
                    extra_aggs: dict | None = None) -> DataFrame:
     """Per-url-bucket lineage rows: (stage, bucket, out_count [, extras])."""
     aggs = [F.count(F.lit(1)).alias("out_count")]
     for name, expr in (extra_aggs or {}).items():
         aggs.append(expr.alias(name))
     return (
-        df.withColumn("bucket", url_bucket())
+        df.withColumn("bucket", key_bucket("url"))
         .groupBy("bucket")
         .agg(*aggs)
         .withColumn("stage", F.lit(stage))

@@ -34,9 +34,10 @@ def _checksum(e: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
-def _driver_union_find(e: DataFrame, all_nodes: DataFrame) -> DataFrame:
-    """Small-graph path: collect the (already symmetric, distinct) edges,
-    union-find on the driver, broadcast the mapping back as a DataFrame."""
+def _union_find(pairs) -> dict[str, str]:
+    """Driver union-find over ``(a, b)`` pairs → {node: root} for every
+    node of a pair.  Union-by-min keeps every root the lexicographic min
+    of its class (the ``semantics.canonical_map`` label)."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -48,14 +49,20 @@ def _driver_union_find(e: DataFrame, all_nodes: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for r in e.collect():
-        ra, rb = find(r["u"]), find(r["v"])
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
         if ra != rb:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
-    mapping = [(n, find(n)) for n in parent]
-    spark = e.sparkSession
-    comp = driver_frame(spark, mapping, "node string, component string")
+    return {n: find(n) for n in parent}
+
+
+def _driver_union_find(e: DataFrame, all_nodes: DataFrame) -> DataFrame:
+    """Small-graph path: collect the (already symmetric, distinct) edges,
+    union-find on the driver, broadcast the mapping back as a DataFrame."""
+    roots = _union_find((r["u"], r["v"]) for r in e.collect())
+    comp = driver_frame(e.sparkSession, list(roots.items()),
+                        "node string, component string")
     return (
         all_nodes.join(F.broadcast(comp), "node", "left")
         .select("node", F.coalesce("component", "node").alias("component"))
@@ -302,24 +309,9 @@ def canonical_mapping_local(spark, entity_ids: list[str],
     only pairs with both endpoints live fire, isolated ids map to
     themselves) — asserted in tests/test_cc.py."""
     live = set(entity_ids)
-    parent = {e: e for e in live}
-
-    def find(x: str) -> str:
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    for a, b in same_as_pairs:
-        if a in live and b in live:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-    # union-by-min keeps every root the lexicographic min of its class
-    rows = [(e, find(e)) for e in sorted(live)]
+    roots = _union_find((a, b) for a, b in same_as_pairs
+                        if a in live and b in live)
+    rows = [(e, roots.get(e, e)) for e in sorted(live)]
     return driver_frame(spark, rows, "entity_id string, canonical_id string")
 
 

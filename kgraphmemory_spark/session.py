@@ -60,12 +60,6 @@ def get_spark(
     return spark
 
 
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
-
-
 def driver_frame(spark: SparkSession, rows: list[tuple],
                  schema: str) -> DataFrame:
     """Rows held on the driver (tuples in ``schema`` order, DDL string) as

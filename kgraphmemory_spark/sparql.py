@@ -143,6 +143,8 @@ from types import SimpleNamespace
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .session import driver_frame
+
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 XSD = "http://www.w3.org/2001/XMLSchema#"
 
@@ -1290,53 +1292,35 @@ class SparqlEngine:
         self.closure_stats: dict = {}
 
     # -- public forms ---------------------------------------------------
+    def _parse(self, text: str, form: str, method: str) -> dict:
+        """Parse a query of ``form`` for the public ``method`` and reset
+        the per-query state (NOW() instant, introspected variables)."""
+        q = _Parser(text).parse()
+        if q["form"] != form:
+            raise ValueError(f"{method}() got a {q['form']} query")
+        self._now = None
+        self._meta = _introspected_vars(q)
+        return q
+
     def query(self, text: str) -> DataFrame:
         """SELECT → DataFrame whose columns are the projected variables
         (reference: sparql_query returns dict rows, kgraph.py:185-198)."""
-        q = _Parser(text).parse()
-        if q["form"] != "select":
-            raise ValueError(f"query() got a {q['form']} query")
-        self._now = None
-        self._meta = _introspected_vars(q)
-        return self._select(q)
+        return self._select(self._parse(text, "select", "query"))
 
     def ask(self, text: str) -> bool:
         """ASK → bool (kgraph.py:212-222)."""
-        q = _Parser(text).parse()
-        if q["form"] != "ask":
-            raise ValueError(f"ask() got a {q['form']} query")
-        self._now = None
-        self._meta = _introspected_vars(q)
+        q = self._parse(text, "ask", "ask")
         df, _ = self._group(q["where"])
         return df.limit(1).count() > 0
 
     def construct(self, text: str) -> DataFrame:
         """CONSTRUCT → (subject, predicate, object) triples
         (kgraph.py:200-210); deduplicated — a graph is a set."""
-        q = _Parser(text).parse()
-        if q["form"] != "construct":
-            raise ValueError(f"construct() got a {q['form']} query")
-        self._now = None
-        self._meta = _introspected_vars(q)
+        q = self._parse(text, "construct", "construct")
         df, bound = self._group(q["where"])
         df = self._modifiers(df, q, bound)
-        parts = []
-        for s, p, o, _ in q["template"]:
-            def col(term):
-                if term[0] == "var":
-                    if term[1] not in bound:
-                        raise ValueError(f"unbound template var ?{term[1]}")
-                    return F.col(term[1])
-                if term[0] == "iri":
-                    return F.lit(term[1])
-                return F.lit(term[1])            # literal lexical form
-            parts.append(df.select(col(s).alias("subject"),
-                                   col(p).alias("predicate"),
-                                   col(o).alias("object")))
-        out = parts[0]
-        for p_ in parts[1:]:
-            out = out.unionByName(p_)
-        return out.distinct()
+        return (self._instantiate(df, bound, q["template"])
+                .select("subject", "predicate", "object").distinct())
 
     def describe(self, text: str) -> DataFrame:
         """DESCRIBE → every stored triple (all columns) whose subject is a
@@ -1351,11 +1335,7 @@ class SparqlEngine:
         bound the resource set, not the emitted triples).  The semi-join
         against the store is left to AQE: a handful of solutions
         broadcasts, a million-solution describe stays a shuffle join."""
-        q = _Parser(text).parse()
-        if q["form"] != "describe":
-            raise ValueError(f"describe() got a {q['form']} query")
-        self._now = None
-        self._meta = _introspected_vars(q)
+        q = self._parse(text, "describe", "describe")
         parts = []
         if q["where"] is not None:
             df, bound = self._group(q["where"])
@@ -1367,9 +1347,8 @@ class SparqlEngine:
                                      "bound by the WHERE group")
                 parts.append(df.select(F.col(v).alias("r")))
         if q["iris"]:
-            spark = self.triples.sparkSession
-            parts.append(spark.createDataFrame(
-                [(i,) for i in q["iris"]], "r string"))
+            parts.append(driver_frame(self.triples.sparkSession,
+                                      [(i,) for i in q["iris"]], "r string"))
         res = parts[0]
         for p in parts[1:]:
             res = res.unionByName(p)
@@ -1472,16 +1451,16 @@ class SparqlEngine:
         return out.unionByName(moved)
 
     def _quad_df(self, quads: list) -> DataFrame:
-        spark = self.triples.sparkSession
         rows = []
         for s, p, o, g in quads:
             dt = o[2] if o[0] == "lit" else None
             lang = o[3] if o[0] == "lit" else None
             rows.append((s[1], p[1], o[1], dt, lang,
                          g[1] if g is not None else None))
-        df = spark.createDataFrame(
-            rows, "subject string, predicate string, object string, "
-                  "obj_datatype string, obj_lang string, graph string")
+        df = driver_frame(
+            self.triples.sparkSession, rows,
+            "subject string, predicate string, object string, "
+            "obj_datatype string, obj_lang string, graph string")
         keep = [c for c in df.columns if c in self.cols]
         return df.select(*keep)
 
@@ -1552,88 +1531,95 @@ class SparqlEngine:
                            | (F.col("__t.graph") == F.col("__d.graph")))
         return t.join(d, cond, "left_anti")
 
-    # -- group graph pattern --------------------------------------------
     # -- property-path evaluation ----------------------------------------
+    # One algebra for every graph scope.  Under GRAPH ?var each relation
+    # carries the graph label as key column 'g' (keys=["g"]): pairs
+    # compose / close WITHIN one named graph, the whole per-graph family
+    # evaluated in ONE DataFrame (no driver-side loop over graphs).
+    # GRAPH ?var ranges over named graphs only (SPARQL 1.1 §13.3), so 'g'
+    # is never NULL — which also keeps the closure's anti-join exact.
 
-    def _graph_triples(self, g) -> DataFrame:
+    def _path_triples(self, g) -> DataFrame:
+        """The triples a path walks: the store, restricted by a GRAPH
+        <iri> or FROM dataset term; under GRAPH ?var the named-graph rows
+        with the graph as key column 'g'."""
         df = self.triples
-        if g is not None:
-            if "graph" not in self.cols:
-                raise ValueError("GRAPH pattern over a table with no "
-                                 "graph column")
-            if g[0] == "in":                     # FROM dataset restriction
-                vals = list(g[1])
-                df = df.where(F.col("graph").isin(vals) if vals
-                              else F.lit(False))
-            else:
-                df = df.where(F.col("graph") == g[1])
-        return df
+        if g is None:
+            return df
+        if "graph" not in self.cols:
+            raise ValueError("GRAPH pattern over a table with no "
+                             "graph column")
+        if g[0] in ("var", "varin"):
+            return (df.where(F.col("graph").isNotNull())
+                    .withColumnRenamed("graph", "g"))
+        if g[0] == "in":                         # FROM dataset restriction
+            vals = list(g[1])
+            return df.where(F.col("graph").isin(vals) if vals
+                            else F.lit(False))
+        return df.where(F.col("graph") == g[1])
 
-    def _graph_nodes(self, g) -> DataFrame:
-        """All terms of the (graph-restricted) store — the zero-length
-        path domain (SPARQL 1.1 §9.3 ZeroOrMorePath/ZeroOrOnePath)."""
-        t = self._graph_triples(g)
-        return (t.select(F.explode(F.array("subject", "object")).alias("n"))
-                .where(F.col("n").isNotNull()).distinct())
+    def _path_pairs(self, p, t: DataFrame, keys: list[str]) -> DataFrame:
+        """Compile a path AST node over the triples ``t`` to a
+        DataFrame(*keys, 's', 'o') of connected term pairs; pairs only
+        compose within equal ``keys``.  seq = pairwise join, alt = union
+        (bag semantics, matching plain-BGP multiplicities), inv = swap;
+        +/*/? return the DISTINCT pair set, as the spec defines them via
+        ALP, and their zero-length pairs are every term of ``t`` (SPARQL
+        1.1 §9.3 ZeroOrMorePath/ZeroOrOnePath)."""
+        def pairs(df, s, o):
+            return df.select(*keys, F.col(s).alias("s"), F.col(o).alias("o"))
 
-    def _identity_pairs(self, g) -> DataFrame:
-        return self._graph_nodes(g).select(F.col("n").alias("s"),
-                                           F.col("n").alias("o"))
+        def identity():
+            return pairs(t.select(*keys, F.explode(F.array(
+                "subject", "object")).alias("n"))
+                .where(F.col("n").isNotNull()).distinct(), "n", "n")
 
-    def _path_pairs(self, p, g) -> DataFrame:
-        """Compile a path AST node to a DataFrame('s', 'o') of connected
-        term pairs.  seq = pairwise join, alt = union (bag semantics,
-        matching plain-BGP multiplicities), inv = swap; +/*/? return the
-        DISTINCT pair set, as the spec defines them via ALP."""
         kind = p[0]
         if kind == "iri":
-            return (self._graph_triples(g)
-                    .where(F.col("predicate") == p[1])
-                    .select(F.col("subject").alias("s"),
-                            F.col("object").alias("o")))
+            return pairs(t.where(F.col("predicate") == p[1]),
+                         "subject", "object")
         if kind == "inv":
-            return self._path_pairs(p[1], g).select(
-                F.col("o").alias("s"), F.col("s").alias("o"))
+            return pairs(self._path_pairs(p[1], t, keys), "o", "s")
         if kind == "alt":
             out = None
             for q in p[1]:
-                d = self._path_pairs(q, g)
+                d = self._path_pairs(q, t, keys)
                 out = d if out is None else out.unionByName(d)
             return out
         if kind == "seq":
             out = None
             for q in p[1]:
-                nxt = self._path_pairs(q, g)
+                nxt = self._path_pairs(q, t, keys)
                 if out is None:
                     out = nxt
-                else:
-                    out = (out.alias("l").join(
-                               nxt.alias("r"),
-                               F.col("l.o") == F.col("r.s"))
-                           .select(F.col("l.s").alias("s"),
-                                   F.col("r.o").alias("o")))
+                    continue
+                cond = F.col("l.o") == F.col("r.s")
+                for k in keys:
+                    cond = (F.col(f"l.{k}") == F.col(f"r.{k}")) & cond
+                out = (out.alias("l").join(nxt.alias("r"), cond)
+                       .select(*[F.col(f"l.{k}").alias(k) for k in keys],
+                               F.col("l.s").alias("s"),
+                               F.col("r.o").alias("o")))
             return out
         if kind == "opt":
-            return (self._path_pairs(p[1], g)
-                    .unionByName(self._identity_pairs(g)).distinct())
+            return (self._path_pairs(p[1], t, keys)
+                    .unionByName(identity()).distinct())
         if kind in ("plus", "star"):
-            closure = self._transitive_closure(self._path_pairs(p[1], g),
-                                               stats=self.closure_stats)
+            closure = self._transitive_closure(
+                self._path_pairs(p[1], t, keys), keys,
+                stats=self.closure_stats)
             if kind == "plus":
                 return closure
-            return closure.unionByName(self._identity_pairs(g)).distinct()
+            return closure.unionByName(identity()).distinct()
         if kind == "nps":
             fwd, inv = p[1], p[2]
-            t = self._graph_triples(g)
             arms = []
             if fwd:
-                arms.append(t.where(~F.col("predicate").isin(fwd))
-                            .select(F.col("subject").alias("s"),
-                                    F.col("object").alias("o")))
+                arms.append(pairs(t.where(~F.col("predicate").isin(fwd)),
+                                  "subject", "object"))
             if inv:
-                arms.append(t.where(~F.col("predicate").isin(inv))
-                            .select(F.col("object").alias("s"),
-                                    F.col("subject").alias("o")))
+                arms.append(pairs(t.where(~F.col("predicate").isin(inv)),
+                                  "object", "subject"))
             out = arms[0]
             for a in arms[1:]:
                 out = out.unionByName(a)
@@ -1641,7 +1627,7 @@ class SparqlEngine:
         raise ValueError(f"unsupported path element {p!r}")
 
     @staticmethod
-    def _transitive_closure(base: DataFrame, keyed: bool = False,
+    def _transitive_closure(base: DataFrame, keys: list[str],
                             stats: dict | None = None) -> DataFrame:
         """Distinct-pair transitive closure by FRONTIER expansion: each
         round joins only the pairs discovered last round against the base
@@ -1652,15 +1638,15 @@ class SparqlEngine:
         KG (type/subclass trees, the common ``+`` target) the frontier
         shrinks geometrically.
 
-        ``keyed=True``: base carries a 'g' graph label and pairs compose
-        within one graph (GRAPH ?var paths) — the label joins the key.
-        ``stats``, if given, receives {'rounds': N} (bench hook)."""
-        cols = ["g", "s", "o"] if keyed else ["s", "o"]
-        jcond = (F.col("f.o") == F.col("b.s"))
-        if keyed:
-            jcond = (F.col("f.g") == F.col("b.g")) & jcond
-        proj = ([F.col("f.g").alias("g")] if keyed else []) + \
-            [F.col("f.s").alias("s"), F.col("b.o").alias("o")]
+        Pairs compose only within equal ``keys`` (the 'g' graph label of
+        GRAPH ?var paths).  ``stats``, if given, receives {'rounds': N}
+        (bench hook)."""
+        cols = [*keys, "s", "o"]
+        jcond = F.col("f.o") == F.col("b.s")
+        for k in keys:
+            jcond = (F.col(f"f.{k}") == F.col(f"b.{k}")) & jcond
+        proj = [*[F.col(f"f.{k}").alias(k) for k in keys],
+                F.col("f.s").alias("s"), F.col("b.o").alias("o")]
         base = (base.where(F.col("s").isNotNull() & F.col("o").isNotNull())
                 .distinct().localCheckpoint(eager=True))
         # constraint propagation must be off inside the loop: Spark's
@@ -1692,92 +1678,6 @@ class SparqlEngine:
             if stats is not None:
                 stats["rounds"] = rounds
 
-    # -- graph-keyed path evaluation (GRAPH ?var) ----------------------
-    # Same algebra as _path_pairs but every relation carries the graph
-    # label: pairs compose / close WITHIN one named graph, the whole
-    # per-graph family evaluated in ONE DataFrame keyed by 'g' (no
-    # driver-side loop over graphs).  GRAPH ?var ranges over named
-    # graphs only (SPARQL 1.1 §13.3), so 'g' is never NULL — which also
-    # keeps the closure's ["g","s","o"] anti-join exact.
-
-    def _named_triples(self) -> DataFrame:
-        if "graph" not in self.cols:
-            raise ValueError("GRAPH pattern over a table with no "
-                             "graph column")
-        return self.triples.where(F.col("graph").isNotNull())
-
-    def _identity_pairs_var(self) -> DataFrame:
-        t = self._named_triples()
-        return (t.select(F.col("graph").alias("g"),
-                         F.explode(F.array("subject", "object")).alias("n"))
-                .where(F.col("n").isNotNull()).distinct()
-                .select("g", F.col("n").alias("s"), F.col("n").alias("o")))
-
-    def _path_pairs_var(self, p) -> DataFrame:
-        """Compile a path AST node to ('g', 's', 'o'): connected pairs
-        per named graph."""
-        kind = p[0]
-        if kind == "iri":
-            return (self._named_triples()
-                    .where(F.col("predicate") == p[1])
-                    .select(F.col("graph").alias("g"),
-                            F.col("subject").alias("s"),
-                            F.col("object").alias("o")))
-        if kind == "inv":
-            return self._path_pairs_var(p[1]).select(
-                "g", F.col("o").alias("s"), F.col("s").alias("o"))
-        if kind == "alt":
-            out = None
-            for q in p[1]:
-                d = self._path_pairs_var(q)
-                out = d if out is None else out.unionByName(d)
-            return out
-        if kind == "seq":
-            out = None
-            for q in p[1]:
-                nxt = self._path_pairs_var(q)
-                if out is None:
-                    out = nxt
-                else:
-                    out = (out.alias("l").join(
-                               nxt.alias("r"),
-                               (F.col("l.g") == F.col("r.g"))
-                               & (F.col("l.o") == F.col("r.s")))
-                           .select(F.col("l.g").alias("g"),
-                                   F.col("l.s").alias("s"),
-                                   F.col("r.o").alias("o")))
-            return out
-        if kind == "opt":
-            return (self._path_pairs_var(p[1])
-                    .unionByName(self._identity_pairs_var()).distinct())
-        if kind in ("plus", "star"):
-            closure = self._transitive_closure(
-                self._path_pairs_var(p[1]), keyed=True,
-                stats=self.closure_stats)
-            if kind == "plus":
-                return closure
-            return closure.unionByName(
-                self._identity_pairs_var()).distinct()
-        if kind == "nps":
-            fwd, inv = p[1], p[2]
-            t = self._named_triples()
-            arms = []
-            if fwd:
-                arms.append(t.where(~F.col("predicate").isin(fwd))
-                            .select(F.col("graph").alias("g"),
-                                    F.col("subject").alias("s"),
-                                    F.col("object").alias("o")))
-            if inv:
-                arms.append(t.where(~F.col("predicate").isin(inv))
-                            .select(F.col("graph").alias("g"),
-                                    F.col("object").alias("s"),
-                                    F.col("subject").alias("o")))
-            out = arms[0]
-            for a in arms[1:]:
-                out = out.unionByName(a)
-            return out
-        raise ValueError(f"unsupported path element {p!r}")
-
     def _scan_path(self, pat) -> tuple[DataFrame, set[str]]:
         """Triple pattern whose predicate is a path: bind s/o against the
         evaluated pair relation.  Object literals match on lexical form
@@ -1786,8 +1686,8 @@ class SparqlEngine:
         per-graph loop) and the graph variable binds the key column."""
         s, p, o, g = pat
         graph_var = g is not None and g[0] in ("var", "varin")
-        df = self._path_pairs_var(p) if graph_var \
-            else self._path_pairs(p, g)
+        df = self._path_pairs(p, self._path_triples(g),
+                              ["g"] if graph_var else [])
         conds: list[Column] = []
         proj: dict[str, Column] = {}
 
@@ -1900,9 +1800,17 @@ class SparqlEngine:
         # all-constant pattern: a 0/1-row existence relation
         return df.select(F.lit(1).alias("__const")).limit(1), set()
 
-    def _join(self, left, lvars, right, rvars, how="inner"):
+    def _join(self, left, lvars, right, rvars, how="inner", residual=()):
+        """Solution join on the shared variables.  ``residual``: filter
+        expressions over the JOINED bindings added to the join condition
+        (OPTIONAL's deferred filters — a left row failing them keeps its
+        bindings with the right side NULL, never dropped)."""
         keys = sorted(lvars & rvars)
         if left is None:
+            if residual:
+                raise ValueError(
+                    "OPTIONAL filter references variables bound nowhere: "
+                    f"{sorted(_expr_vars(residual[0]) - rvars)}")
             return right, set(rvars)
         # a variable introspected AND bound on both sides carries the
         # same-named metadata sidecars on both: rename the right copy and
@@ -1920,15 +1828,30 @@ class SparqlEngine:
             left = left.withColumn("__lp_" + v, F.col(v).isNotNull())
         for c in dup:
             right = right.withColumnRenamed(c, "__r" + c)
-        if not keys:
-            if how == "left":
-                # disjoint OPTIONAL: keep left rows even when the right
-                # side is empty (a crossJoin would drop them)
-                out = left.join(right, F.lit(True), "left")
-            else:
-                out = left.crossJoin(right)
-        else:
+        if keys and not residual:
             out = left.join(right, keys, how)
+        elif how == "inner" and not residual:
+            out = left.crossJoin(right)
+        else:
+            # explicit condition: the shared keys renamed on the right
+            # (keeps every column reference unambiguous) plus the
+            # residual; a disjoint OPTIONAL joins on TRUE, keeping left
+            # rows even when the right side is empty (a crossJoin would
+            # drop them)
+            for k in keys:
+                right = right.withColumnRenamed(k, "__opt_" + k)
+            cond = F.lit(True)
+            for k in keys:
+                cond = cond & (F.col(k) == F.col("__opt_" + k))
+            # residual filters compile without a single DataFrame in
+            # hand; introspection still needs to see which sidecar
+            # columns exist across the two sides (post-rename), so hand
+            # _expr a view of the joined column namespace
+            view = SimpleNamespace(columns=[*left.columns, *right.columns])
+            for flt in residual:
+                cond = cond & self._expr(flt, view, lvars | rvars)
+            out = left.join(right, cond, how).drop(
+                *["__opt_" + k for k in keys])
         for c in dup:
             v = c[len("__m_"):].rsplit("__", 1)[0]
             out = out.withColumn(
@@ -1937,6 +1860,16 @@ class SparqlEngine:
         if dup_vars:
             out = out.drop(*["__lp_" + v for v in dup_vars])
         return out, lvars | rvars
+
+    @staticmethod
+    def _union(arms: list) -> tuple[DataFrame, set[str]]:
+        """SPARQL Union of (DataFrame, vars) solution sets: columns an
+        arm lacks — variables and metadata sidecars alike — come through
+        as NULL."""
+        out = arms[0][0]
+        for adf, _ in arms[1:]:
+            out = out.unionByName(adf, allowMissingColumns=True)
+        return out, set().union(*[v for _, v in arms])
 
     def _values_compat_join(self, df, bound, vdf, names):
         """Join a VALUES table containing UNDEF (NULL) cells with SPARQL
@@ -2031,15 +1964,8 @@ class SparqlEngine:
                         df, bound = self._join(df, bound, sdf,
                                                avars | {ep[1]})
                         continue
-                    uvars = set().union(*[v for _, v in arms])
-                    parts = [adf.select(
-                        "*", *[F.lit(None).cast("string").alias(m)
-                               for m in sorted(uvars - avars)])
-                        for adf, avars in arms]
-                    sdf = parts[0]
-                    for p_ in parts[1:]:
-                        sdf = sdf.unionByName(p_, allowMissingColumns=True)
-                    df, bound = self._join(df, bound, sdf, uvars)
+                    sdf, svars = self._union(arms)
+                    df, bound = self._join(df, bound, sdf, svars)
                     continue
                 iri = ep[1]
                 src = self.services.get(iri)
@@ -2069,24 +1995,14 @@ class SparqlEngine:
                                            if not c.startswith("__")}))
                     else:
                         adfs.append(self._group(a))
-                uvars = set().union(*[v for _, v in adfs])
-                parts = []
-                for adf, avars in adfs:
-                    missing = sorted(uvars - avars)
-                    parts.append(adf.select(
-                        "*", *[F.lit(None).cast("string").alias(m)
-                               for m in missing]))
-                udf = parts[0]
-                for p_ in parts[1:]:
-                    # allowMissingColumns: metadata sidecars present in
-                    # one arm only null-fill in the others
-                    udf = udf.unionByName(p_, allowMissingColumns=True)
+                udf, uvars = self._union(adfs)
                 df, bound = self._join(df, bound, udf, uvars)
             elif kind == "values":
                 names, rows = payload
                 # inline ground table — always tiny, broadcast the join
-                vdf = F.broadcast(self.triples.sparkSession.createDataFrame(
-                    rows, ", ".join(f"{n} string" for n in names)))
+                vdf = F.broadcast(driver_frame(
+                    self.triples.sparkSession, rows,
+                    ", ".join(f"{n} string" for n in names)))
                 if any(v is None for r in rows for v in r):
                     # UNDEF rows: SPARQL solution compatibility (§18.2) —
                     # an unbound (NULL) side matches anything and the
@@ -2155,40 +2071,8 @@ class SparqlEngine:
                 odf = odf.where(self._expr(flt, odf, ovars))
             else:
                 deferred.append(flt)
-        if not deferred:
-            return self._join(df, bound, odf, ovars, how="left")
-        if df is None:
-            raise ValueError(
-                "OPTIONAL filter references variables bound nowhere: "
-                f"{sorted(_expr_vars(deferred[0]) - ovars)}")
-        # conditional left join: rename the shared keys on the optional
-        # side (keeps every column reference unambiguous), equi-join on
-        # them plus the deferred filters as residual conditions
-        keys = sorted(bound & ovars)
-        right = odf
-        for k in keys:
-            right = right.withColumnRenamed(k, f"__opt_{k}")
-        dup = [c for c in right.columns
-               if c.startswith("__m_") and c in df.columns]
-        for c in dup:
-            right = right.withColumnRenamed(c, "__r" + c)
-        cond = F.lit(True)
-        for k in keys:
-            cond = cond & (F.col(k) == F.col(f"__opt_{k}"))
-        jbound = bound | ovars
-        # deferred filters compile without a single DataFrame in hand;
-        # introspection still needs to see which sidecar columns exist
-        # across the two sides (post-rename), so hand _expr a view of
-        # the joined column namespace
-        jview = SimpleNamespace(columns=[*df.columns, *right.columns])
-        for flt in deferred:
-            cond = cond & self._expr(flt, jview, jbound)
-        out = df.join(right, cond, "left").drop(
-            *[f"__opt_{k}" for k in keys])
-        for c in dup:
-            out = out.withColumn(
-                c, F.coalesce(F.col(c), F.col("__r" + c))).drop("__r" + c)
-        return out, bound | ovars
+        return self._join(df, bound, odf, ovars, how="left",
+                          residual=deferred)
 
     def _exists_join(self, df, bound, flt) -> DataFrame:
         _, positive, sub = flt

@@ -84,9 +84,11 @@ def test_frame_uris_match_oracle(corpus):
 
 
 def test_salted_no_broadcast_path_equals_broadcast(spark):
-    """link_strategy='salted' also disables the vocab-table broadcasts in
-    the entity/relation builds (the >5M-alias web-corpus regime); every
-    materialized table must still equal the broadcast-path output."""
+    """link_strategy='salted' links through the salted skew join instead
+    of the broadcast alias table (the >5M-alias web-corpus regime); the
+    vocab-table broadcasts in the entity/relation builds follow the
+    vocabulary size, not the link strategy, so a small corpus keeps them.
+    Every materialized table must still equal the broadcast-path output."""
     from kgraphmemory_spark import datagen
     from kgraphmemory_spark.pipeline import run_pipeline
     pages = datagen.generate_pages(spark, 50, seed=11)

@@ -787,6 +787,23 @@ def test_optional_filter_sees_left_bindings(eng):
         ("urn:msg2", None)]
 
 
+def test_optional_filter_keeps_first_binding_sidecars(spark):
+    """A variable bound on both sides of an OPTIONAL keeps the LEFT
+    binding's datatype whether or not the OPTIONAL carries a filter over
+    left variables: the first binding wins as a unit, so a plain "5" on
+    the left is not retyped by the right side's "5"^^xsd:integer."""
+    rows = [("urn:a", "urn:p", "5", None, None, None),
+            ("urn:a", "urn:v", "1", None, None, None),
+            ("urn:b", "urn:q", "5", XSD + "integer", None, None)]
+    eng2 = SparqlEngine(spark.createDataFrame(rows, SCHEMA))
+    q = """SELECT ?x (DATATYPE(?x) AS ?dt) WHERE {
+        <urn:a> <urn:p> ?x . <urn:a> <urn:v> ?v .
+        OPTIONAL { <urn:b> <urn:q> ?x %s } }"""
+    for flt in ('FILTER(?v = "1")', ""):
+        got = [(r.x, r.dt) for r in eng2.query(q % flt).collect()]
+        assert got == [("5", XSD + "string")], flt
+
+
 def test_order_by_aggregate(eng):
     """ORDER BY DESC(COUNT(*)) — aggregates in sort keys hoist into
     hidden post-agg columns, same as HAVING."""
@@ -1161,6 +1178,32 @@ def test_graph_var_path_closure(spark):
     ).collect())
     # no (a, c) pair: the hop a→b lives in g1, b→c in g2
     assert got == [("g1", "a", "b"), ("g2", "b", "c")]
+
+
+@pytest.mark.parametrize("path", [
+    "<urn:p>|<urn:q>", "<urn:p>?", "<urn:p>*", "!(<urn:q>|^<urn:p>)",
+    "^<urn:p>", "<urn:p>/<urn:q>", "<urn:p>+"])
+def test_graph_var_path_forms_match_per_graph(spark, path):
+    """Every path form under GRAPH ?var equals the union over each named
+    graph G of (G, s, o) from GRAPH <G> — one compiled algebra serves
+    both, pairs never compose across graphs, and the default graph is
+    not a named graph."""
+    rows = [("urn:a", "urn:p", "urn:b", None, None, "g1"),
+            ("urn:b", "urn:p", "urn:c", None, None, "g1"),
+            ("urn:b", "urn:q", "urn:d", None, None, "g1"),
+            ("urn:b", "urn:p", "urn:e", None, None, "g2"),
+            ("urn:e", "urn:q", "urn:a", None, None, "g2"),
+            ("urn:c", "urn:p", "urn:a", None, None, "g2"),
+            ("urn:c", "urn:p", "urn:z", None, None, None)]
+    eng2 = SparqlEngine(spark.createDataFrame(rows, SCHEMA))
+    got = sorted((r.g, r.s, r.o) for r in eng2.query(
+        f"SELECT ?g ?s ?o WHERE {{ GRAPH ?g {{ ?s {path} ?o }} }}"
+    ).collect())
+    want = sorted((g, r.s, r.o) for g in ("g1", "g2")
+                  for r in eng2.query(
+                      f"SELECT ?s ?o WHERE {{ GRAPH <{g}> "
+                      f"{{ ?s {path} ?o }} }}").collect())
+    assert want and got == want
 
 
 def test_union_of_subquery(eng):

@@ -89,6 +89,7 @@ import sys
 import time
 import traceback
 
+ROOT = os.path.dirname(os.path.abspath(__file__))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 SF_LABEL = SF_DIR.rstrip("/").split("/")[-1]
@@ -193,8 +194,7 @@ def _headline(spark) -> tuple[dict, dict]:
     def _pipeline_once():
         from kgraphmemory_spark.datagen import pages_from_documents
         from kgraphmemory_spark.pipeline import run_pipeline
-        kg = run_pipeline(spark, pages_from_documents(docs),
-                          link_strategy="auto")
+        kg = run_pipeline(spark, pages_from_documents(docs))
         # force every materialized table
         n_rel = kg.relations.count()
         n_tr = kg.raw_triples.count()
@@ -326,20 +326,22 @@ def _headline(spark) -> tuple[dict, dict]:
     run("sparql_closure_10m", _path_closure)
 
     # -- salted linking at its ACTUAL trigger point: a 5.1M-row alias
-    #    table is past BROADCAST_MAX_ALIAS_ROWS, so strategy="auto"
-    #    resolves to salted (asserted) — the 100×-scale path measured at
-    #    the cardinality that really selects it, on a Zipf-headed 2M-row
+    #    table is past BROADCAST_MAX_ALIAS_ROWS, where the pipeline links
+    #    salted (asserted) — the 100×-scale path measured at the
+    #    cardinality that really selects it, on a Zipf-headed 2M-row
     #    mention stream --------------------------------------------------
     from kgraphmemory_spark.operators.linking import (
+        BROADCAST_MAX_ALIAS_ROWS,
         link_mentions,
-        resolve_strategy,
+        rank_candidates,
     )
 
     def _salted():
         alias, mentions = synthetic_alias_and_mentions(
             spark, alias_rows=5_100_000, mention_rows=2_000_000)
-        assert resolve_strategy(5_100_000) == "salted"
-        return link_mentions(mentions, alias, strategy="auto").count()
+        assert 5_100_000 > BROADCAST_MAX_ALIAS_ROWS
+        return link_mentions(mentions, rank_candidates(alias),
+                             salted=True).count()
 
     linked_rows = run("salted_link_at_cutover", _salted)
     extra["salted_alias_rows"] = 5_100_000
@@ -613,7 +615,7 @@ def _scaling_child(cores: int, corpus_dir: str, reps: int = 3,
     """
     code = f"""
 import json, os, time, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {ROOT!r})
 from kgraphmemory_spark.session import get_spark
 from kgraphmemory_spark.datagen import generate_pages_distributed
 from kgraphmemory_spark.pipeline import run_pipeline
@@ -649,7 +651,7 @@ spark = get_spark(app="kgm-scale", cores={cores}, shuffle_partitions={2 * cores}
                           str(8 * 1024 * 1024),
                           "spark.driver.memory": "96g"}})
 warm = generate_pages_distributed(spark, 50000, seed=7, partitions=16)
-kgw = run_pipeline(spark, warm, link_strategy="salted")
+kgw = run_pipeline(spark, warm)
 kgw.relations.count(); kgw.entities.count(); kgw.triples.count()
 spark.catalog.clearCache()
 pages = spark.read.parquet({corpus_dir!r})
@@ -662,7 +664,7 @@ for _ in range({reps}):
     b0 = busy_cores()
     with BusySampler() as smp:
         t0 = time.time()
-        kg = run_pipeline(spark, pages, link_strategy="salted")
+        kg = run_pipeline(spark, pages)
         n = kg.relations.count()
         kg.entities.count(); kg.triples.count()
         dt = time.time() - t0
@@ -740,7 +742,7 @@ def main() -> None:
         if a == "--scaling-pages":
             scaling_pages = int(sys.argv[i + 1])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from kgraphmemory_spark.session import get_spark
 
     # idle-gate the battery phase start, exactly like the scaling
@@ -874,8 +876,7 @@ def main() -> None:
     # metric/value/per-query times plus a rep-free scaling summary —
     # that stays well under any plausible capture window (~1.5 KB).
     try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH_DETAIL.json"), "w") as fh:
+        with open(os.path.join(ROOT, "BENCH_DETAIL.json"), "w") as fh:
             json.dump(result, fh, indent=1)
     except OSError:
         pass

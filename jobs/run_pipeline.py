@@ -4,18 +4,20 @@
 
 Packaging + launch:
 
-    cd /root/repo && zip -qr /tmp/kgm.zip kgraphmemory_spark
+    zip -qr /tmp/kgm.zip kgraphmemory_spark     # from the repo root
     spark-submit --master local[16] \\
         --py-files /tmp/kgm.zip \\
         jobs/run_pipeline.py \\
-        --input /root/testdata/sf0.1/documents.parquet \\
-        --workdir /tmp/kgm_run --link-strategy salted
+        --input <sf_dir>/documents.parquet \\
+        --workdir /tmp/kgm_run
 
 On a real cluster, swap --master (YARN/K8s) and point --input at the
 Iceberg/parquet pages table; everything else is identical.  The job prints
 one JSON metrics line (docs/sec, triples/sec, per-stage rows) and commits
 every stage through the SnapshotCatalog, so a killed run rerun with the
-same --workdir resumes from the last committed snapshot.
+same --workdir resumes from the last committed snapshot.  Every plan
+(broadcast or salted linking, doc-aggregate or shuffle rollups) follows
+the discovered alias table's size.
 
 The session is obtained via SparkSession.builder.getOrCreate() so
 spark-submit's --master/--conf win; sensible AQE/Arrow defaults are applied
@@ -57,8 +59,6 @@ def main() -> None:
                          "documents parquet to be lifted to that schema")
     ap.add_argument("--workdir", required=True,
                     help="snapshot root; rerun with the same dir to resume")
-    ap.add_argument("--link-strategy", default="auto",
-                    choices=["auto", "broadcast", "salted", "shuffle"])
     ap.add_argument("--synthetic-pages", type=int, default=None,
                     help="generate N synthetic pages instead of reading "
                          "--input (bench/scaling runs)")
@@ -88,8 +88,7 @@ def main() -> None:
             pages = raw
 
     t0 = time.time()
-    kg = run_pipeline(spark, pages, workdir=args.workdir,
-                      link_strategy=args.link_strategy)
+    kg = run_pipeline(spark, pages, workdir=args.workdir)
     # row counts as committed: every stage's manifest records its own
     cat = SnapshotCatalog(args.workdir)
     counts = {

@@ -185,9 +185,9 @@ def synthetic_alias_and_mentions(
         head_keys: int = 64, head_share: int = 3, salt_mod: int = 10,
         partitions: int = 32) -> tuple[DataFrame, DataFrame]:
     """Supra-broadcast-threshold linking workload: an open-vocabulary alias
-    table of ``alias_rows`` distinct surfaces (≥ BROADCAST_MAX_ALIAS_ROWS
-    forces the salted strategy through resolve_strategy — the 100×-scale
-    trigger point) and a Zipf-shaped mention stream where ``head_share``
+    table of ``alias_rows`` distinct surfaces (past BROADCAST_MAX_ALIAS_ROWS
+    the pipeline links through the salted plan — the 100×-scale trigger
+    point) and a Zipf-shaped mention stream where ``head_share``
     in ``salt_mod`` mentions hit one of ``head_keys`` hub surfaces (the
     skew the salted join exists to spread).  Fully distributed generation;
     every mention surface exists in the alias table, so the linking join

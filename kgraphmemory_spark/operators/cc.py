@@ -238,63 +238,6 @@ def connected_components(
     )
 
 
-def merge_components(committed: DataFrame, new_edges: DataFrame,
-                     src: str = "src", dst: str = "dst",
-                     stats: dict | None = None) -> DataFrame:
-    """Delta-CC: fold NEW edges into an existing ``(node, component)``
-    mapping without re-running CC over the full accumulated edge set —
-    the incremental-canonicalization core (streaming finalize must not
-    recompute a 10^12-node component graph because one micro-batch added
-    10^5 edges).
-
-    A committed component is an equivalence class fully represented by its
-    (min) label, so:
-
-    1. project each new edge onto label space — endpoints known to
-       ``committed`` are replaced by their component, unknown endpoints
-       (brand-new nodes) pass through;
-    2. run ``connected_components`` on the projected graph, whose size is
-       O(new edges) — independent of the committed graph;
-    3. compose: relabel committed rows whose component was merged (the
-       relabel map is at most 2×|new edges| rows — broadcast), and union
-       in the brand-new nodes from step 2.
-
-    Labels stay the lexicographic min over the merged class (each
-    committed label is the min of its class, and step 2 takes the min of
-    participating labels), so the output is IDENTICAL to a full recompute
-    over old∪new edges for every node that appears in either (asserted in
-    tests/test_cc.py against the batch path)."""
-    cu = committed.select(F.col("node").alias(src),
-                          F.col("component").alias("_cu"))
-    cv = committed.select(F.col("node").alias(dst),
-                          F.col("component").alias("_cv"))
-    projected = (
-        new_edges
-        .select(F.col(src).cast("string").alias(src),
-                F.col(dst).cast("string").alias(dst))
-        .join(cu, src, "left")
-        .join(cv, dst, "left")
-        .select(F.coalesce("_cu", F.col(src)).alias("src"),
-                F.coalesce("_cv", F.col(dst)).alias("dst"))
-    )
-    delta = connected_components(projected, stats=stats)
-    delta = delta.localCheckpoint(eager=True)  # consumed thrice below
-    # only labels that actually moved need relabeling
-    relabel = (
-        delta.where(F.col("node") != F.col("component"))
-        .select(F.col("node").alias("component"),
-                F.col("component").alias("_merged"))
-    )
-    relabeled = (
-        committed.join(F.broadcast(relabel), "component", "left")
-        .select("node",
-                F.coalesce("_merged", F.col("component")).alias("component"))
-    )
-    brand_new = delta.join(
-        committed.select("node"), "node", "left_anti")
-    return relabeled.unionByName(brand_new)
-
-
 def canonical_mapping_local(spark, entity_ids: list[str],
                             same_as_pairs: list[tuple[str, str]]) -> DataFrame:
     """Driver fast path for ``canonical_mapping`` when the caller ALREADY
@@ -315,24 +258,25 @@ def canonical_mapping_local(spark, entity_ids: list[str],
     return driver_frame(spark, rows, "entity_id string, canonical_id string")
 
 
-def canonical_mapping(entities: DataFrame, same_as: DataFrame,
-                      id_col: str = "entity_id") -> DataFrame:
+def canonical_mapping(entities: DataFrame, same_as: DataFrame) -> DataFrame:
     """entity_id → canonical_id for ALL entities (isolated → self).
 
     ``same_as`` must have columns (src, dst); only pairs where both
     endpoints exist in ``entities`` fire — mirrors
     ``semantics.canonical_map``.
     """
-    ids = entities.select(F.col(id_col)).distinct().localCheckpoint(eager=True)
+    ids = entities.select("entity_id").distinct().localCheckpoint(eager=True)
     live = (
-        same_as.join(ids.withColumnRenamed(id_col, "src"), "src", "left_semi")
-        .join(ids.withColumnRenamed(id_col, "dst"), "dst", "left_semi")
+        same_as.join(ids.withColumnRenamed("entity_id", "src"), "src",
+                     "left_semi")
+        .join(ids.withColumnRenamed("entity_id", "dst"), "dst", "left_semi")
     )
     comp = connected_components(live, "src", "dst")
     return (
-        ids.join(comp, ids[id_col] == comp["node"], "left")
+        ids.join(comp, ids["entity_id"] == comp["node"], "left")
         .select(
-            F.col(id_col),
-            F.coalesce(F.col("component"), F.col(id_col)).alias("canonical_id"),
+            "entity_id",
+            F.coalesce(F.col("component"), F.col("entity_id"))
+            .alias("canonical_id"),
         )
     )

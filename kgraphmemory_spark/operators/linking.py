@@ -2,23 +2,22 @@
 
 The linking join is THE skew point at web scale: mention surfaces follow a
 Zipf law ("the"-class hub tokens, wikipedia-scale head entities), so a naive
-shuffle join on `surface` piles the head keys onto single tasks.  Three
-strategies, selected by `strategy=`:
+shuffle join on `surface` piles the head keys onto single tasks.  Two
+plans, picked by the pipeline from the ranked alias table's size
+(``pipeline.build_graph``: salted past ``BROADCAST_MAX_ALIAS_ROWS``):
 
-- ``broadcast`` — alias table small enough to broadcast (the common case
+- broadcast — alias table small enough to broadcast (the common case
   when aliases fit in executor memory; no shuffle at all);
-- ``salted``    — explode the alias table ×SALT, salt each mention by a
-  content hash, join on (surface, salt): head keys spread over SALT tasks;
-- ``shuffle``   — plain shuffle join, AQE skew-join splitting enabled
-  (spark.sql.adaptive.skewJoin.enabled, see session.py).
+- salted    — explode the alias table ×SALT, salt each mention by a
+  content hash, join on (surface, salt): head keys spread over SALT tasks.
 
-All three produce identical rows (asserted in tests/test_linking.py).
+Both produce identical rows (asserted in tests/test_linking.py).
 
 Ranking (SURVEY.md §2.5 W2): best candidate per mention — semantics of
 row_number() over (url,pos,kind) ordered by (score desc, entity_id) == 1,
 the reference's take-first-hit loop (kginteraction_graph.py:97-126) —
 implemented as a hash aggregate (min over struct) rather than a window
-sort; see comment in link_mentions.
+sort; see rank_candidates.
 """
 
 from __future__ import annotations
@@ -29,7 +28,7 @@ from pyspark.sql import functions as F
 from ..semantics import BIGRAM_ALIASES
 from ..session import driver_frame
 
-DEFAULT_SALT = 16
+SALT = 16
 
 # Broadcast cutover: an alias row is ~60 bytes serialized (surface +
 # entity_id + kind + score); 5M rows ≈ 300 MB — the practical ceiling for
@@ -38,14 +37,6 @@ DEFAULT_SALT = 16
 # join is the documented scale path (BASELINE.md: salted ≈ broadcast
 # wall-clock at 1M pages, so the cutover costs nothing locally).
 BROADCAST_MAX_ALIAS_ROWS = 5_000_000
-
-
-def resolve_strategy(alias_rows: int,
-                     broadcast_max_rows: int = BROADCAST_MAX_ALIAS_ROWS) -> str:
-    """auto → broadcast | salted by alias-table cardinality (round-2 fix
-    for the VERDICT watch-item: broadcast of a *discovered* open-vocabulary
-    table must not be unconditional)."""
-    return "broadcast" if alias_rows <= broadcast_max_rows else "salted"
 
 
 def _bigram_aliases(spark) -> DataFrame:
@@ -130,46 +121,29 @@ def rank_candidates(alias_table: DataFrame) -> DataFrame:
     )
 
 
-def link_mentions(
-    mentions: DataFrame,
-    alias_table: DataFrame,
-    strategy: str = "broadcast",
-    salt: int = DEFAULT_SALT,
-    ranked: DataFrame | None = None,
-) -> DataFrame:
-    """mentions(url,pos,surface,kind) ⋈ alias(surface,kind,entity_id,prior)
-    → linked(url, pos, surface, kind, entity_id, link_score), one row per
-    mention (best candidate; ties broken by entity_id asc → deterministic).
+def link_mentions(mentions: DataFrame, ranked: DataFrame,
+                  salted: bool = False) -> DataFrame:
+    """mentions(url,pos,surface,kind) ⋈ ranked(surface,kind,entity_id,
+    link_score) — ``rank_candidates`` output, one best candidate per
+    (surface, kind) — → linked(url, pos, surface, kind, entity_id,
+    link_score), one row per linked mention.
 
-    The join is 1:1 after ranking, so every strategy is a pure map/shuffle
-    join with no downstream agg.
-
-    ``strategy="auto"`` materializes the ranked alias table once
-    (localCheckpoint — it is joined right after, so nothing is wasted),
-    counts it, and picks broadcast below ``BROADCAST_MAX_ALIAS_ROWS`` else
-    salted.  Pass ``ranked`` (= rank_candidates(alias_table), e.g. cached
-    by the pipeline) to skip re-ranking here.
-    """
-    best = ranked if ranked is not None else rank_candidates(alias_table)
-    if strategy == "auto":
-        best = best.localCheckpoint(eager=True)
-        strategy = resolve_strategy(best.count())
-    if strategy == "broadcast":
-        j = mentions.join(F.broadcast(best), ["surface", "kind"], "inner")
-    elif strategy == "salted":
+    The join is 1:1, so either plan is a pure map/shuffle join with no
+    downstream agg: ``ranked`` broadcast, or (``salted``) exploded ×SALT
+    and joined on (surface, kind, salt) with each mention salted by
+    xxhash64(url, pos)."""
+    if salted:
         salted_m = mentions.withColumn(
-            "_salt", F.pmod(F.xxhash64("url", "pos"), F.lit(salt)).cast("int")
+            "_salt", F.pmod(F.xxhash64("url", "pos"), F.lit(SALT)).cast("int")
         )
-        salted_a = best.withColumn(
-            "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
+        salted_a = ranked.withColumn(
+            "_salt", F.explode(F.sequence(F.lit(0), F.lit(SALT - 1)))
         )
         j = salted_m.join(
             salted_a, ["surface", "kind", "_salt"], "inner"
         ).drop("_salt")
-    elif strategy == "shuffle":
-        j = mentions.join(best, ["surface", "kind"], "inner")
     else:
-        raise ValueError(f"unknown strategy {strategy!r}")
+        j = mentions.join(F.broadcast(ranked), ["surface", "kind"], "inner")
     return j.select("url", "pos", "surface", "kind", "entity_id", "link_score")
 
 

@@ -11,9 +11,6 @@ Mirrors the reference data model (SURVEY.md §1.1):
 - provenance — per-url lineage (Edge_hasKGDocument analog,
   kgraph_document_bridge.py:165-176, plus north-rule url/count lineage)
 
-Skew note: the canonical-id aggregations repartition by a salted key first
-when `salt>1` — head entities ("the") otherwise serialize one reducer.
-AQE would split these too; explicit salt keeps the partial-agg path hot.
 All aggs here are partial+final hash aggregates (map-side combine free).
 """
 
@@ -74,8 +71,8 @@ def build_entities_preagg(mentions: DataFrame, ranked_alias: DataFrame,
     probes run per distinct surface instead of per mention occurrence
     (10^12 rows at web scale).  ``broadcast_alias=False`` (the pipeline
     passes it when the discovered alias table exceeds the broadcast
-    ceiling, linking.resolve_strategy) leaves the alias/canonical joins
-    to AQE — still vocab-by-vocab shuffles, never per-occurrence."""
+    ceiling, linking.BROADCAST_MAX_ALIAS_ROWS) leaves the alias/canonical
+    joins to AQE — still vocab-by-vocab shuffles, never per-occurrence."""
     def _side(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if broadcast_alias else df
 
@@ -174,8 +171,7 @@ def build_relations(raw_triples: DataFrame, canonical: DataFrame,
     )
 
 
-def build_relations_docagg(docagg: DataFrame,
-                           pred: str | None = None) -> DataFrame:
+def build_relations_docagg(docagg: DataFrame) -> DataFrame:
     """relations from the per-batch partial ``relations`` rows of
     ``extraction.extract_docagg``: the rows are already canonical and
     carry per-batch doc counts deduped per document, so weight = Σ cnt
@@ -189,7 +185,7 @@ def build_relations_docagg(docagg: DataFrame,
         docagg_rows(docagg, "relations").groupBy("subj", "obj")
         .agg(F.sum("cnt").cast("long").alias("weight"),
              F.sum("ndocs").cast("long").alias("ndocs"))
-        .select("subj", F.lit(pred or REL_NEXT).alias("pred"), "obj",
+        .select("subj", F.lit(REL_NEXT).alias("pred"), "obj",
                 "weight", "ndocs")
     )
 

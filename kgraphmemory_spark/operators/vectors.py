@@ -315,7 +315,8 @@ def hybrid_search(vectors: DataFrame, graph_candidates: DataFrame,
     the semi join runs below the top-k.
 
     The broadcast of the candidate set is GATED on its cardinality
-    (same discipline as ``linking.resolve_strategy`` — r3 VERDICT item):
+    (same discipline as the pipeline's alias-table broadcast ceiling,
+    ``linking.BROADCAST_MAX_ALIAS_ROWS`` — r3 VERDICT item):
     a selective graph filter yields a few thousand URIs and the hint is
     free, but a permissive SPARQL filter at 100× corpus scale can return
     a candidate set that would OOM the driver if broadcast

@@ -11,8 +11,10 @@ Two execution modes:
   last committed stage (tests/test_resume.py kills between stages).
 
 Every transform is a pure function of committed inputs and deterministic
-ids, so resume is idempotent by construction.  The stages from alias_table
-on are ``build_graph``, which the streaming finalizes call too.
+ids, so resume is idempotent by construction.  Every stage is
+``build_graph``, which the streaming ``finalize`` calls too.  No caller
+picks a plan: the ranked alias table's size picks the linking join, the
+vocabulary broadcasts, the doc-aggregate fast paths and the CC path.
 """
 
 from __future__ import annotations
@@ -37,7 +39,6 @@ from .operators.linking import (
     discovered_alias_from_docs,
     link_mentions,
     rank_candidates,
-    resolve_strategy,
 )
 from .operators.materialize import (
     DEFAULT_GRAPH,
@@ -65,6 +66,9 @@ RELATIONS_DOCAGG_MAX_BYTES = 256 << 20
 from .semantics import SYNONYMS
 from .session import driver_frame
 
+# the canonicalization config (semantics.SYNONYMS) as entity-id pairs
+SAME_AS_PAIRS = [("ent:" + a, "ent:" + b) for a, b in SYNONYMS]
+
 
 @dataclass
 class KGTables:
@@ -89,15 +93,12 @@ class KGTables:
 
 
 def same_as_edges(spark: SparkSession) -> DataFrame:
-    """The canonicalization config (semantics.SYNONYMS) as an edge DF."""
-    return driver_frame(
-        spark, [("ent:" + a, "ent:" + b) for a, b in SYNONYMS],
-        "src string, dst string",
-    )
+    """``SAME_AS_PAIRS`` as an edge DF."""
+    return driver_frame(spark, SAME_AS_PAIRS, "src string, dst string")
 
 
 def _stager(spark: SparkSession, cat: SnapshotCatalog | None,
-            cache_intermediates: bool, resumed: list[str]):
+            resumed: list[str]):
     """→ ``stage(name, build, lineage_extra=None)``: in memory (``cat``
     None) build and cache all but the wide fan-out stages; checkpointed,
     resume a committed stage (named on ``resumed``) or build and commit."""
@@ -106,9 +107,7 @@ def _stager(spark: SparkSession, cat: SnapshotCatalog | None,
     def stage(name: str, build, lineage_extra=None) -> DataFrame:
         if cat is None:
             df = build()
-            if cache_intermediates and name not in no_cache:
-                df = df.cache()
-            return df
+            return df if name in no_cache else df.cache()
         if cat.committed(name):
             resumed.append(name)
             return cat.read(spark, name)
@@ -132,54 +131,41 @@ def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
     workdir: str | None = None,
-    link_strategy: str = "auto",
     graph: str = DEFAULT_GRAPH,
-    cache_intermediates: bool = True,
 ) -> KGTables:
     """``workdir`` set → every stage is an atomic parquet snapshot (the
     scale path: stage outputs are re-read from disk, lineage truncated).
 
     NOT fully lazy: construction always materializes the ranked alias
     table (cache/localCheckpoint + one count job at call time) — its
-    cardinality drives both the auto link strategy and the vocab-broadcast
-    gating, regardless of an explicit ``link_strategy``, so a pipeline
-    cannot be built before its input data exists.
+    cardinality picks every plan below, so a pipeline cannot be built
+    before its input data exists.
 
-    ``workdir=None`` → everything else stays one lazy DAG;
-    ``cache_intermediates`` then caches
+    ``workdir=None`` → everything else stays one lazy DAG that caches
     the SMALL stages only (docs_clean — the pandas-UDF product — the
     ranked alias table, and the aggregated graph tables).  The wide
-    fan-out stages (mentions,
-    raw_triples, linked: ~100 rows per doc) are deliberately NOT cached:
-    they are cheap map-side derivations of cached docs_clean, and filling
-    a columnar cache with 10^2×docs rows costs far more than the 1-2
-    rescans that consume them (measured: 25-70 s fill vs 2 s scan at 250k
-    docs / 19M mentions)."""
+    fan-out stages (mentions, raw_triples, linked: ~100 rows per doc)
+    are deliberately NOT cached: they are cheap map-side derivations of
+    cached docs_clean, and filling a columnar cache with 10^2×docs rows
+    costs far more than the 1-2 rescans that consume them (measured:
+    25-70 s fill vs 2 s scan at 250k docs / 19M mentions)."""
     cat = SnapshotCatalog(workdir) if workdir else None
-    resumed: list[str] = []
-    stage = _stager(spark, cat, cache_intermediates, resumed)
-    docs_clean = stage("docs_clean", lambda: extract_docs(pages))
-    mentions = stage("mentions", lambda: extract_mentions(docs_clean))
-    raw_triples = stage("raw_triples", lambda: extract_raw_triples(docs_clean))
-    return build_graph(spark, cat, docs_clean, mentions, raw_triples,
-                       resumed, link_strategy, graph, cache_intermediates)
+    return build_graph(spark, cat, lambda: extract_docs(pages), graph)
 
 
 def build_graph(spark: SparkSession, cat: SnapshotCatalog | None,
-                docs_clean: DataFrame, mentions: DataFrame,
-                raw_triples: DataFrame, resumed: list[str] | None = None,
-                link_strategy: str = "auto", graph: str = DEFAULT_GRAPH,
-                cache_intermediates: bool = True,
-                canonical_of=None) -> KGTables:
-    """The stages alias_table through provenance over staged docs_clean,
-    mentions and raw_triples: the one stage graph behind ``run_pipeline``
-    and the streaming finalizes.  ``cat`` and ``resumed`` as in
-    ``_stager``.  ``canonical_of(ents)`` replaces the canonical_map build
-    over the ranked entity set (the streaming delta-CC).  Stage builders
-    are looked up as this module's globals at call time, so wrapping
-    ``pipeline.<builder>`` observes the path a build took."""
-    resumed = [] if resumed is None else resumed
-    stage = _stager(spark, cat, cache_intermediates, resumed)
+                docs, graph: str = DEFAULT_GRAPH) -> KGTables:
+    """Every stage, docs_clean through provenance: the one stage graph
+    behind ``run_pipeline`` and the streaming ``finalize``.  ``docs()``
+    builds docs_clean (called only when that stage does not resume);
+    ``cat`` as in ``_stager``.  Stage builders are looked up as this
+    module's globals at call time, so wrapping ``pipeline.<builder>``
+    observes the path a build took."""
+    resumed: list[str] = []
+    stage = _stager(spark, cat, resumed)
+    docs_clean = stage("docs_clean", docs)
+    mentions = stage("mentions", lambda: extract_mentions(docs_clean))
+    raw_triples = stage("raw_triples", lambda: extract_raw_triples(docs_clean))
 
     # alias table: vocabulary-sized — committed as its own snapshot /
     # cached, since both linking and canonicalization read it.  Discovered
@@ -189,20 +175,13 @@ def build_graph(spark: SparkSession, cat: SnapshotCatalog | None,
     alias = stage("alias_table", lambda: discovered_alias_from_docs(docs_clean))
 
     # rank ONCE (cached in-memory / localCheckpointed otherwise) and probe
-    # its cardinality ONCE.  The cardinality drives two independent
-    # decisions: the auto link strategy, and whether the vocabulary-sized
-    # ranked/canonical tables may carry broadcast hints in the entity and
-    # relation builds.  The latter must NOT be coupled to the chosen link
-    # strategy: a salted linking run over a small vocabulary still wants
-    # the vocab broadcasts (dropping the hint costs a shuffle write of the
-    # big probe side even when AQE converts the join back to broadcast),
-    # while an open-vocabulary web corpus past the broadcast ceiling must
-    # drop them or the driver OOMs regardless of link strategy.
+    # its cardinality ONCE: past the broadcast ceiling the vocabulary
+    # tables are no longer broadcast anywhere — linking takes the salted
+    # join, and the entity/relation builds and linked_canonical drop
+    # their broadcast hints, or the driver OOMs.
     ranked = rank_candidates(alias)
-    if cat is None and cache_intermediates:
-        ranked = ranked.cache()
-    else:
-        ranked = ranked.localCheckpoint(eager=True)
+    ranked = (ranked.cache() if cat is None
+              else ranked.localCheckpoint(eager=True))
     size_row = ranked.agg(
         F.count(F.lit(1)).alias("n"),
         F.coalesce(F.sum(F.length("entity_id")), F.lit(0)).alias("b"),
@@ -211,15 +190,10 @@ def build_graph(spark: SparkSession, cat: SnapshotCatalog | None,
     broadcast_vocab = n_alias <= BROADCAST_MAX_ALIAS_ROWS
     use_docagg = (n_alias <= RELATIONS_DOCAGG_MAX_VOCAB
                   and 2 * alias_id_bytes <= RELATIONS_DOCAGG_MAX_BYTES)
-    strategy = link_strategy
-    if strategy == "auto":
-        strategy = resolve_strategy(n_alias)
-
-    def _link():
-        return link_mentions(mentions, alias, strategy=strategy, ranked=ranked)
 
     linked = stage(
-        "linked", _link,
+        "linked",
+        lambda: link_mentions(mentions, ranked, salted=not broadcast_vocab),
         lineage_extra={
             "score_histogram": F.to_json(
                 F.map_from_entries(F.array(F.struct(
@@ -238,12 +212,9 @@ def build_graph(spark: SparkSession, cat: SnapshotCatalog | None,
         # the DataFrame CC path's ~6 fixed-latency mini-jobs, which
         # otherwise sit in the scaling run's serial floor.
         ents = ranked.select("entity_id").distinct()
-        if canonical_of is not None:
-            return canonical_of(ents)
         if use_docagg:
             ids = [r["entity_id"] for r in ents.collect()]
-            pairs = [("ent:" + a, "ent:" + b) for a, b in SYNONYMS]
-            return canonical_mapping_local(spark, ids, pairs)
+            return canonical_mapping_local(spark, ids, SAME_AS_PAIRS)
         return canonical_mapping(ents, same_as_edges(spark))
 
     canonical = stage("canonical_map", _canonical)
@@ -261,9 +232,8 @@ def build_graph(spark: SparkSession, cat: SnapshotCatalog | None,
         # that needs it (entities, unless that stage resumed) and the
         # later stages read its cached / local-checkpointed blocks
         out = extract_docagg(docs_clean, cmap)
-        if cat is None and cache_intermediates:
-            return out.cache()
-        return out.localCheckpoint(eager=False)
+        return (out.cache() if cat is None
+                else out.localCheckpoint(eager=False))
 
     def _linked_canonical() -> DataFrame:
         canon = F.broadcast(canonical) if broadcast_vocab else canonical

@@ -1,8 +1,16 @@
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file lives in — first on the driver's sys.path and on
+# PYTHONPATH, which Spark's Python workers inherit, so a test run in any
+# copy of the repo imports that copy's code on both sides
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    [ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep)
+              if p and p != ROOT])
 
 
 @pytest.fixture(scope="session")

@@ -143,51 +143,6 @@ def test_distributed_path_at_representative_shape(spark):
     comp.unpersist()
 
 
-def test_merge_components_delta_equals_full_recompute(spark):
-    """Delta-CC over 3 edge batches == batch CC over the union at every
-    generation — including cross-batch merges of previously separate
-    components and a new node that becomes the (lexicographic) min label."""
-    from kgraphmemory_spark.operators.cc import (
-        connected_components as cc,
-        merge_components,
-    )
-
-    batches = [
-        [("b", "c"), ("x", "y"), ("m", "m2")],      # three components
-        [("c", "x"), ("q", "r")],                   # merge b-c with x-y
-        [("a", "b"), ("m2", "q"), ("z", "z2")],     # new min 'a'; chain m→q
-    ]
-
-    def df(edges):
-        return spark.createDataFrame(edges, "src string, dst string")
-
-    committed = cc(df(batches[0]))
-    seen = list(batches[0])
-    for delta in batches[1:]:
-        committed = merge_components(committed, df(delta))
-        seen += delta
-        want = {(r.node, r.component) for r in cc(df(seen)).collect()}
-        got = {(r.node, r.component) for r in committed.collect()}
-        assert got == want, (sorted(got), sorted(want))
-    final = {r.node: r.component for r in committed.collect()}
-    assert final["y"] == "a"        # cross-generation merge to the new min
-    assert final["r"] == "m"        # m-m2-q-r chain built across batches
-    assert final["z2"] == "z"       # fresh isolated pair
-
-
-def test_merge_components_empty_delta_is_identity(spark):
-    from kgraphmemory_spark.operators.cc import (
-        connected_components as cc,
-        merge_components,
-    )
-    committed = cc(spark.createDataFrame(
-        [("a", "b")], "src string, dst string"))
-    empty = spark.createDataFrame([], "src string, dst string")
-    got = {(r.node, r.component)
-           for r in merge_components(committed, empty).collect()}
-    assert got == {("a", "a"), ("b", "a")}
-
-
 def test_driver_cutover_is_bytes_aware(spark):
     """A small edge COUNT with huge labels must not collect to the driver:
     the cutover also caps total label bytes."""

@@ -14,9 +14,10 @@ regress silently.
 import pytest
 from pyspark.sql import types as T
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/tests")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from driver_mirror import unhashable_columns  # noqa: E402
 
 from kgraphmemory_spark import queries as Q  # noqa: E402

@@ -1,5 +1,5 @@
-"""Linking join: all three strategies (broadcast / salted / shuffle) must
-produce identical results; ambiguous aliases rank deterministically."""
+"""Linking join: both plans (broadcast / salted) must produce identical
+results; ambiguous aliases rank deterministically."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -7,11 +7,10 @@ from pyspark.sql import functions as F
 from kgraphmemory_spark import datagen
 from kgraphmemory_spark.operators.extraction import extract_docs, extract_mentions
 from kgraphmemory_spark.operators.linking import (
-    BROADCAST_MAX_ALIAS_ROWS,
     discovered_alias_table,
     link_mentions,
     link_score_histogram,
-    resolve_strategy,
+    rank_candidates,
 )
 
 
@@ -29,26 +28,10 @@ def _rows(df):
 
 
 def test_strategies_agree(spark, mentions):
-    alias = discovered_alias_table(mentions).cache()
-    got = {
-        s: _rows(link_mentions(mentions, alias, strategy=s, salt=4))
-        for s in ("broadcast", "salted", "shuffle")
-    }
-    assert got["broadcast"] == got["salted"] == got["shuffle"]
-    assert len(got["broadcast"]) == mentions.count()  # 1 row per mention
-    # auto picks by alias cardinality and must agree row-for-row too
-    assert _rows(link_mentions(mentions, alias, strategy="auto")) == got["broadcast"]
-
-
-def test_auto_strategy_cutover():
-    """Below the broadcast ceiling → broadcast; a web-scale discovered
-    alias table → salted (VERDICT round-1 watch-item)."""
-    assert resolve_strategy(10_000) == "broadcast"
-    assert resolve_strategy(BROADCAST_MAX_ALIAS_ROWS) == "broadcast"
-    assert resolve_strategy(BROADCAST_MAX_ALIAS_ROWS + 1) == "salted"
-    assert resolve_strategy(200_000_000) == "salted"
-    # threshold override
-    assert resolve_strategy(100, broadcast_max_rows=10) == "salted"
+    ranked = rank_candidates(discovered_alias_table(mentions)).cache()
+    bcast = _rows(link_mentions(mentions, ranked))
+    assert _rows(link_mentions(mentions, ranked, salted=True)) == bcast
+    assert len(bcast) == mentions.count()  # 1 row per mention
 
 
 def test_ambiguous_alias_ranked_deterministically(spark):
@@ -60,7 +43,7 @@ def test_ambiguous_alias_ranked_deterministically(spark):
          ("apple", "unigram", "ent:apple_inc", 0.9),
          ("apple", "unigram", "ent:apple_other", 0.2)],
         "surface string, kind string, entity_id string, prior double")
-    got = link_mentions(m, alias).collect()
+    got = link_mentions(m, rank_candidates(alias)).collect()
     assert len(got) == 1
     # score tie → lexicographic entity_id wins
     assert got[0].entity_id == "ent:apple_fruit"
@@ -74,12 +57,12 @@ def test_unknown_surface_drops(spark):
     alias = spark.createDataFrame(
         [("aaa", "unigram", "ent:aaa", 1.0)],
         "surface string, kind string, entity_id string, prior double")
-    assert link_mentions(m, alias).count() == 0
+    assert link_mentions(m, rank_candidates(alias)).count() == 0
 
 
 def test_histogram_buckets(spark, mentions):
-    alias = discovered_alias_table(mentions)
-    linked = link_mentions(mentions, alias)
+    linked = link_mentions(
+        mentions, rank_candidates(discovered_alias_table(mentions)))
     hist = {r.score_bucket: r.n for r in link_score_histogram(linked).collect()}
     assert sum(hist.values()) == linked.count()
     assert set(hist) == {9}  # all exact matches → top bucket
@@ -114,10 +97,7 @@ def test_entities_preagg_equals_reference_shape(spark):
     build_entities over the per-occurrence linked stream."""
     from kgraphmemory_spark.operators.cc import canonical_mapping
     from kgraphmemory_spark.operators.extraction import extract_docs
-    from kgraphmemory_spark.operators.linking import (
-        discovered_alias_from_docs,
-        rank_candidates,
-    )
+    from kgraphmemory_spark.operators.linking import discovered_alias_from_docs
     from kgraphmemory_spark.operators.materialize import (
         build_entities,
         build_entities_preagg,
@@ -130,7 +110,7 @@ def test_entities_preagg_equals_reference_shape(spark):
     ranked = rank_candidates(alias)
     canonical = canonical_mapping(
         ranked.select("entity_id").distinct(), same_as_edges(spark)).cache()
-    linked = link_mentions(m, alias, strategy="broadcast")
+    linked = link_mentions(m, ranked)
     lc = linked.join(F.broadcast(canonical), "entity_id")
     ref = {tuple(r) for r in build_entities(lc).collect()}
     fast = {tuple(r) for r in
@@ -139,29 +119,21 @@ def test_entities_preagg_equals_reference_shape(spark):
 
 
 def test_auto_cutover_picks_salted_above_threshold(spark):
-    """resolve_strategy flips to salted past the broadcast ceiling, and the
-    salted join over a supra-threshold synthetic alias table (Zipf-headed
-    mention stream) emits exactly one row per mention, identical to the
+    """The salted plan the pipeline picks past the broadcast ceiling
+    (tests/test_pipeline_e2e.py drives that cutover end to end), over a
+    supra-threshold synthetic alias table with a Zipf-headed mention
+    stream, emits exactly one row per mention, identical to the
     broadcast plan's rows."""
     from pyspark.sql import functions as F
 
     from kgraphmemory_spark.datagen import synthetic_alias_and_mentions
-    from kgraphmemory_spark.operators.linking import (
-        BROADCAST_MAX_ALIAS_ROWS,
-        link_mentions,
-        resolve_strategy,
-    )
-
-    assert resolve_strategy(BROADCAST_MAX_ALIAS_ROWS) == "broadcast"
-    assert resolve_strategy(BROADCAST_MAX_ALIAS_ROWS + 1) == "salted"
-    # scaled-down trigger point, same code path
-    assert resolve_strategy(50_001, broadcast_max_rows=50_000) == "salted"
 
     alias, mentions = synthetic_alias_and_mentions(
         spark, alias_rows=50_000, mention_rows=20_000, partitions=8)
-    salted = link_mentions(mentions, alias, strategy="salted")
+    ranked = rank_candidates(alias)
+    salted = link_mentions(mentions, ranked, salted=True)
     assert salted.count() == 20_000  # 1:1 — no dup, no drop, head keys incl.
-    bcast = link_mentions(mentions, alias, strategy="broadcast")
+    bcast = link_mentions(mentions, ranked)
     assert salted.exceptAll(bcast).count() == 0
     assert bcast.exceptAll(salted).count() == 0
     # the head keys really are skewed (the shape salting exists for)

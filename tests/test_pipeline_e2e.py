@@ -6,6 +6,9 @@ import pytest
 from kgraphmemory_spark import datagen, semantics
 from kgraphmemory_spark.pipeline import run_pipeline
 
+GRAPH_TABLES = ("canonical", "entities", "relations", "frames", "slots",
+                "triples", "provenance")
+
 
 @pytest.fixture(scope="module")
 def corpus(spark):
@@ -83,21 +86,44 @@ def test_frame_uris_match_oracle(corpus):
     assert got == want  # sha-derived ids identical across engines
 
 
-def test_salted_no_broadcast_path_equals_broadcast(spark):
-    """link_strategy='salted' links through the salted skew join instead
-    of the broadcast alias table (the >5M-alias web-corpus regime); the
-    vocab-table broadcasts in the entity/relation builds follow the
-    vocabulary size, not the link strategy, so a small corpus keeps them.
-    Every materialized table must still equal the broadcast-path output."""
-    from kgraphmemory_spark import datagen
-    from kgraphmemory_spark.pipeline import run_pipeline
+DOCAGG_BUILDERS = ("canonical_mapping_local", "build_entities_docagg",
+                   "build_relations_docagg", "extract_provenance_docagg")
+BUILDERS = ("link_mentions", "canonical_mapping", "build_entities_preagg",
+            "build_relations", "build_provenance") + DOCAGG_BUILDERS
+
+
+def test_past_the_broadcast_ceiling_end_to_end(spark, monkeypatch):
+    """An alias table past BROADCAST_MAX_ALIAS_ROWS (and the doc-aggregate
+    ceiling) is the open-vocabulary web regime: linking takes the salted
+    join, the entity and relation builds drop their vocabulary broadcasts,
+    canonicalization and provenance take the DataFrame paths.  Lowering
+    the two ceilings alone must switch every one of those plans, and
+    every graph table must equal the default build's."""
+    from kgraphmemory_spark import pipeline
     pages = datagen.generate_pages(spark, 50, seed=11)
-    a = run_pipeline(spark, pages, link_strategy="broadcast",
-                     cache_intermediates=False)
-    b = run_pipeline(spark, pages, link_strategy="salted",
-                     cache_intermediates=False)
-    for name in ("entities", "relations", "triples", "provenance"):
-        ra = {tuple(r) for r in getattr(a, name).collect()}
-        rb = {tuple(r) for r in getattr(b, name).collect()}
-        assert ra == rb, name
-        assert len(ra) > 0, name
+    default = run_pipeline(spark, pages)
+    want = {name: sorted(tuple(r) for r in getattr(default, name).collect())
+            for name in GRAPH_TABLES}
+
+    calls: dict[str, dict] = {}
+
+    def wrap(name, orig):
+        def recorded(*args, **kwargs):
+            calls[name] = kwargs
+            return orig(*args, **kwargs)
+        return recorded
+
+    for name in BUILDERS:
+        monkeypatch.setattr(pipeline, name, wrap(name, getattr(pipeline, name)))
+    monkeypatch.setattr(pipeline, "BROADCAST_MAX_ALIAS_ROWS", 0)
+    monkeypatch.setattr(pipeline, "RELATIONS_DOCAGG_MAX_VOCAB", 0)
+    big = pipeline.run_pipeline(spark, pages)
+    for name in GRAPH_TABLES:
+        got = sorted(tuple(r) for r in getattr(big, name).collect())
+        assert got == want[name] and got, name
+
+    assert calls["link_mentions"].get("salted") is True
+    assert calls["build_entities_preagg"].get("broadcast_alias") is False
+    assert calls["build_relations"].get("broadcast_canonical") is False
+    assert {"canonical_mapping", "build_provenance"} <= set(calls)
+    assert not set(calls) & set(DOCAGG_BUILDERS)

@@ -107,11 +107,12 @@ def test_provenance_fastpath_equals_shuffle_path(docs, canonical, spark):
     from kgraphmemory_spark.operators.linking import (
         discovered_alias_from_docs,
         link_mentions,
+        rank_candidates,
     )
     from kgraphmemory_spark.operators.materialize import build_provenance
 
-    alias = discovered_alias_from_docs(docs)
-    linked = link_mentions(extract_mentions(docs), alias)
+    ranked = rank_candidates(discovered_alias_from_docs(docs))
+    linked = link_mentions(extract_mentions(docs), ranked)
     lc = linked.join(canonical, "entity_id")
     slow = build_provenance(lc, extract_raw_triples(docs))
     cmap = {r.entity_id: r.canonical_id for r in canonical.collect()}
@@ -150,13 +151,12 @@ def test_provenance_fastpath_counts_bigrams(spark):
         "url string, warc_ts timestamp, html binary, text string, "
         "lang string")
     docs = extract_docs(pages)
-    alias = discovered_alias_from_docs(docs)
-    ids = [r.entity_id for r in
-           rank_candidates(alias).select("entity_id").collect()]
+    ranked = rank_candidates(discovered_alias_from_docs(docs))
+    ids = [r.entity_id for r in ranked.select("entity_id").collect()]
     cmap = dict(semantics.canonical_map(set(ids)).items())
     canonical = spark.createDataFrame(
         sorted(cmap.items()), "entity_id string, canonical_id string")
-    linked = link_mentions(extract_mentions(docs), alias)
+    linked = link_mentions(extract_mentions(docs), ranked)
     lc = linked.join(canonical, "entity_id")
     slow = build_provenance(lc, extract_raw_triples(docs))
     fast = extract_provenance_docagg(extract_docagg(docs, cmap))
@@ -177,7 +177,7 @@ def test_pipeline_provenance_matches_slow_path(spark):
     from kgraphmemory_spark.operators.materialize import build_provenance
     from kgraphmemory_spark.pipeline import run_pipeline
     pages = datagen.generate_pages(spark, 80, seed=23)
-    kg = run_pipeline(spark, pages, cache_intermediates=False)
+    kg = run_pipeline(spark, pages)
     slow = build_provenance(kg.linked, kg.raw_triples)
     assert sorted(tuple(r) for r in kg.provenance.collect()) == \
         sorted(tuple(r) for r in slow.collect())
@@ -300,7 +300,7 @@ def test_fastpaths_random_corpus_differential(spark, seed, max_batch):
         assert rows_of(build_entities_docagg(docagg)) == \
             rows_of(build_entities_preagg(
                 extract_mentions(docs), ranked, canonical))
-        lc = link_mentions(extract_mentions(docs), alias).join(
+        lc = link_mentions(extract_mentions(docs), ranked).join(
             canonical, "entity_id")
         assert rows_of(extract_provenance_docagg(docagg)) == \
             rows_of(build_provenance(lc, extract_raw_triples(docs)))
@@ -314,9 +314,9 @@ def test_docagg_bytes_cutover_falls_back(spark, monkeypatch):
     the open-vocabulary shuffle paths — identical rows."""
     from kgraphmemory_spark import datagen, pipeline
     pages = datagen.generate_pages(spark, 50, seed=7)
-    fast = pipeline.run_pipeline(spark, pages, cache_intermediates=False)
+    fast = pipeline.run_pipeline(spark, pages)
     monkeypatch.setattr(pipeline, "RELATIONS_DOCAGG_MAX_BYTES", 1)
-    slow = pipeline.run_pipeline(spark, pages, cache_intermediates=False)
+    slow = pipeline.run_pipeline(spark, pages)
     for name in ("relations", "entities", "provenance", "canonical",
                  "triples"):
         assert sorted(tuple(r) for r in getattr(fast, name).collect()) == \

@@ -93,9 +93,6 @@ def test_replay_is_idempotent(spark, streamed):
     docs_dir = _stream_dir(workdir, "docs_clean")
     dup = spark.read.parquet(docs_dir).where(F.col("_epoch") == 0)
     dup.write.mode("append").parquet(docs_dir)
-    men_dir = _stream_dir(workdir, "mentions")
-    spark.read.parquet(men_dir).where(F.col("_epoch") == 0) \
-        .write.mode("append").parquet(men_dir)
 
     import glob
     import shutil
@@ -132,12 +129,12 @@ def test_incremental_new_files(spark, streamed):
 
 def test_incremental_finalize_equals_batch_over_three_batches(
         spark, tmp_path):
-    """finalize_incremental after EACH micro-batch: generation k's
-    canonical map is generation k-1's merged via delta-CC (marker
-    asserted), and the final tables equal the batch pipeline over all
-    pages accumulated so far — at every generation."""
-    from kgraphmemory_spark.streaming.incremental import finalize_incremental
-
+    """finalize after EACH micro-batch: every call over a grown
+    accumulation builds afresh (its snapshot catalog is keyed by the
+    accumulation fingerprint, so it cannot short-circuit on an earlier
+    call's manifests) and equals the batch pipeline over all pages
+    accumulated so far; a repeated call over the same accumulation
+    resumes every stage."""
     input_dir = str(tmp_path / "pages_in")
     workdir = str(tmp_path / "work")
     rows = datagen.generate_pages_rows(45, seed=11)
@@ -150,69 +147,44 @@ def test_incremental_finalize_equals_batch_over_three_batches(
             .coalesce(1).write.mode("append").parquet(input_dir)
         assert ingest_stream(spark, input_dir, workdir,
                              max_files_per_trigger=1) >= 1
-        kg_inc = finalize_incremental(spark, workdir)
-        if k == 0:
-            assert kg_inc.stages_resumed == []
-        else:
-            assert "canonical_map:delta" in kg_inc.stages_resumed
+        kg_inc = finalize(spark, workdir)
+        assert kg_inc.stages_resumed == []
         kg_batch = run_pipeline(
             spark, spark.createDataFrame(seen, schema=datagen.PAGE_SCHEMA))
         for name in GRAPH_TABLES:
             s = {tuple(r) for r in getattr(kg_inc, name).collect()}
             b = {tuple(r) for r in getattr(kg_batch, name).collect()}
             assert s == b, (k, name)
+    assert len(finalize(spark, workdir).stages_resumed) == 12
 
 
-def test_finalize_recomputes_after_more_batches(spark, tmp_path):
-    """finalize → ingest more → finalize again must reflect the grown
-    accumulation (the snapshot catalog is keyed by the accumulation
-    fingerprint, so the second call cannot short-circuit on the first
-    call's committed manifests)."""
+@pytest.mark.parametrize("path", ["docagg", "shuffle"])
+def test_recrawled_url_keeps_only_its_newest_epoch(
+        spark, tmp_path, monkeypatch, path):
+    """A url re-crawled in a later micro-batch contributes only its newest
+    text: after each ingest, finalize's mentions, raw triples and graph
+    tables equal the batch pipeline over the newest page of every url —
+    on the doc-aggregate paths and on the shuffle paths."""
+    from kgraphmemory_spark import pipeline
+    if path == "shuffle":
+        monkeypatch.setattr(pipeline, "RELATIONS_DOCAGG_MAX_VOCAB", 0)
     input_dir = str(tmp_path / "pages_in")
     workdir = str(tmp_path / "work")
-    rows = datagen.generate_pages_rows(30, seed=21)
-    spark.createDataFrame(rows[:15], schema=datagen.PAGE_SCHEMA) \
-        .coalesce(1).write.mode("append").parquet(input_dir)
-    ingest_stream(spark, input_dir, workdir)
-    kg1 = finalize(spark, workdir)
-    n1 = kg1.entities.count()
-    spark.createDataFrame(rows[15:], schema=datagen.PAGE_SCHEMA) \
-        .coalesce(1).write.mode("append").parquet(input_dir)
-    ingest_stream(spark, input_dir, workdir)
-    kg2 = finalize(spark, workdir)
-    batch = run_pipeline(
-        spark, spark.createDataFrame(rows, schema=datagen.PAGE_SCHEMA))
-    s = {tuple(r) for r in kg2.entities.collect()}
-    b = {tuple(r) for r in batch.entities.collect()}
-    assert s == b and len(s) >= n1
-
-
-def test_incremental_skips_crashed_generation(spark, tmp_path):
-    """A generation directory whose canonical_map never committed (run
-    died mid-finalize) must be neither resumed nor used as the delta
-    predecessor — the next call starts a fresh generation and still
-    equals batch."""
-    import os
-
-    from kgraphmemory_spark.streaming.incremental import finalize_incremental
-
-    input_dir = str(tmp_path / "pages_in")
-    workdir = str(tmp_path / "work")
-    rows = datagen.generate_pages_rows(30, seed=31)
-    spark.createDataFrame(rows[:15], schema=datagen.PAGE_SCHEMA) \
-        .coalesce(1).write.mode("append").parquet(input_dir)
-    ingest_stream(spark, input_dir, workdir)
-    finalize_incremental(spark, workdir)                  # committed gen 0
-    # simulate a crash mid-generation: the dir exists, nothing committed
-    os.makedirs(os.path.join(workdir, "final_v1", "alias_table"))
-    spark.createDataFrame(rows[15:], schema=datagen.PAGE_SCHEMA) \
-        .coalesce(1).write.mode("append").parquet(input_dir)
-    ingest_stream(spark, input_dir, workdir)
-    kg = finalize_incremental(spark, workdir)             # → fresh gen 2
-    assert "canonical_map:delta" in kg.stages_resumed     # delta from v0
-    assert os.path.isdir(os.path.join(workdir, "final_v2"))
-    batch = run_pipeline(
-        spark, spark.createDataFrame(rows, schema=datagen.PAGE_SCHEMA))
-    s = {tuple(r) for r in kg.relations.collect()}
-    b = {tuple(r) for r in batch.relations.collect()}
-    assert s == b
+    epochs = [
+        [("u1", None, None, "group agg hash join table scan", "en"),
+         ("u2", None, None, "sort order row line", "en")],
+        [("u1", None, None, "group by", "en")],
+    ]
+    newest = {}
+    for pages in epochs:
+        spark.createDataFrame(pages, schema=datagen.PAGE_SCHEMA) \
+            .coalesce(1).write.mode("append").parquet(input_dir)
+        ingest_stream(spark, input_dir, workdir)
+        kg = finalize(spark, workdir)
+        newest.update((p[0], p) for p in pages)
+        batch = run_pipeline(spark, spark.createDataFrame(
+            list(newest.values()), schema=datagen.PAGE_SCHEMA))
+        for name in ("mentions", "raw_triples") + GRAPH_TABLES:
+            got = sorted(tuple(r) for r in getattr(kg, name).collect())
+            want = sorted(tuple(r) for r in getattr(batch, name).collect())
+            assert got == want, (len(newest), name)

@@ -11,7 +11,7 @@ import zipfile
 
 import pytest
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _spark_submit() -> str | None:
@@ -49,12 +49,16 @@ def test_spark_submit_pyfiles_roundtrip(tmp_path):
         "--py-files", str(zpath),
         os.path.join(REPO, "jobs", "run_pipeline.py"),
         "--input", "unused", "--synthetic-pages", "300",
-        "--workdir", workdir, "--link-strategy", "salted",
+        "--workdir", workdir,
         "--graph-tables-out", str(tmp_path / "graph"), "--graph-buckets", "8",
     ]
     env = {**os.environ, "PYSPARK_PYTHON": sys.executable,
-           "PYSPARK_DRIVER_PYTHON": sys.executable}
-    # run from a neutral cwd so only --py-files provides the package
+           "PYSPARK_DRIVER_PYTHON": sys.executable,
+           "PYTHONPATH": os.pathsep.join(
+               p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep)
+               if p and p != REPO)}
+    # run from a neutral cwd, with the checkout off PYTHONPATH
+    # (conftest puts it there), so only --py-files provides the package
     r1 = subprocess.run(cmd, capture_output=True, text=True, timeout=600,
                         cwd=str(tmp_path), env=env)
     assert r1.returncode == 0, r1.stderr[-4000:]

@@ -12,10 +12,11 @@ Usage: python tools/bench_ntload.py [n_triples] [cores]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 N = int(sys.argv[1]) if len(sys.argv) > 1 else 20_000_000
 CORES = int(sys.argv[2]) if len(sys.argv) > 2 else 16

@@ -16,10 +16,12 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 
@@ -124,7 +126,7 @@ def main() -> None:
         for p in [p for p in pushed if p.strip()][:4]:
             out.append(f"- pushed: `{p.strip()[:120]}`")
         out.append("")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out) + "\n")
     print("wrote PLANS.md")
     spark.stop()

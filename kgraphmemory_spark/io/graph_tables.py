@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .snapshots import key_bucket
+from .snapshots import _observe_count, key_bucket
 
 # key column per graph table (entity-keyed tables use the canonical id;
 # frames/slots key by their frame so a frame's slots co-locate)
@@ -47,16 +47,17 @@ def write_graph_tables(kg, root: str, buckets: int = 64) -> dict[str, int]:
     counts: dict[str, int] = {}
     for table, key in GRAPH_TABLE_KEYS.items():
         df: DataFrame = getattr(kg, table)
-        out = df.withColumn("id_bucket", key_bucket(key, buckets))
         # one shuffle keyed by the partition dir → each task owns whole
-        # buckets, so files-per-bucket stays bounded
-        (out.repartition(min(buckets, 64), "id_bucket")
-            .write.mode("overwrite").partitionBy("id_bucket")
-            .parquet(f"{root}/{table}"))
-        # count the just-written parquet (footer metadata, near-free) —
-        # counting df would re-run its whole upstream plan a second time
-        counts[table] = df.sparkSession.read.parquet(
-            f"{root}/{table}").count()
+        # buckets, so files-per-bucket stays bounded.  Rows are observed
+        # on the write itself: counting df would re-run its whole upstream
+        # plan, and counting the written parquet costs a schema-inference
+        # job plus a count job
+        out, rows = _observe_count(
+            df.withColumn("id_bucket", key_bucket(key, buckets))
+            .repartition(min(buckets, 64), "id_bucket"))
+        out.write.mode("overwrite").partitionBy("id_bucket") \
+            .parquet(f"{root}/{table}")
+        counts[table] = rows.get["n"]
     return counts
 
 

@@ -3,7 +3,8 @@ fallback (the sandbox has no Iceberg jars; the interface is the contract).
 
 Every pipeline stage commits atomically, executing its plan once:
 1. write data parquet under   <root>/<stage>/data/ — the only run of the
-   stage plan; an ``Observation`` on that write counts its rows;
+   stage plan; an ``Observation`` on that write counts its rows, plus any
+   extra named aggregates the caller asks for (``observe=``);
 2. aggregate lineage over the committed snapshot read back from disk and
    write it under <root>/<stage>/lineage/ (per-partition rows: url-bucket,
    counts, optional link-score histogram json), counted the same way;
@@ -11,8 +12,12 @@ Every pipeline stage commits atomically, executing its plan once:
 
 Resume: a stage whose manifest exists is read back, not recomputed — a
 killed run therefore never reprocesses committed work (north rule:
-"resumes from the last committed snapshot").  Manifests carry row counts +
-schema for audit, plus the BACKEND the stage data actually lives in.
+"resumes from the last committed snapshot").  Manifests carry the row
+count, the ``observed`` aggregates and the schema, plus the BACKEND the
+stage data actually lives in.  Parquet snapshots are read back by schema
+— the written DataFrame's in ``commit``, the manifest's on resume — so
+neither read starts Spark's footer-reading schema-inference job, and a
+resume-load of a whole graph starts no Spark job at all.
 
 Iceberg adoption (round 4, SURVEY §7.1): when (a) the Iceberg Spark
 runtime is on the classpath AND (b) a catalog name is configured
@@ -37,6 +42,7 @@ import time
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST = "_MANIFEST.json"
 
@@ -62,11 +68,14 @@ def _iceberg_catalog(spark: SparkSession) -> str | None:
     return name if iceberg_available(spark) else None
 
 
-def _observe_count(df: DataFrame) -> tuple[DataFrame, Observation]:
-    """``df`` counting its rows as a side effect of the action that runs
-    it: ``obs.get["n"]`` after that action, with no extra job."""
+def _observe_count(df: DataFrame,
+                   *aggs: Column) -> tuple[DataFrame, Observation]:
+    """``df`` counting its rows — and computing the named aggregates
+    ``aggs`` — as a side effect of the action that runs it:
+    ``obs.get["n"]`` (and ``obs.get[<alias>]``) after that action, with no
+    extra job."""
     obs = Observation()
-    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
+    return df.observe(obs, F.count(F.lit(1)).alias("n"), *aggs), obs
 
 
 class SnapshotCatalog:
@@ -96,33 +105,41 @@ class SnapshotCatalog:
         return f"{catalog}.{self.namespace}.{stage}"
 
     def read(self, spark: SparkSession, stage: str) -> DataFrame:
-        if self.committed(stage):
-            man = self.manifest(stage)
-            if man.get("backend") == "iceberg":
-                return spark.table(man["table"])
-        return spark.read.parquet(os.path.join(self._dir(stage), "data"))
+        """A stage's data; committed parquet is read with the manifest's
+        schema, so the read starts no schema-inference job."""
+        path = os.path.join(self._dir(stage), "data")
+        if not self.committed(stage):
+            return spark.read.parquet(path)
+        man = self.manifest(stage)
+        if man.get("backend") == "iceberg":
+            return spark.table(man["table"])
+        schema = StructType.fromJson(json.loads(man["schema"]))
+        return spark.read.schema(schema).parquet(path)
 
     def read_lineage(self, spark: SparkSession, stage: str) -> DataFrame:
         return spark.read.parquet(os.path.join(self._dir(stage), "lineage"))
 
     def commit(self, stage: str, df: DataFrame,
-               lineage_of=None) -> DataFrame:
+               lineage_of=None, observe=()) -> DataFrame:
         """Write + manifest-commit a stage; returns the re-read DataFrame
         (reading back pins the stage output — downstream plans scan parquet
-        instead of recomputing the whole upstream lineage).
+        instead of recomputing the whole upstream lineage).  Parquet is
+        read back with ``df``'s schema, which skips schema inference.
 
         ``df``'s plan runs exactly once, in the data write; the manifest's
-        ``rows`` is observed on that write.  ``lineage_of(out)``, when
-        given, aggregates lineage over the read-back snapshot — the rows
-        actually on disk — and its row count is observed on its write;
-        it may return None for a stage without lineage."""
+        ``rows`` is observed on that write, and so is each named aggregate
+        in ``observe`` (aliased Columns), recorded under ``observed``.
+        ``lineage_of(out)``, when given, aggregates lineage over the
+        read-back snapshot — the rows actually on disk — and its row count
+        is observed on its write; it may return None for a stage without
+        lineage."""
         d = self._dir(stage)
         if os.path.exists(d):
             shutil.rmtree(d)
         os.makedirs(d, exist_ok=True)
         spark = df.sparkSession
         catalog = _iceberg_catalog(spark)
-        df, rows = _observe_count(df)
+        df, obs = _observe_count(df, *observe)
         if catalog is not None:
             table = self._table(catalog, stage)
             spark.sql(f"CREATE NAMESPACE IF NOT EXISTS "
@@ -131,16 +148,18 @@ class SnapshotCatalog:
             out = spark.table(table)
         else:
             df.write.mode("overwrite").parquet(os.path.join(d, "data"))
-            out = spark.read.parquet(os.path.join(d, "data"))
+            out = spark.read.schema(df.schema).parquet(os.path.join(d, "data"))
         lineage = lineage_of(out) if lineage_of is not None else None
         n_lineage = 0
         if lineage is not None:
             lineage, lin_rows = _observe_count(lineage)
             lineage.write.mode("overwrite").parquet(os.path.join(d, "lineage"))
             n_lineage = lin_rows.get["n"]
+        observed = obs.get
         man = {
             "stage": stage,
-            "rows": rows.get["n"],
+            "rows": observed.pop("n"),
+            "observed": observed,
             "lineage_rows": n_lineage,
             "schema": out.schema.json(),
             "committed_at_epoch": int(time.time()),
@@ -156,13 +175,15 @@ class SnapshotCatalog:
         return out
 
     def stage(self, spark: SparkSession, name: str, build,
-              lineage_of=None) -> DataFrame:
+              lineage_of=None, observe=()) -> DataFrame:
         """Resume-or-build: committed stages load from parquet; otherwise
         `build()` runs and the result is committed, with optional lineage
-        derived by `lineage_of` from the committed snapshot (``commit``)."""
+        derived by `lineage_of` from the committed snapshot and the
+        ``observe`` aggregates recorded in the manifest (``commit``)."""
         if self.committed(name):
             return self.read(spark, name)
-        return self.commit(name, build(), lineage_of=lineage_of)
+        return self.commit(name, build(), lineage_of=lineage_of,
+                           observe=observe)
 
 
 def key_bucket(key: str | Column, buckets: int = 64) -> Column:

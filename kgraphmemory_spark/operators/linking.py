@@ -17,7 +17,11 @@ Ranking (SURVEY.md §2.5 W2): best candidate per mention — semantics of
 row_number() over (url,pos,kind) ordered by (score desc, entity_id) == 1,
 the reference's take-first-hit loop (kginteraction_graph.py:97-126) —
 implemented as a hash aggregate (min over struct) rather than a window
-sort; see rank_candidates.
+sort; see rank_candidates.  The pipeline's ``alias_table`` stage commits
+this ranked table, (surface, kind, entity_id, link_score): for discovered
+aliases it holds the discovered rows with ``prior`` renamed
+``link_score``.  Its manifest records the row count and Σ entity-id bytes
+that pick the plans above.
 """
 
 from __future__ import annotations

@@ -8,7 +8,9 @@ Two execution modes:
   ``queries()`` and for small inputs;
 - checkpointed (``workdir=...``): every stage commits an atomic snapshot +
   per-url-bucket lineage rows via SnapshotCatalog; a rerun resumes from the
-  last committed stage (tests/test_resume.py kills between stages).
+  last committed stage (tests/test_resume.py kills between stages).  A
+  rerun over a finished build starts no Spark job: snapshots are read by
+  their recorded schema, and the plan probe comes from the manifest.
 
 Every transform is a pure function of committed inputs and deterministic
 ids, so resume is idempotent by construction.  Every stage is
@@ -57,7 +59,7 @@ from .operators.materialize import (
 # cutover is row- AND bytes-aware (same discipline as the CC driver
 # cutover, operators/cc.py): entity ids are arbitrary URI strings, so a
 # row cap alone could collect a multi-GB dict when ids are long — the
-# ranked-count job also sums id bytes and the fast paths additionally
+# alias-table probe also sums id bytes and the fast paths additionally
 # require ≤ RELATIONS_DOCAGG_MAX_BYTES of raw id text (×2 for the
 # canonical values; Python-object overhead on top is bounded by the
 # same constant factor the CC cutover budgets for).
@@ -99,12 +101,13 @@ def same_as_edges(spark: SparkSession) -> DataFrame:
 
 def _stager(spark: SparkSession, cat: SnapshotCatalog | None,
             resumed: list[str]):
-    """→ ``stage(name, build, lineage_extra=None)``: in memory (``cat``
-    None) build and cache all but the wide fan-out stages; checkpointed,
-    resume a committed stage (named on ``resumed``) or build and commit."""
+    """→ ``stage(name, build, lineage_extra=None, observe=())``: in memory
+    (``cat`` None) build and cache all but the wide fan-out stages;
+    checkpointed, resume a committed stage (named on ``resumed``) or build
+    and commit it, recording the ``observe`` aggregates in its manifest."""
     no_cache = {"mentions", "raw_triples", "linked"}
 
-    def stage(name: str, build, lineage_extra=None) -> DataFrame:
+    def stage(name: str, build, lineage_extra=None, observe=()) -> DataFrame:
         if cat is None:
             df = build()
             return df if name in no_cache else df.cache()
@@ -122,7 +125,8 @@ def _stager(spark: SparkSession, cat: SnapshotCatalog | None,
                 return None
             return lineage_by_url(df, name, extra_aggs=lineage_extra)
 
-        return cat.stage(spark, name, build, lineage_of=_lineage)
+        return cat.stage(spark, name, build, lineage_of=_lineage,
+                         observe=observe)
 
     return stage
 
@@ -136,19 +140,23 @@ def run_pipeline(
     """``workdir`` set → every stage is an atomic parquet snapshot (the
     scale path: stage outputs are re-read from disk, lineage truncated).
 
-    NOT fully lazy: construction always materializes the ranked alias
-    table (cache/localCheckpoint + one count job at call time) — its
-    cardinality picks every plan below, so a pipeline cannot be built
-    before its input data exists.
+    Checkpointed construction commits every stage at call time; over a
+    finished build it resumes every stage and starts no Spark job.  The
+    plan probe — the ranked alias table's row count and Σ id bytes,
+    which pick every plan below — is observed on the ``alias_table``
+    commit and read from its manifest.
 
-    ``workdir=None`` → everything else stays one lazy DAG that caches
-    the SMALL stages only (docs_clean — the pandas-UDF product — the
-    ranked alias table, and the aggregated graph tables).  The wide
-    fan-out stages (mentions, raw_triples, linked: ~100 rows per doc)
-    are deliberately NOT cached: they are cheap map-side derivations of
-    cached docs_clean, and filling a columnar cache with 10^2×docs rows
-    costs far more than the 1-2 rescans that consume them (measured:
-    25-70 s fill vs 2 s scan at 250k docs / 19M mentions)."""
+    ``workdir=None`` → NOT fully lazy either: construction caches the
+    ranked alias table and probes it with one aggregate job at call
+    time, so a pipeline cannot be built before its input data exists.
+    Everything else stays one lazy DAG that caches the SMALL stages only
+    (docs_clean — the pandas-UDF product — the ranked alias table, and
+    the aggregated graph tables).  The wide fan-out stages (mentions,
+    raw_triples, linked: ~100 rows per doc) are deliberately NOT cached:
+    they are cheap map-side derivations of cached docs_clean, and filling
+    a columnar cache with 10^2×docs rows costs far more than the 1-2
+    rescans that consume them (measured: 25-70 s fill vs 2 s scan at
+    250k docs / 19M mentions)."""
     cat = SnapshotCatalog(workdir) if workdir else None
     return build_graph(spark, cat, lambda: extract_docs(pages), graph)
 
@@ -167,26 +175,34 @@ def build_graph(spark: SparkSession, cat: SnapshotCatalog | None,
     mentions = stage("mentions", lambda: extract_mentions(docs_clean))
     raw_triples = stage("raw_triples", lambda: extract_raw_triples(docs_clean))
 
-    # alias table: vocabulary-sized — committed as its own snapshot /
-    # cached, since both linking and canonicalization read it.  Discovered
-    # from per-doc token vocabularies (array_distinct before the explode),
-    # NOT from the 10^2×-wider per-occurrence mention rows; identical
-    # result (linking.discovered_alias_from_docs docstring + test).
-    alias = stage("alias_table", lambda: discovered_alias_from_docs(docs_clean))
-
-    # rank ONCE (cached in-memory / localCheckpointed otherwise) and probe
-    # its cardinality ONCE: past the broadcast ceiling the vocabulary
-    # tables are no longer broadcast anywhere — linking takes the salted
-    # join, and the entity/relation builds and linked_canonical drop
-    # their broadcast hints, or the driver OOMs.
-    ranked = rank_candidates(alias)
-    ranked = (ranked.cache() if cat is None
-              else ranked.localCheckpoint(eager=True))
-    size_row = ranked.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum(F.length("entity_id")), F.lit(0)).alias("b"),
-    ).collect()[0]
-    n_alias, alias_id_bytes = int(size_row["n"]), int(size_row["b"])
+    # alias table: the best candidate per (surface, kind), vocabulary-sized
+    # — committed as its own snapshot / cached, since linking, entities
+    # and canonicalization all read it.  Discovered from per-doc token
+    # vocabularies (array_distinct before the explode), NOT from the
+    # 10^2×-wider per-occurrence mention rows; identical result
+    # (linking.discovered_alias_from_docs docstring + test).
+    #
+    # Its size picks every plan below, so it is probed ONCE: checkpointed,
+    # the row count and Σ id bytes are observed on the commit's write and
+    # read from the manifest — just built or resumed alike, so a partial
+    # resume picks the same plans and a resume-load runs no probe job.
+    # Past the broadcast ceiling the vocabulary tables are no longer
+    # broadcast anywhere — linking takes the salted join, and the
+    # entity/relation builds and linked_canonical drop their broadcast
+    # hints, or the driver OOMs.
+    id_bytes = F.coalesce(F.sum(F.length("entity_id")), F.lit(0)) \
+        .alias("alias_id_bytes")
+    ranked = stage(
+        "alias_table",
+        lambda: rank_candidates(discovered_alias_from_docs(docs_clean)),
+        observe=(id_bytes,))
+    if cat is None:
+        probe = ranked.agg(F.count(F.lit(1)).alias("n"), id_bytes).collect()[0]
+        n_alias, alias_id_bytes = probe["n"], probe["alias_id_bytes"]
+    else:
+        probe = cat.manifest("alias_table")
+        n_alias = probe["rows"]
+        alias_id_bytes = probe["observed"]["alias_id_bytes"]
     broadcast_vocab = n_alias <= BROADCAST_MAX_ALIAS_ROWS
     use_docagg = (n_alias <= RELATIONS_DOCAGG_MAX_VOCAB
                   and 2 * alias_id_bytes <= RELATIONS_DOCAGG_MAX_BYTES)
@@ -207,10 +223,10 @@ def build_graph(spark: SparkSession, cat: SnapshotCatalog | None,
     def _canonical():
         # entity universe from the (vocabulary-sized) ranked alias table,
         # NOT from a distinct over per-mention rows.  n_alias is already
-        # known (the count above), so a tiny vocabulary takes the driver
-        # fast path — one collect over the cached ranked table instead of
-        # the DataFrame CC path's ~6 fixed-latency mini-jobs, which
-        # otherwise sit in the scaling run's serial floor.
+        # known (the probe above), so a tiny vocabulary takes the driver
+        # fast path — one collect over the ranked table instead of the
+        # DataFrame CC path's ~6 fixed-latency mini-jobs, which otherwise
+        # sit in the scaling run's serial floor.
         ents = ranked.select("entity_id").distinct()
         if use_docagg:
             ids = [r["entity_id"] for r in ents.collect()]
@@ -222,15 +238,14 @@ def build_graph(spark: SparkSession, cat: SnapshotCatalog | None,
     # vocabulary under the dict ceiling (rows AND bytes) → the canonical
     # map lives on the driver and unlocks the doc-aggregated fast paths
     # for entities, relations and provenance below.
-    cmap = ({r["entity_id"]: r["canonical_id"] for r in canonical.collect()}
-            if use_docagg else None)
-
     @functools.cache
     def docagg() -> DataFrame:
-        # the one kernel pass all three fast paths read, held like
-        # ``ranked`` but lazily: it runs inside the job of the first stage
-        # that needs it (entities, unless that stage resumed) and the
-        # later stages read its cached / local-checkpointed blocks
+        # the one kernel pass all three fast paths read, built lazily: the
+        # canonical dict is collected, and the pass runs inside the job of
+        # the first stage that needs it (entities, unless that stage
+        # resumed); later stages read its cached / local-checkpointed
+        # blocks.  A build whose three stages all resume collects nothing.
+        cmap = {r["entity_id"]: r["canonical_id"] for r in canonical.collect()}
         out = extract_docagg(docs_clean, cmap)
         return (out.cache() if cat is None
                 else out.localCheckpoint(eager=False))
@@ -252,7 +267,7 @@ def build_graph(spark: SparkSession, cat: SnapshotCatalog | None,
     # build_entities(linked_canonical) is the reference shape and remains
     # the oracle in tests
     def _entities() -> DataFrame:
-        if cmap is not None:
+        if use_docagg:
             return build_entities_docagg(docagg())
         return build_entities_preagg(
             mentions, ranked, canonical, broadcast_alias=broadcast_vocab)
@@ -269,7 +284,7 @@ def build_graph(spark: SparkSession, cat: SnapshotCatalog | None,
         # shuffled / ~1200 CPU-s at 2M pages; this path shuffles KBs.
         # Open vocabulary past the dict ceiling → the original
         # pre-aggregated shuffle path.
-        if cmap is not None:
+        if use_docagg:
             return build_relations_docagg(docagg())
         return build_relations(raw_triples, canonical,
                                broadcast_canonical=broadcast_vocab)
@@ -286,7 +301,7 @@ def build_graph(spark: SparkSession, cat: SnapshotCatalog | None,
         # doc-local fast path under the vocab ceiling (all three counts
         # of a url live in one docs_clean row — extract_docagg docstring);
         # open vocabulary → the keyed-aggregate shuffle path
-        if cmap is not None:
+        if use_docagg:
             return extract_provenance_docagg(docagg())
         return build_provenance(linked_canonical, raw_triples)
 

@@ -27,6 +27,7 @@ partitioned parquet (url-hash buckets) so finalize scans stay parallel.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -109,7 +110,16 @@ def finalize(spark: SparkSession, workdir: str) -> KGTables:
     pipeline over the newest page of every url.  The snapshot catalog is
     scoped to the current accumulation (``_accum_token``): a killed
     finalize resumes on the next call, and ingest-more-then-finalize-again
-    builds afresh instead of returning the previous cycle's tables."""
-    cat = SnapshotCatalog(os.path.join(
-        workdir, f"final_{_accum_token(spark, workdir)}"))
-    return build_graph(spark, cat, lambda: _accumulated_docs(spark, workdir))
+    builds afresh instead of returning the previous cycle's tables.
+
+    Once every stage of the current accumulation is committed, the
+    catalogs of older accumulations are deleted: no later call can read
+    them, so tables returned by an earlier finalize over a smaller
+    accumulation stop being readable."""
+    current = f"final_{_accum_token(spark, workdir)}"
+    cat = SnapshotCatalog(os.path.join(workdir, current))
+    kg = build_graph(spark, cat, lambda: _accumulated_docs(spark, workdir))
+    for name in os.listdir(workdir):
+        if name.startswith("final_") and name != current:
+            shutil.rmtree(os.path.join(workdir, name))
+    return kg

@@ -34,6 +34,43 @@ def test_full_resume_identical(spark, workdir):
     assert _rel_set(kg2) == first
 
 
+def _jobs_in_group(sc, group: str) -> int:
+    """Spark jobs started under ``group``, once the listener bus has
+    delivered every job-start event to the status store."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_resume_load_runs_no_spark_job(spark, workdir):
+    """Reopening a finished build reads every snapshot by its recorded
+    schema and takes the plan probe from the alias_table manifest: a
+    resume-load starts no Spark job at all."""
+    pages = datagen.generate_pages(spark, 30, seed=31)
+    run_pipeline(spark, pages, workdir=workdir)
+    sc = spark.sparkContext
+    sc.setJobGroup("kgm-test-resume-load", "resume-load")
+    try:
+        kg = run_pipeline(spark, pages, workdir=workdir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(kg.stages_resumed) == 12
+    assert _jobs_in_group(sc, "kgm-test-resume-load") == 0
+
+
+def test_commit_reads_back_without_a_job(spark, tmp_path):
+    """A commit without lineage is one job, the data write: the snapshot
+    is read back with the written schema, not by schema inference."""
+    cat = SnapshotCatalog(str(tmp_path / "snap"))
+    sc = spark.sparkContext
+    sc.setJobGroup("kgm-test-commit", "commit")
+    try:
+        out = cat.commit("s1", spark.range(10).selectExpr("id", "id * 2 AS v"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert _jobs_in_group(sc, "kgm-test-commit") == 1
+    assert out.schema.json() == cat.manifest("s1")["schema"]
+
+
 def test_partial_resume_after_kill(spark, workdir):
     """Simulate a kill after stage 3: later-stage snapshots missing →
     earlier stages must be reused, later recomputed, results identical."""
@@ -109,6 +146,28 @@ def test_lineage_rows_written(spark, built_catalog, stage):
     if stage == "linked":
         # link-score histogram metric present on the linked stage
         assert "score_histogram" in lin.columns
+
+
+def test_alias_manifest_records_the_plan_probe(spark, built_catalog):
+    """The alias_table manifest carries the plan probe (row count and Σ
+    entity-id bytes of the ranked table), equal to a recount over the
+    committed snapshot; every stage reads back with exactly the schema
+    its manifest records, which is the schema parquet inference gives."""
+    cat = built_catalog
+    man = cat.manifest("alias_table")
+    alias = cat.read(spark, "alias_table")
+    recount = alias.agg(F.count(F.lit(1)).alias("n"),
+                        F.sum(F.length("entity_id")).alias("b")).first()
+    assert man["rows"] == recount["n"] > 0
+    assert man["observed"] == {"alias_id_bytes": recount["b"]}
+    assert alias.columns == ["surface", "kind", "entity_id", "link_score"]
+    stages = sorted(os.listdir(cat.root))
+    assert len(stages) == 12
+    for stage in stages:
+        schema = cat.manifest(stage)["schema"]
+        inferred = spark.read.parquet(os.path.join(cat.root, stage, "data"))
+        assert cat.read(spark, stage).schema.json() == schema, stage
+        assert inferred.schema.json() == schema, stage
 
 
 def test_commit_runs_the_stage_plan_once(spark, tmp_path):

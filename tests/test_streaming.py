@@ -2,6 +2,8 @@
 finalize must reproduce the batch pipeline exactly, survive replays
 (idempotent dedup), and record per-batch lineage."""
 
+import glob
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -94,7 +96,6 @@ def test_replay_is_idempotent(spark, streamed):
     dup = spark.read.parquet(docs_dir).where(F.col("_epoch") == 0)
     dup.write.mode("append").parquet(docs_dir)
 
-    import glob
     import shutil
     for d in glob.glob(f"{workdir}/final_*"):  # drop finalize snapshots
         shutil.rmtree(d)                       # (token-keyed catalogs)
@@ -132,7 +133,8 @@ def test_incremental_finalize_equals_batch_over_three_batches(
     """finalize after EACH micro-batch: every call over a grown
     accumulation builds afresh (its snapshot catalog is keyed by the
     accumulation fingerprint, so it cannot short-circuit on an earlier
-    call's manifests) and equals the batch pipeline over all pages
+    call's manifests), deletes the older accumulation's catalog (no later
+    call can read it) and equals the batch pipeline over all pages
     accumulated so far; a repeated call over the same accumulation
     resumes every stage."""
     input_dir = str(tmp_path / "pages_in")
@@ -149,6 +151,7 @@ def test_incremental_finalize_equals_batch_over_three_batches(
                              max_files_per_trigger=1) >= 1
         kg_inc = finalize(spark, workdir)
         assert kg_inc.stages_resumed == []
+        assert len(glob.glob(f"{workdir}/final_*")) == 1
         kg_batch = run_pipeline(
             spark, spark.createDataFrame(seen, schema=datagen.PAGE_SCHEMA))
         for name in GRAPH_TABLES:

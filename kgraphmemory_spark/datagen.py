@@ -92,7 +92,8 @@ def generate_pages_distributed(spark: SparkSession, n_pages: int,
 
     Each partition derives its rows from (seed, global row index) only, so
     output is independent of ``partitions`` — deterministic at any
-    parallelism.  Used by bench.py for larger-than-driver corpora.
+    parallelism.  Used by jobs/run_pipeline.py for larger-than-driver
+    corpora.
     """
     import pandas as pd
 

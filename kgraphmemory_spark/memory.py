@@ -185,7 +185,7 @@ class KGraphMemory:
     search_across_kgraphs         ``search_across_graphs`` (ONE plan)
     sparql_query_across_kgraphs   ``sparql_query_across_graphs``
     get_embedding_model           ``embed_udf`` attribute (the pandas-UDF
-                                  seam, functions/embedding_models.py)
+                                  seam of ``build_vector_records``)
     update_default_vector_mappings ``default_vector_mappings`` attribute
     ============================  =====================================
     """

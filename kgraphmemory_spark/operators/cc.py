@@ -99,7 +99,7 @@ def connected_components(
     ``edges`` (symmetric-closure count), ``label_bytes`` and, on the
     distributed path, ``rounds`` — the observability hook the
     O(log n)-round claim is asserted against (tests/test_cc.py, bench.py
-    cc entry).
+    ``cc_distributed`` row).
     """
     # materialize the input once — all_nodes, the symmetric closure and the
     # first checkpoint otherwise each recompute the (possibly expensive)

@@ -139,9 +139,8 @@ def build_vector_records(objects: DataFrame, uri_col: str = "entity_id",
     constant — no join), then ONE batched embedding UDF pass.
 
     ``embed_udf`` swaps the embedding model (default: the deterministic
-    hash embedder).  Any ``vectorize(list[str])`` model plugs in via
-    ``functions.embedding_models.make_embed_udf`` — the reference's
-    pluggable EmbeddingModel seam (kgraph_vector_db.py:18-49).
+    hash embedder): any pandas UDF from text to ``array<float>`` — the
+    reference's pluggable EmbeddingModel seam (kgraph_vector_db.py:18-49).
     """
     embed_udf = embed_udf if embed_udf is not None else embed_text_udf
     mappings = mappings or ENTITY_VECTOR_MAPPINGS

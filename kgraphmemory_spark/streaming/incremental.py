@@ -54,6 +54,7 @@ def ingest_stream(spark: SparkSession, input_path: str, workdir: str,
     pages = reader.parquet(input_path)
 
     n_batches = {"n": 0}
+    os.makedirs(_stream_dir(workdir, "_epochs"), exist_ok=True)
 
     def process(batch: DataFrame, epoch_id: int) -> None:
         docs = extract_docs(batch).withColumn("_epoch", F.lit(epoch_id)).cache()
@@ -66,6 +67,10 @@ def ingest_stream(spark: SparkSession, input_path: str, workdir: str,
         ).withColumn("epoch", F.lit(epoch_id)) \
             .write.mode("append").parquet(_stream_dir(workdir, "lineage"))
         docs.unpersist()
+        # the epoch's marker, written after both appends: ``_accum_token``
+        # lists these instead of reading the lineage (a replay rewrites it)
+        open(os.path.join(_stream_dir(workdir, "_epochs"), str(epoch_id)),
+             "w").close()
         n_batches["n"] += 1
 
     q = (
@@ -89,18 +94,16 @@ def _accumulated_docs(spark: SparkSession, workdir: str) -> DataFrame:
     )
 
 
-def _accum_token(spark: SparkSession, workdir: str) -> str:
-    """Fingerprint of the accumulation state — (distinct epochs, max
-    epoch) from the per-batch lineage, one metadata-scale read.  Snapshot
-    catalogs are keyed by it, so a finalize over a GROWN accumulation
-    never short-circuits on manifests committed for an older one (the
-    stale-mix hazard), while a crash-resume over the SAME accumulation
-    still resumes.  Replayed micro-batches re-append the same epoch id,
-    so the token is replay-stable."""
-    row = spark.read.parquet(_stream_dir(workdir, "lineage")).agg(
-        F.count_distinct("epoch").alias("n"),
-        F.max("epoch").alias("mx")).collect()[0]
-    return f"e{int(row['n'])}_{int(row['mx'])}"
+def _accum_token(workdir: str) -> str:
+    """Fingerprint of the accumulation state — (epochs, max epoch) from
+    the per-epoch marker files, a directory listing that starts no Spark
+    job.  Snapshot catalogs are keyed by it, so a finalize over a GROWN
+    accumulation never short-circuits on manifests committed for an
+    older one (the stale-mix hazard), while a crash-resume over the SAME
+    accumulation still resumes.  A replayed micro-batch rewrites its
+    epoch's marker, so the token is replay-stable."""
+    epochs = [int(e) for e in os.listdir(_stream_dir(workdir, "_epochs"))]
+    return f"e{len(epochs)}_{max(epochs)}"
 
 
 def finalize(spark: SparkSession, workdir: str) -> KGTables:
@@ -116,7 +119,7 @@ def finalize(spark: SparkSession, workdir: str) -> KGTables:
     catalogs of older accumulations are deleted: no later call can read
     them, so tables returned by an earlier finalize over a smaller
     accumulation stop being readable."""
-    current = f"final_{_accum_token(spark, workdir)}"
+    current = f"final_{_accum_token(workdir)}"
     cat = SnapshotCatalog(os.path.join(workdir, current))
     kg = build_graph(spark, cat, lambda: _accumulated_docs(spark, workdir))
     for name in os.listdir(workdir):

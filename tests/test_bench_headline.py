@@ -1,16 +1,15 @@
 """Guard the driver-facing bench output contract.
 
-Round 3's BENCH_r03.json recorded ``"parsed": null`` because bench.py's
-single stdout line outgrew the driver's tail-capture window — the whole
-round's per-query evidence vanished.  The fix (round 4) is a compact
-FINAL stdout line built by ``bench._final_headline``; these tests pin
-that contract so it can't silently regress:
+Whatever runs ``python bench.py`` parses its LAST stdout line from a
+bounded tail capture.  These tests pin that line and the pieces that
+shape it:
 
-* valid JSON, rep-free, small (well under a conservative 4 KB window);
-* carries metric/value/per-query times and both throughput figures the
-  north metric names (triples/sec AND docs/sec);
-* never raises, whatever shape the scaling section left behind
-  (success dict, error dict, or absent under ``--no-scaling``).
+* one compact JSON object, well under a conservative 4 KB window,
+  carrying metric/value, per-row times, both throughput figures the
+  north metric names (docs/sec AND triples/sec) and the N/M scaling block;
+* a failed scaling build or battery row is recorded in the line, never
+  raised past it, and rows past the wall budget are listed as skipped;
+* every phase size comes from the host's cores and driver heap.
 
 No SparkSession is needed — the functions under test are pure.
 """
@@ -18,147 +17,136 @@ No SparkSession is needed — the functions under test are pure.
 import json
 import os
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
 
+ROWS = (("kg_pipeline",) + bench.REGISTRY_ROWS
+        + ("serialize_turtle_full", "simhash_full", "dedup_classes_full",
+           "cc_distributed", "sparql_closure", "salted_link_at_cutover",
+           "domain_cap_zipf", "pack_shards"))
+
+
+class _Tree:
+    """Stands in for ``tracing.ProcessTree``: one CPU-second per call."""
+
+    def __init__(self):
+        self.n = 0
+
+    def cpu_s(self):
+        self.n += 1
+        return float(self.n)
+
 
 def _fake_result(scaling=None):
-    queries = {f"q{i}": 1.234 for i in range(14)}
-    queries.update({
-        "kg_pipeline": 4.19, "cc_distributed_10m": 82.4,
-        "sparql_closure_10m": 19.3, "dedup_classes_full": 4.59,
-    })
-    extra = {
-        "docs_per_sec": 1193.3,
-        "triples_per_sec": 63496.0,
-        "pipeline_cold_sec": 10.3,
-        "pipeline_raw_triples": 266059,
-        "queries_sum_sec": 123.4,
-        "cc_rounds": 7,
-        "cc_components": 128004,
-        "cc_components_expected": 128004,
-        "path_closure_rounds": 3,
-    }
     result = {
-        "metric": "kg_construction_wall_clock",
-        "value": 321.0,
-        "unit": "sec",
-        "queries": queries,
-        "sf": "0.1",
-        "cpus": 32,
-        "throughput": extra,
+        "metric": "kg_construction_wall_clock", "value": 61.234,
+        "unit": "sec", "sf": "sf0.1", "cpus": 4, "heap_mb": 4017,
+        "pages": bench.PAGES,
+        "queries": {name: 123.456 for name in ROWS},
+        "cpu_s": {name: 456.78 for name in ROWS},
+        "throughput": {"docs_per_sec": 1633.1, "triples_per_sec": 143210.9,
+                       "cc_rounds": 7, "path_closure_rounds": 3,
+                       "domain_cap_over_domains": 2, "pack_shards_max_ix": 11},
+        "stage_rows": {stage: 12_345_678 for stage in (
+            "docs_clean", "mentions", "raw_triples", "alias_table", "linked",
+            "canonical_map", "entities", "relations", "frames", "slots",
+            "triples", "provenance")},
+        "sizes": bench.sizes(32, 8192),
     }
     if scaling is not None:
         result["scaling"] = scaling
-    return result, extra
+    return result
 
 
-def _ok_scaling():
-    rep4 = [{"sec": 352.4, "ext_busy_cores_before": 0.0,
-             "mean_busy_cores": 4.3, "cores": 4}] * 3
-    rep16 = [{"sec": 80.9, "ext_busy_cores_before": 0.0,
-              "mean_busy_cores": 16.1, "cores": 16}] * 3
-    return {
-        "pages": 12_000_000,
-        "local4_sec": 352.4, "local16_sec": 80.85,
-        "local4_reps": rep4, "local16_reps": rep16,
-        "raw_triples": 894_000_000,
-        "triples_per_sec_16c": 11_058_750.2,
-        "docs_per_sec_16c": 148_423.0,
-        "speedup_n_to_4n": 4.359, "efficiency": 1.09,
-        "idle_gates": [{"gate_wait_s": 1.0, "busy_cores_at_start": 0.0}],
-        "cpu_probe": {"mp4_rate": 26.6, "mp16_rate": 100.6,
-                      "hardware_efficiency": 0.806},
-        "efficiency_vs_hardware": 1.352,
-        "note": "x" * 900,
-    }
-
-
-def test_headline_success_path_small_and_parseable():
-    result, extra = _fake_result(scaling=_ok_scaling())
-    line = json.dumps(bench._final_headline(result, extra))
+def _line(result, capsys):
+    bench.emit(result)
+    line = capsys.readouterr().out.splitlines()[-1]
     assert len(line) < 4096, f"headline too big for tail capture: {len(line)}"
-    parsed = json.loads(line)
+    return json.loads(line)
+
+
+def test_headline_success_path_small_and_parseable(capsys):
+    parsed = _line(_fake_result(bench.scaling_block(1, 200.0, 4, 61.234)),
+                   capsys)
     assert parsed["metric"] == "kg_construction_wall_clock"
-    assert parsed["queries"]["kg_pipeline"] == 4.19
+    assert parsed["queries"]["kg_pipeline"] == 123.456
+    assert set(parsed["cpu_s"]) == set(ROWS)
     # the north metric names BOTH rates
     assert parsed["throughput"]["triples_per_sec"] > 0
     assert parsed["throughput"]["docs_per_sec"] > 0
     s = parsed["scaling"]
-    assert s["triples_per_sec_16c"] > 0
-    assert s["docs_per_sec_16c"] > 0
-    assert s["efficiency"] == 1.09
-    # rep-free: the per-rep arrays and the 900-char note must NOT leak in
-    assert "local4_reps" not in s and "note" not in s
-    assert s["n_reps"] == [3, 3]
+    assert (s["n_cores"], s["m_cores"]) == (1, 4)
+    assert s["efficiency"] == round(200.0 / 61.234 / 4, 3)
 
 
-def test_headline_error_path_never_raises():
-    result, extra = _fake_result(
-        scaling={"error": "OutOfMemoryError: boom", "pages": 12_000_000,
-                 "note": "scaling section failed"})
-    parsed = json.loads(json.dumps(bench._final_headline(result, extra)))
-    assert parsed["scaling"]["error"].startswith("OutOfMemoryError")
-    assert parsed["queries"]  # query evidence survives a dead scaling run
+def test_headline_error_path_never_raises(capsys):
+    # a failing battery row is recorded and the next row still runs
+    result = _fake_result()
+    result["queries"], result["cpu_s"] = {}, {}
+
+    def boom():
+        raise AssertionError("components 7 != 9")
+
+    bench.run_battery([("cc_distributed", boom),
+                       ("pack_shards", lambda: {"pack_shards_max_ix": 4})],
+                      time.monotonic() + 60, _Tree(), result)
+    parsed = _line(result, capsys)
+    assert parsed["errors"]["cc_distributed"].startswith("AssertionError")
+    assert list(parsed["queries"]) == ["pack_shards"]
+    assert parsed["cpu_s"]["pack_shards"] == 1.0
+    assert parsed["throughput"]["pack_shards_max_ix"] == 4
 
 
-def test_headline_no_scaling_path():
-    result, extra = _fake_result(scaling=None)
-    parsed = json.loads(json.dumps(bench._final_headline(result, extra)))
+def test_headline_no_scaling_path(capsys):
+    parsed = _line(_fake_result(), capsys)
     assert "scaling" not in parsed
     assert parsed["throughput"]["docs_per_sec"] > 0
 
 
-def test_headline_partial_scaling_dict_is_crash_safe():
-    # a future refactor that drops a key from the scaling dict must not
-    # take the final line down with it (r3 lesson: the last line is the
-    # only line that matters)
-    result, extra = _fake_result(scaling={"pages": 100})
-    parsed = json.loads(json.dumps(bench._final_headline(result, extra)))
-    assert parsed["scaling"]["pages"] == 100
-    assert parsed["scaling"]["n_reps"] == [0, 0]
-    # present-but-None values are as crash-prone as absent keys
-    # (len(None), None.get): the final line must survive them too
-    result, extra = _fake_result(scaling={
-        "pages": 100, "local4_reps": None, "local16_reps": None,
-        "cpu_probe": None, "efficiency": None})
-    parsed = json.loads(json.dumps(bench._final_headline(result, extra)))
-    assert parsed["scaling"]["n_reps"] == [0, 0]
-    assert parsed["scaling"]["hardware_efficiency_probe"] is None
+def test_headline_partial_scaling_dict_is_crash_safe(capsys):
+    # a scaling build that died still leaves its core counts and the
+    # error next to an intact headline
+    parsed = _line(_fake_result({"n_cores": 1, "m_cores": 4,
+                                 "error": "TimeoutExpired: 1800 s"}), capsys)
+    assert parsed["scaling"]["error"].startswith("TimeoutExpired")
+    assert parsed["value"] == 61.234
+    # efficiency is the speedup over the ideal M / N
+    assert bench.scaling_block(2, 100.0, 8, 25.0)["efficiency"] == 1.0
+    assert bench.scaling_block(2, 100.0, 8, 50.0) == {
+        "n_cores": 2, "n_sec": 100.0, "m_cores": 8, "m_sec": 50.0,
+        "speedup": 2.0, "efficiency": 0.5}
 
 
-def test_headline_carries_battery_noise_evidence():
-    # the round-5 battery burst-resistance contract: when a query's
-    # picked rep was still externally polluted, the final line must say
-    # so next to the numbers (battery_noise), and the idle-gate result
-    # must ride along — but the per-rep battery detail must NOT leak in
-    result, extra = _fake_result(scaling=None)
-    extra["battery_gate"] = {"gate_wait_s": 12.3, "busy_cores_at_start": 1.0}
-    extra["battery_noise"] = {"cc_distributed_10m": 9.4}
-    extra["battery"] = {"cc_distributed_10m": {"reps": [{"sec": 1}] * 3}}
-    parsed = json.loads(json.dumps(bench._final_headline(result, extra)))
-    assert parsed["throughput"]["battery_noise"] == {
-        "cc_distributed_10m": 9.4}
-    assert parsed["throughput"]["battery_gate"]["gate_wait_s"] == 12.3
-    assert "battery" not in parsed["throughput"]
+def test_battery_rows_past_the_budget_are_skipped():
+    result = {"queries": {}, "cpu_s": {}, "throughput": {}}
+    ran = []
+    rows = [("first", lambda: ran.append("first") or time.sleep(0.3)),
+            ("second", lambda: ran.append("second")),
+            ("third", lambda: ran.append("third"))]
+    bench.run_battery(rows, time.monotonic() + 0.1, _Tree(), result)
+    assert ran == ["first"]
+    assert result["skipped"] == ["second", "third"]
+    assert list(result["queries"]) == ["first"]
 
 
-def test_battery_records_which_rep_was_picked():
-    # BENCH_DETAIL must say WHICH rep a row's time came from (rep 0 is
-    # the cold one), not only its external busy; the pick policy is the
-    # fastest clean rep (ext busy <= 2.5) for the battery, falling back
-    # to the fastest of all, and the fastest of all for kg_pipeline
-    reps = [{"sec": 9.0, "mean_ext_busy": 0.1},
-            {"sec": 4.0, "mean_ext_busy": 3.5},
-            {"sec": 6.0, "mean_ext_busy": 0.2}]
-    assert bench._picked(reps, clean_only=True) == {
-        "reps": reps, "picked_rep": 2, "picked_ext_busy": 0.2}
-    assert bench._picked(reps, clean_only=False)["picked_rep"] == 1
-    noisy = [{"sec": 5.0, "mean_ext_busy": 4.0},
-             {"sec": 3.0, "mean_ext_busy": 3.0}]
-    assert bench._picked(noisy, clean_only=True)["picked_rep"] == 1
-    # ties keep the earlier (cold) rep, as min over the reps always did
-    tie = [{"sec": 2.0, "mean_ext_busy": 0.0}] * 2
-    assert bench._picked(tie, clean_only=True)["picked_rep"] == 0
+def test_phase_sizes_follow_cores_and_heap():
+    small = bench.sizes(4, 3840)
+    assert small["scaling_cores"] == [1, 4]
+    assert small["units"] == 4                    # core-bound
+    big = bench.sizes(32, 8192)
+    assert big["scaling_cores"] == [8, 32]
+    assert big["units"] == 16                     # heap-bound
+    for sz in (small, big):
+        u = sz["units"]
+        assert sz["cc_chain_rows"] == 256_000 * u
+        assert sz["cc_chain_rows"] % bench.CHAIN_LEN == 0
+        assert sz["closure_trees"] == 280 * u
+        assert sz["salted_mention_rows"] == 62_500 * u
+        assert sz["zipf_hub_rows"] == [125_000 * u, 31_250 * u]
+    # the salted row measures the real cutover at every host size
+    from kgraphmemory_spark.operators.linking import BROADCAST_MAX_ALIAS_ROWS
+    assert small["salted_alias_rows"] == big["salted_alias_rows"] \
+        > BROADCAST_MAX_ALIAS_ROWS

@@ -53,6 +53,22 @@ def test_stream_equals_batch(streamed):
         assert s == b, name
 
 
+def test_repeat_finalize_runs_no_spark_job(spark, streamed):
+    """A finalize over an unchanged accumulation resumes every stage, and
+    its accumulation token is read from the per-epoch marker files: it
+    starts no Spark job."""
+    _, workdir, _, _ = streamed
+    sc = spark.sparkContext
+    sc.setJobGroup("kgm-test-refinalize", "repeat finalize")
+    try:
+        kg = finalize(spark, workdir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(kg.stages_resumed) == 12
+    assert sc.statusTracker().getJobIdsForGroup("kgm-test-refinalize") == []
+
+
 DOCAGG_PATH = ("canonical_mapping_local", "build_entities_docagg",
                "build_relations_docagg", "extract_provenance_docagg")
 SHUFFLE_PATH = ("canonical_mapping", "build_entities_preagg",

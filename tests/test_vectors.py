@@ -61,6 +61,23 @@ def test_text_assembly_and_embedding_parity(vectors):
     assert [pytest.approx(x, abs=1e-6) for x in want] == list(g.vector)
 
 
+def test_swapped_embed_udf_in_vector_write_path(entities, vectors):
+    """build_vector_records(embed_udf=...) swaps the model without
+    touching the engine: record ids and texts stay those of the default
+    embedder, the vectors come from the plugged UDF."""
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    @F.pandas_udf(T.ArrayType(T.FloatType()))
+    def text_length(texts: pd.Series) -> pd.Series:
+        return texts.map(lambda t: [float(len(t)), 1.0])
+
+    swapped = build_vector_records(entities, embed_udf=text_length).collect()
+    assert sorted((r.record_id, r.text) for r in swapped) == sorted(
+        (r.record_id, r.text) for r in vectors.collect())
+    assert all(list(r.vector) == [float(len(r.text)), 1.0] for r in swapped)
+
+
 def test_knn_matches_python_oracle(vectors):
     got = [(r.uri, r.vector_id) for r in
            knn(vectors, "hash join", k=3, vector_id="entity_value").collect()]

@@ -15,7 +15,7 @@ a dump needs (``-XX:+RecordDynamicDumpInfo``), and the session writes the
 archive from that JVM when it is stopped, or at process exit if it never
 is (the ``VM.cds dynamic_dump`` diagnostic command, ``_dynamic_dump``): no
 launch and no build pays for it.  Every later launch maps it
-(``-XX:SharedArchiveFile``), which cut perfbench's ``setup_s`` by ~30 %
+(``-XX:SharedArchiveFile``), which cut perfbench's ``setup_s`` by 20-30 %
 and the first build's class loading with it.  The dump is not left to
 the JVM's exit (``-XX:ArchiveClassesAtExit``): a 178 MB archive took
 17-25 s to write, and perfbench's ``Session.shutdown`` kills a JVM that

@@ -5,9 +5,12 @@ sandbox does not ship).
 
 Supported subset — expanded and simply-compacted documents:
 - ``@context``: term → IRI string, term → ``{"@id": iri, "@type":
-  "@id" | <datatype-iri>}``, plus ``@vocab`` and ``@base``;
-- node objects: ``@id`` (relative resolved against ``@base``; absent →
-  fresh blank node), ``@type`` (string or list) → ``rdf:type`` triples;
+  "@id" | <datatype-iri>}``, plus ``@vocab`` and ``@base`` (a nested
+  context's relative ``@base`` resolves against the outer one, ``null``
+  clears it);
+- node objects: ``@id`` (a relative reference resolves against ``@base``
+  per RFC 3986 — io/terms.py's ``resolve_iri``; absent → fresh blank
+  node), ``@type`` (string or list) → ``rdf:type`` triples;
 - values: JSON string → plain literal (or IRI under a term coerced
   ``"@type": "@id"``), int → xsd:integer, float → xsd:double, bool →
   xsd:boolean, ``{"@value": …, "@type"/"@language": …}`` expanded-form
@@ -18,8 +21,8 @@ Supported subset — expanded and simply-compacted documents:
   otherwise in ``default_graph``.
 
 ``@list`` value objects and ``"@container": "@list"``-coerced terms
-desugar to rdf:first/rdf:rest chains (``[]`` → rdf:nil), same as the
-Turtle parser's collections; nested lists recurse.
+desugar to rdf:first/rdf:rest chains (``[]`` → rdf:nil, null items
+drop), same as the Turtle parser's collections; nested lists recurse.
 
 ``@reverse`` is supported in both forms — the node-object keyword
 (``"@reverse": {prop: refs}``) and reverse terms (``{"term":
@@ -49,11 +52,9 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 
-RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-RDF_FIRST = "http://www.w3.org/1999/02/22-rdf-syntax-ns#first"
-RDF_REST = "http://www.w3.org/1999/02/22-rdf-syntax-ns#rest"
-RDF_NIL = "http://www.w3.org/1999/02/22-rdf-syntax-ns#nil"
-XSD = "http://www.w3.org/2001/XMLSchema#"
+# the RDF / XSD constants stay importable from here
+from .terms import (  # noqa: F401
+    RDF_FIRST, RDF_NIL, RDF_REST, RDF_TYPE, XSD, collection, resolve_iri)
 
 _KEYWORDS = {"@id", "@type", "@value", "@language", "@context", "@graph",
              "@base", "@vocab"}
@@ -88,7 +89,10 @@ class _Ctx:
             return _Ctx(None)
         child = _Ctx(raw)
         merged = _Ctx(None)
-        merged.base = child.base if "@base" in raw else self.base
+        merged.base = self.base
+        if "@base" in raw:             # relative to the outer base; null resets
+            merged.base = ("" if raw["@base"] is None
+                           else resolve_iri(self.base, raw["@base"]))
         merged.vocab = child.vocab if "@vocab" in raw else self.vocab
         merged.terms = {**self.terms, **child.terms}
         return merged
@@ -106,9 +110,7 @@ class _Ctx:
                         "cannot be used as a compact-IRI prefix")
                 return self.terms[pfx]["@id"] + local
             return name                      # already an absolute IRI
-        if self.base:
-            return self.base + name
-        return name
+        return resolve_iri(self.base, name)
 
     def expand_prop(self, name: str) -> tuple[str, dict]:
         """→ (predicate IRI, term definition) for a node-object key.
@@ -257,77 +259,61 @@ class _Parser:
 
     def _list_chain(self, items: list, defn: dict, ctx: _Ctx,
                     graph: str | None) -> str:
-        """``@list`` → rdf:first/rdf:rest chain (same desugaring as the
-        Turtle parser's ``(...)`` collections); ``[]`` → rdf:nil.
-        Elements recurse through ``_value`` so nested nodes / typed values
-        / nested lists all work."""
-        if not items:
-            return RDF_NIL
-        cells = [self._blank() for _ in items]
-        for i, (cell, item) in enumerate(zip(cells, items)):
-            rest = cells[i + 1] if i + 1 < len(cells) else RDF_NIL
-            self._value(cell, RDF_FIRST, defn, item, ctx, graph)
-            self.rows.append((cell, RDF_REST, rest, None, None, graph))
-        return cells[0]
+        """``@list`` → rdf:first/rdf:rest chain (the same desugaring as
+        the Turtle parser's ``(...)`` collections); ``[]`` → rdf:nil and
+        null items drop.  Items go through ``_object``, so nested nodes /
+        typed values / nested lists all work."""
+        objs = [self._object(v, defn, ctx, graph) for v in items]
+        return collection([o for o in objs if o is not None], self._blank,
+                          self.rows.append, graph)
 
     def _value(self, subj: str, pred: str, defn: dict, v,
                ctx: _Ctx, graph: str | None) -> None:
-        emit = self.rows.append
+        obj = self._object(v, defn, ctx, graph)
+        if obj is not None:                  # JSON null drops the value
+            self.rows.append((subj, pred, *obj, graph))
+
+    def _object(self, v, defn: dict, ctx: _Ctx,
+                graph: str | None) -> tuple | None:
+        """A JSON-LD value → its (object, datatype, lang) term, or None
+        for JSON null; a nested node object or list emits its own
+        triples first."""
         if isinstance(v, dict):
             if "@list" in v:
                 if set(v) - {"@list"}:
                     raise ValueError("a @list object may not carry other "
                                      "keys in the supported subset")
-                head = self._list_chain(v["@list"], defn, ctx, graph)
-                emit((subj, pred, head, None, None, graph))
-                return
+                return self._list_chain(v["@list"], defn, ctx, graph), \
+                    None, None
             if "@value" in v:
-                dt = v.get("@type")
-                emit((subj, pred, _lexical(v["@value"]),
-                      ctx.expand_type(dt) if dt else _implied_dt(v["@value"]),
-                      v.get("@language"), graph))
-            elif set(v) == {"@id"}:
-                emit((subj, pred, ctx._expand_ref(v["@id"]),
-                      None, None, graph))
-            else:                            # nested node object
-                obj = self._node(v, ctx, graph)
-                emit((subj, pred, obj, None, None, graph))
-        elif isinstance(v, bool):
-            emit((subj, pred, "true" if v else "false",
-                  XSD + "boolean", None, graph))
-        elif isinstance(v, int):
-            emit((subj, pred, str(v), XSD + "integer", None, graph))
-        elif isinstance(v, float):
-            emit((subj, pred, repr(v), XSD + "double", None, graph))
-        elif isinstance(v, str):
-            if defn.get("@type") == "@id":
-                emit((subj, pred, ctx._expand_ref(v), None, None, graph))
-            else:
-                dt = defn.get("@type")
-                emit((subj, pred, v, ctx.expand_type(dt) if dt else None,
-                      None, graph))
-        elif v is None:
-            pass                             # JSON null drops the value
-        else:
-            raise ValueError(f"unsupported JSON-LD value {v!r}")
+                lex, dt = _scalar(v["@value"])
+                if v.get("@type"):
+                    dt = ctx.expand_type(v["@type"])
+                return lex, dt, v.get("@language")
+            if set(v) == {"@id"}:
+                return ctx._expand_ref(v["@id"]), None, None
+            return self._node(v, ctx, graph), None, None  # nested node
+        if isinstance(v, str):
+            dt = defn.get("@type")
+            if dt == "@id":
+                return ctx._expand_ref(v), None, None
+            return v, ctx.expand_type(dt) if dt else None, None
+        if isinstance(v, (bool, int, float)):
+            return (*_scalar(v), None)
+        if v is None:
+            return None
+        raise ValueError(f"unsupported JSON-LD value {v!r}")
 
 
-def _lexical(v) -> str:
+def _scalar(v) -> tuple[str, str | None]:
+    """A JSON scalar → (lexical form, implied datatype)."""
     if isinstance(v, bool):
-        return "true" if v else "false"
-    if isinstance(v, float):
-        return repr(v)
-    return str(v)
-
-
-def _implied_dt(v) -> str | None:
-    if isinstance(v, bool):
-        return XSD + "boolean"
+        return ("true" if v else "false"), XSD + "boolean"
     if isinstance(v, int):
-        return XSD + "integer"
+        return str(v), XSD + "integer"
     if isinstance(v, float):
-        return XSD + "double"
-    return None
+        return repr(v), XSD + "double"
+    return str(v), None
 
 
 def parse_jsonld_text(text: str,

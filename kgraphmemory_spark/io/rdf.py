@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .terms import URI_SHAPE
+
 # One master pattern; group numbers used by parse_lines below.
 #   1: <subject>        2: _:subject
 #   3: predicate
@@ -49,9 +51,6 @@ _NT_PATTERN = (
     r'(?:\s+<([^>\s]*)>)?'                   # optional graph (N-Quads)
     r'\s*\.\s*(?:#.*)?$'                     # terminating dot, trailing comment
 )
-
-# IRI-shaped object values serialize as <uri>, everything else as a literal.
-_URI_SHAPE = r'^[A-Za-z][A-Za-z0-9+.\-]*:[^\s"<>]*$'
 
 _SENTINEL = "\x00"  # never present in N-Triples source (control char)
 
@@ -100,7 +99,7 @@ def _object_term(cols: set[str]) -> Column:
          .otherwise(F.lit("")),
     )
     return F.when(
-        dt.isNull() & lang.isNull() & obj.rlike(_URI_SHAPE), _term(obj)
+        dt.isNull() & lang.isNull() & obj.rlike(URI_SHAPE), _term(obj)
     ).when(
         dt.isNull() & lang.isNull() & obj.startswith("_:"), obj
     ).otherwise(literal)

@@ -24,10 +24,12 @@ exported RDF/XML:
   rdf:first/rdf:rest list, empty → rdf:nil — same desugaring as the
   Turtle parser's ``(...)``) and ``rdf:parseType="Literal"`` (the
   element's XML content, serialized, as an ``rdf:XMLLiteral``);
-- ``xml:base`` resolution (element-scoped, inherited): ``rdf:about`` /
+- ``xml:base`` resolution (element-scoped, inherited; a relative
+  ``xml:base`` resolves against the enclosing one): ``rdf:about`` /
   ``rdf:resource`` / ``rdf:datatype`` values resolve against the
-  in-scope base via RFC 3986 (stdlib ``urljoin``), and ``rdf:ID``
-  becomes ``<base>#<ID>``.
+  in-scope base per RFC 3986 (io/terms.py's ``resolve_iri``, which keeps
+  an empty fragment: ``ns#`` → ``<base>ns#``), and ``rdf:ID`` becomes
+  ``<base>#<ID>``.
 
 NOT supported (documented limitation): ``rdf:bagID`` and the
 ``rdf:ID``-on-a-property-element reification attributes.
@@ -40,16 +42,11 @@ Blank-node labels (``_:x<n>``) are document-scoped.
 from __future__ import annotations
 
 import xml.etree.ElementTree as ET
-from urllib.parse import urljoin
 
 from pyspark.sql import DataFrame, SparkSession
 
-RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
-RDF_TYPE = RDF_NS + "type"
-RDF_FIRST = RDF_NS + "first"
-RDF_REST = RDF_NS + "rest"
-RDF_NIL = RDF_NS + "nil"
-RDF_XMLLITERAL = RDF_NS + "XMLLiteral"
+from .terms import RDF_NS, RDF_TYPE, RDF_XMLLITERAL, collection, resolve_iri
+
 XML_NS = "http://www.w3.org/XML/1998/namespace"
 
 _ABOUT = f"{{{RDF_NS}}}about"
@@ -63,6 +60,13 @@ _XMLBASE = f"{{{XML_NS}}}base"
 _LI = f"{{{RDF_NS}}}li"
 _DESCRIPTION = f"{{{RDF_NS}}}Description"
 _RDF_ROOT = f"{{{RDF_NS}}}RDF"
+
+
+def _base(el: ET.Element, base: str) -> str:
+    """The base in scope on ``el``: its own ``xml:base``, resolved
+    against the enclosing one, else the enclosing one."""
+    own = el.get(_XMLBASE)
+    return base if own is None else resolve_iri(base, own)
 
 
 def _expand(tag: str) -> str:
@@ -87,33 +91,25 @@ class _Parser:
         root = ET.fromstring(text)
         if root.tag == _RDF_ROOT:
             lang = root.get(_LANG)
-            base = root.get(_XMLBASE, "")
+            base = _base(root, "")
             for child in root:
                 self._node(child, lang, base)
         else:
-            self._node(root, None, root.get(_XMLBASE, ""))
+            self._node(root, None, "")
         return self.rows
-
-    @staticmethod
-    def _resolve(iri: str, base: str) -> str:
-        """RFC 3986 resolution against the in-scope xml:base (stdlib
-        urljoin: absolute IRIs pass through, ``rdf:about=""`` → the base
-        itself, ``#frag`` → base#frag)."""
-        return urljoin(base, iri) if base else iri
 
     def _subject_of(self, el: ET.Element, base: str) -> str:
         if _ABOUT in el.attrib:
-            return self._resolve(el.get(_ABOUT), base)
+            return resolve_iri(base, el.get(_ABOUT))
         if _ID in el.attrib:
             # rdf:ID names a fragment of the base document
-            frag = "#" + el.get(_ID)
-            return self._resolve(frag, base) if base else frag
+            return resolve_iri(base, "#" + el.get(_ID))
         if _NODEID in el.attrib:
             return "_:" + el.get(_NODEID)
         return self._blank()
 
     def _node(self, el: ET.Element, lang: str | None, base: str) -> str:
-        base = el.get(_XMLBASE, base)
+        base = _base(el, base)
         subj = self._subject_of(el, base)
         lang = el.get(_LANG, lang)
         emit = self.rows.append
@@ -139,7 +135,7 @@ class _Parser:
 
     def _property(self, subj: str, prop: ET.Element, lang: str | None,
                   base: str, li: list[int]) -> None:
-        base = prop.get(_XMLBASE, base)
+        base = _base(prop, base)
         if prop.tag == _LI:
             li[0] += 1
             pred = f"{RDF_NS}_{li[0]}"
@@ -148,7 +144,7 @@ class _Parser:
         lang = prop.get(_LANG, lang)
         emit = self.rows.append
         if _RESOURCE in prop.attrib:
-            emit((subj, pred, self._resolve(prop.get(_RESOURCE), base),
+            emit((subj, pred, resolve_iri(base, prop.get(_RESOURCE)),
                   None, None, self.graph))
             return
         if _NODEID in prop.attrib:
@@ -166,14 +162,12 @@ class _Parser:
         if pt == "Collection":
             # children chain into rdf:first/rdf:rest cells — the same
             # desugaring as turtle.py's `(...)` collections
-            nodes = [self._node(child, lang, base) for child in prop]
-            cells = [self._blank() for _ in nodes]
-            emit((subj, pred, cells[0] if cells else RDF_NIL,
-                  None, None, self.graph))
-            for i, (cell, obj) in enumerate(zip(cells, nodes)):
-                rest = cells[i + 1] if i + 1 < len(cells) else RDF_NIL
-                emit((cell, RDF_FIRST, obj, None, None, self.graph))
-                emit((cell, RDF_REST, rest, None, None, self.graph))
+            nodes = [(self._node(child, lang, base), None, None)
+                     for child in prop]
+            chain: list[tuple] = []    # emitted after the row naming its head
+            head = collection(nodes, self._blank, chain.append, self.graph)
+            emit((subj, pred, head, None, None, self.graph))
+            self.rows.extend(chain)
             return
         if pt == "Literal":
             # the element's XML content, serialized verbatim, is the value
@@ -191,7 +185,7 @@ class _Parser:
             return
         dt = prop.get(_DATATYPE)
         if dt is not None:
-            dt = self._resolve(dt, base)
+            dt = resolve_iri(base, dt)
         text = prop.text or ""
         emit((subj, pred, text, dt, None if dt else lang, self.graph))
 

@@ -41,8 +41,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .rdf import _URI_SHAPE, _escape_literal, _object_term, _term
-from .turtle import RDF_TYPE
+from .rdf import _escape_literal, _object_term, _term
+from .terms import RDF_NS, RDF_TYPE, URI_SHAPE
 
 _SAFE_LOCAL = r"^[A-Za-z_][A-Za-z0-9_\-]*$"
 
@@ -78,7 +78,7 @@ def _turtle_blocks(triples: DataFrame, group_graph: bool,
     dt, lang = _dt_lang(cols)
     obj = F.col("object")
     is_lit = dt.isNotNull() | lang.isNotNull() | (
-        ~obj.rlike(_URI_SHAPE) & ~obj.startswith("_:"))
+        ~obj.rlike(URI_SHAPE) & ~obj.startswith("_:"))
     lit_term = F.concat(
         F.lit('"'), _escape_literal(obj), F.lit('"'),
         F.when(dt.isNotNull(),
@@ -156,7 +156,7 @@ def serialize_jsonld(triples: DataFrame) -> DataFrame:
     dt, lang = _dt_lang(cols)
     obj = F.col("object")
     is_ref = dt.isNull() & lang.isNull() & (
-        obj.rlike(_URI_SHAPE) | obj.startswith("_:"))
+        obj.rlike(URI_SHAPE) | obj.startswith("_:"))
     vstruct = F.struct(
         F.when(is_ref, obj).alias("@id"),
         F.when(~is_ref, obj).alias("@value"),
@@ -223,7 +223,7 @@ def serialize_rdfxml(triples: DataFrame) -> DataFrame:
         pred))).otherwise(local)
     open_tag = F.concat(F.lit("<n:"), local, F.lit(' xmlns:n="'),
                         _xml_attr(ns), F.lit('"'))
-    is_ref = dt.isNull() & lang.isNull() & obj.rlike(_URI_SHAPE)
+    is_ref = dt.isNull() & lang.isNull() & obj.rlike(URI_SHAPE)
     prop = F.when(
         is_ref,
         F.concat(open_tag, F.lit(' rdf:resource="'), _xml_attr(obj),
@@ -338,7 +338,6 @@ def dump_rdf_string(triples: DataFrame, fmt: str = "turtle",
     if kind == "jsonld":
         return "[\n" + ",\n".join(blocks) + "\n]\n"
     if kind == "rdfxml":
-        return ('<?xml version="1.0"?>\n<rdf:RDF xmlns:rdf='
-                '"http://www.w3.org/1999/02/22-rdf-syntax-ns#">\n'
+        return (f'<?xml version="1.0"?>\n<rdf:RDF xmlns:rdf="{RDF_NS}">\n'
                 + "\n".join(blocks) + "\n</rdf:RDF>\n")
     return "\n".join(blocks) + "\n"

@@ -6,9 +6,11 @@ sandbox does not ship).
 Supported subset — the profile that covers the overwhelming majority of
 published Turtle:
 - ``@prefix`` / ``PREFIX`` and ``@base`` / ``BASE`` directives;
-- IRIs ``<...>`` (relative ones resolved against the base by plain
-  concatenation), prefixed names ``p:local`` (empty prefix ok), blank
-  node labels ``_:b``;
+- IRIs ``<...>`` (relative ones, also in ``@prefix`` and later
+  ``@base`` directives, resolved against the in-scope base per RFC 3986
+  — io/terms.py's ``resolve_iri``), prefixed names ``p:local`` (empty
+  prefix ok; a local name never ends in ``.``), blank node labels
+  ``_:b``;
 - ``a`` as ``rdf:type``;
 - predicate lists with ``;`` and object lists with ``,``;
 - literals in all four quote forms — ``"..."``, ``'...'``, and the
@@ -46,85 +48,27 @@ valid Turtle.
 
 from __future__ import annotations
 
-import re
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-RDF_FIRST = "http://www.w3.org/1999/02/22-rdf-syntax-ns#first"
-RDF_REST = "http://www.w3.org/1999/02/22-rdf-syntax-ns#rest"
-RDF_NIL = "http://www.w3.org/1999/02/22-rdf-syntax-ns#nil"
-XSD = "http://www.w3.org/2001/XMLSchema#"
+# the RDF / XSD constants stay importable from here
+from .terms import (  # noqa: F401
+    BLANK_NODE_LABEL, DTMARK, IRIREF, LANGTAG, NUMBER, PNAME, RDF_FIRST,
+    RDF_NIL, RDF_REST, RDF_TYPE, STRING, XSD, collection, expand_pname, lexer,
+    literal, resolve_iri, tokens)
 
 # Alternation order matters: blank before pname (else `_:b` reads as a
 # pname with prefix `_`), pname before kw (else `a:x` / `true:x` lose
 # their prefix to the keyword), kw before langtag (else `@prefix` reads
 # as a language tag).
-_TOKEN = re.compile(
-    r"""
-      (?P<ws>\s+)
-    | (?P<comment>\#[^\n]*)
-    | (?P<iri><[^<>"{}|^`\\\s]*>)
-    | (?P<literal3>\"\"\"(?:(?:\"|\"\")?(?:[^"\\]|\\.))*\"\"\")
-    | (?P<literal>"(?:[^"\\]|\\.)*")
-    | (?P<sliteral3>'''(?:(?:'|'')?(?:[^'\\]|\\.))*''')
-    | (?P<sliteral>'(?:[^'\\]|\\.)*')
-    | (?P<dtmark>\^\^)
-    | (?P<blank>_:[\w\-]+(?:\.[\w\-]+)*)
-    | (?P<num>[+-]?(?:\d+\.\d*[eE][+-]?\d+|\.\d+[eE][+-]?\d+
-                     |\d+[eE][+-]?\d+|\d+\.\d+|\.\d+|\d+))
-    | (?P<pname>(?:[A-Za-z_][\w.\-]*)?:(?:[\w\-%]+(?:\.[\w\-%]+)*)?)
-    | (?P<kw>@prefix\b|@base\b|PREFIX\b|BASE\b|true\b|false\b|a\b
-             |(?i:GRAPH)\b)
-    | (?P<langtag>@[A-Za-z][A-Za-z0-9\-]*)
-    | (?P<punct>[;,.{}\[\]()])
-    """,
-    re.X,
-)
-
-_SCHEME = re.compile(r"^[A-Za-z][A-Za-z0-9+.\-]*:")
-
-_ESCAPES = {"\\": "\\", '"': '"', "n": "\n", "r": "\r", "t": "\t",
-            "b": "\b", "f": "\f", "'": "'"}
-
-
-def _unescape(body: str) -> str:
-    out: list[str] = []
-    i = 0
-    while i < len(body):
-        c = body[i]
-        if c == "\\" and i + 1 < len(body):
-            n = body[i + 1]
-            if n == "u" and i + 5 < len(body):
-                out.append(chr(int(body[i + 2:i + 6], 16)))
-                i += 6
-                continue
-            if n == "U" and i + 9 < len(body):
-                out.append(chr(int(body[i + 2:i + 10], 16)))
-                i += 10
-                continue
-            out.append(_ESCAPES.get(n, n))
-            i += 2
-            continue
-        out.append(c)
-        i += 1
-    return "".join(out)
-
-
-def _tokens(text: str) -> Iterator[tuple[str, str]]:
-    pos = 0
-    while pos < len(text):
-        m = _TOKEN.match(text, pos)
-        if m is None:
-            raise ValueError(f"turtle parse error at offset {pos}: "
-                             f"{text[pos:pos + 30]!r}")
-        pos = m.end()
-        kind = m.lastgroup
-        if kind in ("ws", "comment"):
-            continue
-        yield kind, m.group()
+_TOKEN = lexer(
+    ("ws", r"\s+"), ("comment", r"#[^\n]*"), ("iri", IRIREF),
+    ("string", STRING), ("dtmark", DTMARK), ("blank", BLANK_NODE_LABEL),
+    ("number", NUMBER), ("pname", PNAME),
+    ("kw", r"(?:@prefix|@base|PREFIX|BASE|true|false|a|(?i:GRAPH))\b"),
+    ("langtag", LANGTAG), ("punct", r"[;,.{}\[\]()]"))
 
 
 class _Parser:
@@ -143,62 +87,37 @@ class _Parser:
         self._bn += 1
         return f"_:t{self._bn}"
 
-    def _resolve_iri(self, tok: str) -> str:
-        iri = tok[1:-1]
-        if self.base and not _SCHEME.match(iri):
-            return self.base + iri
-        return iri
+    def _iri(self, kind: str, tok: str) -> str:
+        """An IRI / prefixed-name token → its IRI (blank labels too, in
+        the subject and graph-name positions that allow them)."""
+        if kind == "iri":
+            return resolve_iri(self.base, tok[1:-1])
+        if kind == "pname":
+            return expand_pname(self.prefixes, tok)
+        if kind == "blank":
+            return tok
+        raise ValueError(f"bad graph name / subject token {tok!r}")
 
-    def _resolve_pname(self, tok: str) -> str:
-        pfx, local = tok.split(":", 1)
-        if pfx not in self.prefixes:
-            raise ValueError(f"undeclared prefix {pfx!r}: in {tok!r}")
-        return self.prefixes[pfx] + local
+    def _datatype(self, kind: str, tok: str) -> str:
+        if kind not in ("iri", "pname"):
+            raise ValueError(f"bad datatype token {tok!r}")
+        return self._iri(kind, tok)
 
     def _term(self, kind: str, tok: str, toks, rows: list[tuple]) -> tuple:
         """→ (value, datatype, lang, is_literal); may consume ^^dt / @lang.
         A ``[...]`` property list or ``(...)`` collection term emits its
         own triples into ``rows`` and yields the head blank node."""
-        if kind == "iri":
-            return self._resolve_iri(tok), None, None, False
-        if kind == "pname":
-            return self._resolve_pname(tok), None, None, False
-        if kind == "blank":
-            return tok, None, None, False
+        if kind in ("iri", "pname", "blank"):
+            return self._iri(kind, tok), None, None, False
         if (kind, tok) == ("punct", "["):
             return self._bnode_plist(toks, rows), None, None, False
         if (kind, tok) == ("punct", "("):
             return self._collection(toks, rows), None, None, False
         if kind == "kw" and tok in ("true", "false"):
             return tok, XSD + "boolean", None, True
-        if kind == "num":
-            # Turtle numeric shorthand: exponent → xsd:double, dot →
-            # xsd:decimal (incl. the leading-dot `.5` form), else
-            # xsd:integer.  A trailing `5.` stays integer + statement dot,
-            # per the grammar (DECIMAL requires a digit after the point).
-            if "e" in tok or "E" in tok:
-                dt = XSD + "double"
-            elif "." in tok:
-                dt = XSD + "decimal"
-            else:
-                dt = XSD + "integer"
-            return tok, dt, None, True
-        if kind in ("literal", "literal3", "sliteral", "sliteral3"):
-            q = 3 if kind.endswith("3") else 1
-            value = _unescape(tok[q:-q])
-            nk, nt = toks.peek()
-            if nk == "dtmark":
-                toks.next()
-                dk, dtok = toks.next()
-                if dk == "iri":
-                    return value, self._resolve_iri(dtok), None, True
-                if dk == "pname":
-                    return value, self._resolve_pname(dtok), None, True
-                raise ValueError(f"bad datatype token {dtok!r}")
-            if nk == "langtag":
-                toks.next()
-                return value, None, nt[1:], True
-            return value, None, None, True
+        if kind in ("number", "string"):
+            return (*literal(kind, tok, toks.peek, toks.next,
+                             self._datatype), True)
         raise ValueError(f"unexpected term token {tok!r}")
 
     def _bnode_plist(self, toks, rows: list[tuple]) -> str:
@@ -207,9 +126,16 @@ class _Parser:
         node with none.  Recursive: objects may themselves be ``[...]`` /
         ``(...)``."""
         subj = self._blank()
-        if toks.peek() == ("punct", "]"):
-            toks.next()
-            return subj
+        if toks.peek() != ("punct", "]"):
+            self._predicate_objects(subj, toks, rows, ("]",))
+        toks.next()
+        return subj
+
+    def _predicate_objects(self, subj: str, toks, rows: list[tuple],
+                           ends: tuple[str, ...]) -> str:
+        """``p1 o1, o2 ; p2 o3`` about ``subj`` (a trailing ``;`` is
+        allowed), up to the punctuation in ``ends`` that closes it —
+        left unread and returned."""
         while True:
             pk, pt = toks.next()
             if pk == "kw" and pt == "a":
@@ -217,27 +143,23 @@ class _Parser:
             else:
                 pred, _, _, plit = self._term(pk, pt, toks, rows)
                 if plit:
-                    raise ValueError(f"literal predicate {pt!r} in [...]")
+                    raise ValueError(f"literal predicate {pt!r}")
             while True:
                 ok, ot = toks.next()
                 obj, dt, lang, _ = self._term(ok, ot, toks, rows)
                 rows.append((subj, pred, obj, dt, lang, self.graph))
-                if toks.peek() == ("punct", ","):
-                    toks.next()
-                    continue
-                break
+                if toks.peek() != ("punct", ","):
+                    break
+                toks.next()
+            more = toks.peek() == ("punct", ";")
+            if more:
+                toks.next()
             nk, nt = toks.peek()
-            if (nk, nt) == ("punct", ";"):
-                toks.next()
-                if toks.peek() == ("punct", "]"):   # trailing ';'
-                    toks.next()
-                    return subj
-                continue
-            if (nk, nt) == ("punct", "]"):
-                toks.next()
-                return subj
-            raise ValueError(
-                f"expected ';' ',' or ']' in [...] property list, got {nt!r}")
+            if nk == "punct" and nt in ends:
+                return nt
+            if not more:
+                raise ValueError(f"expected ';' ',' or {' '.join(ends)!r}, "
+                                 f"got {nt!r}")
 
     def _collection(self, toks, rows: list[tuple]) -> str:
         """``( e1 e2 ... )`` (the '(' already consumed) → rdf:first/rest
@@ -253,50 +175,35 @@ class _Parser:
                 raise ValueError("unterminated ( ... ) collection")
             toks.next()
             items.append(self._term(k, t, toks, rows)[:3])
-        if not items:
-            return RDF_NIL
-        cells = [self._blank() for _ in items]
-        for i, (cell, (v, dt, lang)) in enumerate(zip(cells, items)):
-            rest = cells[i + 1] if i + 1 < len(cells) else RDF_NIL
-            rows.append((cell, RDF_FIRST, v, dt, lang, self.graph))
-            rows.append((cell, RDF_REST, rest, None, None, self.graph))
-        return cells[0]
+        return collection(items, self._blank, rows.append, self.graph)
 
     def parse(self, text: str) -> list[tuple]:
-        toks = _Peekable(_tokens(text))
+        toks = _Peekable(tokens(_TOKEN, text, "turtle parse error"))
         rows: list[tuple] = []
         while True:
             k, t = toks.peek()
             if k is None:
                 return rows
-            if k == "kw" and t in ("@prefix", "PREFIX"):
+            if k == "kw" and t in ("@prefix", "PREFIX", "@base", "BASE"):
                 toks.next()
-                _, ptok = toks.next()          # 'p:' — pname with empty local
-                pfx = ptok.rsplit(":", 1)[0]
+                directive = "@" + t.lstrip("@").lower()
+                if directive == "@prefix":   # 'p:' — pname, empty local
+                    pfx = toks.next()[1].split(":", 1)[0]
                 ik, itok = toks.next()
                 if ik != "iri":
-                    raise ValueError(f"@prefix needs an IRI, got {itok!r}")
-                self.prefixes[pfx] = itok[1:-1]
-                if t == "@prefix":
-                    pk, ptok2 = toks.next()
-                    if (pk, ptok2) != ("punct", "."):
-                        raise ValueError("@prefix not terminated by '.'")
-                continue
-            if k == "kw" and t in ("@base", "BASE"):
-                toks.next()
-                ik, itok = toks.next()
-                if ik != "iri":
-                    raise ValueError(f"@base needs an IRI, got {itok!r}")
-                self.base = itok[1:-1]
-                if t == "@base":
-                    pk, ptok2 = toks.next()
-                    if (pk, ptok2) != ("punct", "."):
-                        raise ValueError("@base not terminated by '.'")
+                    raise ValueError(f"{directive} needs an IRI, got {itok!r}")
+                iri = resolve_iri(self.base, itok[1:-1])
+                if directive == "@prefix":
+                    self.prefixes[pfx] = iri
+                else:
+                    self.base = iri
+                if t.startswith("@") and toks.next() != ("punct", "."):
+                    raise ValueError(f"{directive} not terminated by '.'")
                 continue
             if k == "kw" and t.lower() == "graph":       # GRAPH <g> { ... }
                 toks.next()
                 gk, gt = toks.next()
-                self._block(toks, rows, self._graph_name(gk, gt))
+                self._block(toks, rows, self._iri(gk, gt))
                 continue
             if (k, t) == ("punct", "{"):                 # anonymous { ... }
                 self._block(toks, rows, self.graph)
@@ -304,22 +211,13 @@ class _Parser:
             if k in ("iri", "pname", "blank"):
                 # one token of lookahead decides bare-name block vs subject
                 toks.next()
-                name = self._graph_name(k, t)
+                name = self._iri(k, t)
                 if toks.peek() == ("punct", "{"):        # <g> { ... }
                     self._block(toks, rows, name)
                 else:
                     self._statement(toks, rows, subj=name)
                 continue
             self._statement(toks, rows)
-
-    def _graph_name(self, kind: str, tok: str) -> str:
-        if kind == "iri":
-            return self._resolve_iri(tok)
-        if kind == "pname":
-            return self._resolve_pname(tok)
-        if kind == "blank":
-            return tok
-        raise ValueError(f"bad graph name / subject token {tok!r}")
 
     def _block(self, toks, rows: list[tuple], name: str | None) -> None:
         bk, bt = toks.next()
@@ -356,38 +254,10 @@ class _Parser:
                     return
                 if in_block and (nk, nt) == ("punct", "}"):
                     return
-        while True:
-            pk, pt = toks.next()
-            if pk == "kw" and pt == "a":
-                pred = RDF_TYPE
-            else:
-                pred, _, _, plit = self._term(pk, pt, toks, rows)
-                if plit:
-                    raise ValueError(f"literal predicate {pt!r}")
-            while True:
-                ok, ot = toks.next()
-                obj, dt, lang, _ = self._term(ok, ot, toks, rows)
-                rows.append((subj, pred, obj, dt, lang, self.graph))
-                nk, nt = toks.peek()
-                if (nk, nt) == ("punct", ","):
-                    toks.next()
-                    continue
-                break
-            if (nk, nt) == ("punct", ";"):
-                toks.next()
-                # allow trailing ';' before the final '.' (or '}')
-                if toks.peek() == ("punct", "."):
-                    toks.next()
-                    return
-                if in_block and toks.peek() == ("punct", "}"):
-                    return
-                continue
-            if (nk, nt) == ("punct", "."):
-                toks.next()
-                return
-            if in_block and (nk, nt) == ("punct", "}"):
-                return  # final '.' inside a block is optional in TriG
-            raise ValueError(f"expected ';' ',' or '.', got {nt!r}")
+        # the final '.' inside a block is optional in TriG
+        if self._predicate_objects(subj, toks, rows,
+                                   (".", "}") if in_block else (".",)) == ".":
+            toks.next()
 
 
 class _Peekable:

@@ -21,9 +21,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..io.terms import URI_SHAPE, XSD
 from ..semantics import RDF_TYPE, VITAL_TYPE
-
-XSD = "http://www.w3.org/2001/XMLSchema#"
 
 _XSD_BY_SPARK = {
     T.LongType(): XSD + "integer",
@@ -187,11 +186,6 @@ def remove_triples(triples: DataFrame, s: str | None = None,
     return triples.where(keep)
 
 
-# same IRI-shape heuristic io/rdf.py uses when serializing datatype-less
-# objects — scheme:rest with no whitespace/quotes/brackets
-_URI_SHAPE = r'^[A-Za-z][A-Za-z0-9+.\-]*:[^\s"<>]*$'
-
-
 def remove_object(triples: DataFrame, uri: str) -> DataFrame:
     """S4 `remove_object` including dangling-edge cleanup: the reference
     deletes quads with subject=URI AND quads whose object is the
@@ -199,9 +193,9 @@ def remove_object(triples: DataFrame, uri: str) -> DataFrame:
 
     URI-object detection on the long table: typed / lang-tagged objects
     are literals and survive, and a datatype-less object only cascades
-    when it is IRI-shaped (the serialize-side heuristic, io/rdf.py:106-112)
-    — a plain prose literal that lexically equals the URI is kept.  A
-    scheme-shaped plain literal identical to the URI is still
+    when it is IRI-shaped (io/terms.py's ``URI_SHAPE``, the serializers'
+    heuristic) — a plain prose literal that lexically equals the URI is
+    kept.  A scheme-shaped plain literal identical to the URI is still
     indistinguishable; writers that need that distinction carry an
     ``obj_is_uri`` flag column, honored here when present.
     """
@@ -210,7 +204,7 @@ def remove_object(triples: DataFrame, uri: str) -> DataFrame:
     if "obj_is_uri" in cols:
         obj_is_uri = F.col("obj_is_uri")
     else:
-        obj_is_uri = obj.rlike(_URI_SHAPE)
+        obj_is_uri = obj.rlike(URI_SHAPE)
         if "obj_datatype" in cols:
             obj_is_uri = obj_is_uri & F.col("obj_datatype").isNull()
         if "obj_lang" in cols:

@@ -30,6 +30,8 @@ import re
 import uuid
 from dataclasses import dataclass, field
 
+from .io.terms import RDF_TYPE
+
 # --------------------------------------------------------------------------
 # Constants of the rule-set (mirrored verbatim in oracle SQL)
 # --------------------------------------------------------------------------
@@ -41,7 +43,6 @@ FRAME_TYPE_NEXT = "urn:frame:next"
 SLOT_SOURCE = "urn:hasSourceEntity"
 SLOT_DESTINATION = "urn:hasDestinationEntity"
 
-RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 VITAL_TYPE = "http://vital.ai/ontology/vital-core#vitaltype"
 HAS_NAME = "http://vital.ai/ontology/vital-core#hasName"
 EDGE_SOURCE = "http://vital.ai/ontology/vital-core#hasEdgeSource"

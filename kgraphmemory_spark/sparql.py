@@ -103,8 +103,10 @@ Documented deviations (all on the engine's string data model):
   the ``remove_triples`` convention.
 
 Round 4 closed the last four SPARQL 1.1 grammar gaps: ``BASE`` (RFC
-3986 resolution of every relative IRI token, incl. PREFIX bodies and
-datatype IRIs), ``UNDEF`` in VALUES (solution-compatibility join —
+3986 §5.2 resolution, for any scheme, of every relative IRI token, incl.
+PREFIX bodies, later BASEs and datatype IRIs — io/terms.py's
+``resolve_iri``, the one resolver the Turtle, JSON-LD and RDF/XML
+parsers use too), ``UNDEF`` in VALUES (solution-compatibility join —
 unbound matches anything, merged binding coalesces bound-first),
 property paths under ``GRAPH ?var`` (graph-keyed pair algebra: one
 plan, closure per named graph, no per-graph loop), and UNION with
@@ -130,89 +132,52 @@ solution per §2.4.
 Not supported (raises): paths in CONSTRUCT/update templates (the
 SPARQL grammar itself restricts templates to triples), ``SERVICE
 ?var`` (implementation-defined, §2.5), ``BNODE(?str)`` (the 0-arg
-form works). IRI() over a *computed* string does not re-resolve
+form works), blank nodes (``_:b``) in query patterns, templates and
+DATA blocks. IRI() over a *computed* string does not re-resolve
 against BASE.
 """
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass, field
 from types import SimpleNamespace
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .io.terms import (
+    BLANK_NODE_LABEL, DTMARK, IRIREF, LANGTAG, NUMBER, PNAME, RDF_LANGSTRING,
+    RDF_TYPE, STRING, URI_SHAPE, XSD, XSD_STRING, expand_pname, lexer, literal,
+    resolve_iri, string_value, tokens)
 from .session import driver_frame
-
-RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-XSD = "http://www.w3.org/2001/XMLSchema#"
 
 _NUMERIC_DTS = {XSD + s for s in ("integer", "decimal", "double", "float",
                                  "int", "long")}
 
-_TOK = re.compile(
-    r"""
-      (?P<ws>\s+|\#[^\n]*)
-    | (?P<iri><[^<>"{}|^`\\\s]*>)
-    | (?P<var>[?$][A-Za-z_][A-Za-z0-9_]*)
-    | (?P<str>"(?:[^"\\]|\\.)*"|'(?:[^'\\]|\\.)*')
-    | (?P<dtm>\^\^)
-      # DECIMAL needs a digit after the point (SPARQL grammar): "1." is
-      # INTEGER "1" + the triple terminator, not a decimal literal
-    | (?P<num>[+-]?(?:\d+\.\d*[eE][+-]?\d+|(?:\d+\.\d+|\.\d+|\d+)(?:[eE][+-]?\d+)?))
-    | (?P<pname>[A-Za-z_][\w\-]*:[\w\-.%]*|:[\w\-.%]*)
-    | (?P<lang>@[A-Za-z][A-Za-z0-9\-]*)
-    | (?P<word>[A-Za-z_][A-Za-z0-9_]*)
-    | (?P<op>&&|\|\||!=|<=|>=|[{}().,;=<>!*/+?^|-])
-    """,
-    re.X,
-)
-
-_ESC = {"n": "\n", "t": "\t", "r": "\r", '"': '"', "'": "'", "\\": "\\"}
-
-
-def _unquote(tok: str) -> str:
-    body = tok[1:-1]
-    out, i = [], 0
-    while i < len(body):
-        if body[i] == "\\" and i + 1 < len(body):
-            out.append(_ESC.get(body[i + 1], body[i + 1]))
-            i += 2
-        else:
-            out.append(body[i])
-            i += 1
-    return "".join(out)
+_TOK = lexer(
+    ("ws", r"\s+|#[^\n]*"), ("iri", IRIREF),
+    ("var", r"[?$][A-Za-z_][A-Za-z0-9_]*"), ("string", STRING),
+    ("dtmark", DTMARK), ("number", NUMBER), ("blank", BLANK_NODE_LABEL),
+    ("pname", PNAME), ("langtag", LANGTAG),
+    ("word", r"[A-Za-z_][A-Za-z0-9_]*"),
+    ("op", r"&&|\|\||!=|<=|>=|[{}().,;=<>!*/+?^|-]"))
 
 
 def _tokens(text: str) -> list[tuple[str, str]]:
-    toks, pos = [], 0
-    while pos < len(text):
-        m = _TOK.match(text, pos)
-        if m is None:
-            raise ValueError(f"SPARQL lex error at {text[pos:pos + 30]!r}")
-        pos = m.end()
-        if m.lastgroup != "ws":
-            if m.lastgroup == "var" and m.group()[1:].startswith("__"):
-                # the "__" prefix is reserved for the engine's hidden
-                # columns (metadata sidecars __m_*, __opt_/__hav helpers);
-                # rejecting it at LEX time covers every position a
-                # variable can appear in — triple patterns, BIND/AS
-                # targets, sub-SELECT aliases, VALUES headers — so e.g.
-                # BIND(1 AS ?__m_o__dt) can never clobber a sidecar
-                raise ValueError(
-                    f"reserved variable name {m.group()} ('__' prefix)")
-            toks.append((m.lastgroup, m.group()))
+    toks = list(tokens(_TOK, text, "SPARQL lex error"))
+    for kind, val in toks:
+        if kind == "var" and val[1:].startswith("__"):
+            # the "__" prefix is reserved for the engine's hidden
+            # columns (metadata sidecars __m_*, __opt_/__hav helpers);
+            # rejecting it at LEX time covers every position a
+            # variable can appear in — triple patterns, BIND/AS
+            # targets, sub-SELECT aliases, VALUES headers — so e.g.
+            # BIND(1 AS ?__m_o__dt) can never clobber a sidecar
+            raise ValueError(f"reserved variable name {val} ('__' prefix)")
     return toks
 
 
 # ------------------------------------------------------------------- AST
-
-XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
-RDF_LANGSTRING = "http://www.w3.org/1999/02/22-rdf-syntax-ns#langString"
-# same shape heuristic operators/store.py uses for its obj_is_uri
-# fallback — one engine-wide definition of "looks like an IRI"
-_URI_SHAPE = r'^[A-Za-z][A-Za-z0-9+.\-]*:[^\s"<>]*$'
 
 # term-introspection builtins: compiled against hidden metadata sidecar
 # columns that _scan projects ONLY for the variables a query actually
@@ -324,30 +289,12 @@ def _dataset_fix(dflt: tuple, named: tuple):
     return fix
 
 
-_SCHEME = re.compile(r"^[A-Za-z][A-Za-z0-9+.\-]*:")
-
-
 class _Parser:
     def __init__(self, text: str):
         self.toks = _tokens(text)
         self.i = 0
         self.prefixes: dict[str, str] = {}
         self.base: str | None = None
-
-    def _resolve(self, iri: str) -> str:
-        """RFC 3986 resolution of a relative IRI against the query's
-        BASE (SPARQL 1.1 §4.1.1); absolute IRIs (any scheme, incl. urn:)
-        pass through verbatim, and with no BASE declared behavior is
-        unchanged."""
-        if self.base is None or _SCHEME.match(iri):
-            return iri
-        from urllib.parse import urljoin
-        out = urljoin(self.base, iri)
-        # urljoin drops an EMPTY trailing fragment ('ns#' → 'ns'), but
-        # vocabulary namespace IRIs end in a bare '#' — restore it
-        if iri.endswith("#") and not out.endswith("#"):
-            out += "#"
-        return out
 
     # -- token helpers --------------------------------------------------
     def _peek(self, k: int = 0):
@@ -388,51 +335,41 @@ class _Parser:
                     raise ValueError(f"bad PREFIX label {pv!r}")
                 iri = self._expect("iri")
                 # PREFIX IRIs resolve against a preceding BASE (§4.1.1)
-                self.prefixes[pv[:-1]] = self._resolve(iri[1:-1])
+                self.prefixes[pv[:-1]] = resolve_iri(self.base, iri[1:-1])
             elif kind == "word" and val.upper() == "BASE":
                 self.i += 1
                 b = self._expect("iri")[1:-1]
                 # a later BASE resolves against the earlier one (RFC 3986
                 # §5.1; repeated BASE declarations are legal SPARQL)
-                self.base = self._resolve(b)
+                self.base = resolve_iri(self.base, b)
             else:
                 return
 
-    def _pname(self, tok: str) -> str:
-        pfx, local = tok.split(":", 1)
-        if pfx not in self.prefixes:
-            raise ValueError(f"undeclared prefix {pfx!r}:")
-        return self.prefixes[pfx] + local
+    def _iri(self, kind: str, val: str) -> str:
+        """An IRI / prefixed-name token → its IRI; a relative IRI
+        resolves against the query's BASE (SPARQL 1.1 §4.1.1)."""
+        if kind == "iri":
+            return resolve_iri(self.base, val[1:-1])
+        if kind == "pname":
+            return expand_pname(self.prefixes, val)
+        raise ValueError(f"expected IRI, got {val!r}")
 
     def _term(self):
         kind, val = self._next()
         if kind == "var":
             return ("var", val[1:])
-        if kind == "iri":
-            return ("iri", self._resolve(val[1:-1]))
-        if kind == "pname":
-            return ("iri", self._pname(val))
+        if kind in ("iri", "pname"):
+            return ("iri", self._iri(kind, val))
         if kind == "word" and val == "a":
             return ("iri", RDF_TYPE)
         if kind == "word" and val.upper() in ("TRUE", "FALSE"):
             return ("lit", val.lower(), XSD + "boolean", None)
-        if kind == "num":
-            dt = ("integer" if re.fullmatch(r"[+-]?\d+", val) else
-                  "double" if ("e" in val or "E" in val) else "decimal")
-            return ("lit", val, XSD + dt, None)
-        if kind == "str":
-            lex = _unquote(val)
-            nk, nv = self._peek()
-            if nk == "dtm":
-                self.i += 1
-                dk, dv = self._next()
-                dt = self._resolve(dv[1:-1]) if dk == "iri" \
-                    else self._pname(dv)
-                return ("lit", lex, dt, None)
-            if nk == "lang":
-                self.i += 1
-                return ("lit", lex, None, nv[1:])
-            return ("lit", lex, None, None)
+        if kind in ("number", "string"):
+            return ("lit", *literal(kind, val, self._peek, self._next,
+                                    self._iri))
+        if kind == "blank":
+            raise ValueError(f"blank node {val}: blank nodes in query "
+                             "patterns and templates are not supported")
         raise ValueError(f"unexpected term {val!r}")
 
     # -- property paths (SPARQL 1.1 §9) ---------------------------------
@@ -809,8 +746,7 @@ class _Parser:
         if kind in ("pname", "iri") and self._peek(1) == ("op", "("):
             # XPath constructor function call — xsd:integer(?x) etc.
             # (SPARQL 1.1 §17.5); normalized to ("func","CAST",[dt, arg])
-            dt = (self._pname(val) if kind == "pname"
-                  else self._resolve(val[1:-1]))
+            dt = self._iri(kind, val)
             self.i += 2
             arg = self._expr()
             self._expect("op", ")")
@@ -1048,12 +984,7 @@ class _Parser:
         return self._apply_with(g, with_g)
 
     def _iri_str(self) -> str:
-        kind, val = self._next()
-        if kind == "iri":
-            return self._resolve(val[1:-1])
-        if kind == "pname":
-            return self._pname(val)
-        raise ValueError(f"expected IRI, got {val!r}")
+        return self._iri(*self._next())
 
     def _clear_target(self):
         if self._kw("DEFAULT"):
@@ -1215,7 +1146,7 @@ class _Parser:
                 if not (self._kw("SEPARATOR")):
                     raise ValueError("expected SEPARATOR")
                 self._expect("op", "=")
-                sep = _unquote(self._expect("str"))
+                sep = string_value(self._expect("string"))
             self._expect("op", ")")
             return ("agg", agg, distinct, arg, sep)
         return self._expr()
@@ -1255,9 +1186,9 @@ class _Parser:
                     else:
                         break
             elif self._kw("LIMIT"):
-                out["limit"] = int(self._expect("num"))
+                out["limit"] = int(self._expect("number"))
             elif self._kw("OFFSET"):
-                out["offset"] = int(self._expect("num"))
+                out["offset"] = int(self._expect("number"))
             else:
                 break
         if sub:
@@ -1753,7 +1684,7 @@ class SparqlEngine:
                             meta_proj[_meta_col(name, "uri")] = (
                                 F.col("obj_is_uri").cast("boolean")
                                 if "obj_is_uri" in self.cols
-                                else F.col(colname).rlike(_URI_SHAPE)
+                                else F.col(colname).rlike(URI_SHAPE)
                                 | F.col(colname).startswith("_:"))
                         else:
                             # subject/predicate/graph positions hold IRIs
@@ -2236,7 +2167,7 @@ class SparqlEngine:
                 # engine's string model); the constructed term's
                 # metadata materializes only when the surrounding
                 # BIND(... AS ?v) target is introspected (_bind_meta).
-                # BASE applies to parsed IRI tokens (_resolve); IRI()
+                # BASE applies to parsed IRI tokens (_iri); IRI()
                 # over a computed string still treats its argument as
                 # absolute (documented narrow limitation).
                 return cargs[0]
@@ -2312,7 +2243,7 @@ class SparqlEngine:
             # copying a sidecar-less variable: keep the same shape
             # heuristic its direct introspection would use
             src = F.col(expr[1])
-            uri = src.rlike(_URI_SHAPE) | src.startswith("_:")
+            uri = src.rlike(URI_SHAPE) | src.startswith("_:")
         elif expr[0] == "iri":
             uri = F.lit(True)
         elif expr[0] == "lit":
@@ -2373,7 +2304,7 @@ class SparqlEngine:
         val = F.col(v)
         has = df is not None and _meta_col(v, "dt") in df.columns
         if not has:
-            heur_uri = val.rlike(_URI_SHAPE)
+            heur_uri = val.rlike(URI_SHAPE)
             return {
                 "LANG": F.when(val.isNotNull(), F.lit("")),
                 "DATATYPE": F.when(val.isNotNull(), F.lit(XSD_STRING)),
@@ -2428,7 +2359,7 @@ class SparqlEngine:
                 F.concat(F.lit("L|"), eff, F.lit("|"),
                          F.coalesce(lang_c, F.lit("")), F.lit("|"), val))
         else:
-            heur = val.rlike(_URI_SHAPE) | val.startswith("_:")
+            heur = val.rlike(URI_SHAPE) | val.startswith("_:")
             key = F.when(heur, F.concat(F.lit("R|"), val)).otherwise(
                 F.concat(F.lit(f"L|{XSD_STRING}||"), val))
         return F.when(val.isNotNull(), key)

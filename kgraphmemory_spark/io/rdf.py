@@ -15,11 +15,13 @@ Term model (matches the long `triples` table):
 - object: URI string OR literal lexical value; `obj_datatype` carries the
   `^^<dt>` IRI (NULL for plain/URI), `obj_lang` the `@lang` tag.
 
-Serialization renders an object as a URI term iff it matches an IRI scheme
-pattern and as an escaped literal otherwise (the reference's parser makes
-the same syntactic distinction, kgraph_rdf_db.py:953-1001).  Either way
-parse(serialize(df)) round-trips the table exactly — both arms yield the
-original string back.
+Serialization renders an object by io/terms.py's object-term rule
+(``object_kind``): a typed or tagged object is a literal, otherwise a
+``_:`` label is a blank node, an IRI-shaped string an IRI term and
+anything else an escaped literal (the reference's parser makes the same
+syntactic distinction, kgraph_rdf_db.py:953-1001).  Every arm yields the
+original string back, so parse(serialize(df)) round-trips the table
+exactly.
 
 Non-line formats (S20) have whole-file subset parsers — Turtle + TriG in
 io/turtle.py, JSON-LD in io/jsonld.py, RDF/XML in io/rdfxml.py (one task
@@ -34,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .terms import URI_SHAPE
+from .terms import BLANK, ECHAR, IRI, UCHAR, object_columns, object_kind
 
 # One master pattern; group numbers used by parse_lines below.
 #   1: <subject>        2: _:subject
@@ -46,13 +48,11 @@ _NT_PATTERN = (
     r'^\s*(?:<([^>\s]*)>|(_:\S+))'          # subject
     r'\s+<([^>\s]*)>'                        # predicate
     r'\s+(?:<([^>\s]*)>|(_:\S+)|'            # object: uri | blank |
-    r'"((?:[^"\\]|\\.)*)"'                   #   literal body
+    rf'"((?:[^"\\]|{ECHAR}|{UCHAR})*)"'        #   literal body
     r'(?:\^\^<([^>\s]*)>|@([A-Za-z0-9\-]+))?)'  # optional datatype/lang
     r'(?:\s+<([^>\s]*)>)?'                   # optional graph (N-Quads)
     r'\s*\.\s*(?:#.*)?$'                     # terminating dot, trailing comment
 )
-
-_SENTINEL = "\x00"  # never present in N-Triples source (control char)
 
 
 def _escape_literal(c: Column) -> Column:
@@ -66,15 +66,24 @@ def _escape_literal(c: Column) -> Column:
 
 
 def _unescape_literal(c: Column) -> Column:
-    """Inverse of _escape_literal; `\\\\` routed through a sentinel so the
-    simple escapes can be undone without touching unescaped backslashes."""
-    c = F.replace(c, F.lit("\\\\"), F.lit(_SENTINEL))
-    c = F.replace(c, F.lit('\\"'), F.lit('"'))
-    c = F.replace(c, F.lit("\\n"), F.lit("\n"))
-    c = F.replace(c, F.lit("\\r"), F.lit("\r"))
-    c = F.replace(c, F.lit("\\t"), F.lit("\t"))
-    c = F.replace(c, F.lit(_SENTINEL), F.lit("\\"))
-    return c
+    """Decode a literal body's ECHAR and UCHAR escapes (io/terms.py's
+    patterns, which ``_NT_PATTERN`` admits alone) as Column algebra:
+    split the body into escapes and the runs between them, decode each
+    escape (a UCHAR through its UTF-16 or UTF-32 bytes), join."""
+    def piece(p: Column) -> Column:
+        return (F.when(p.startswith("\\u"), F.decode(
+                    F.unhex(F.replace(p, F.lit("\\u"), F.lit(""))),
+                    "UTF-16BE"))
+                .when(p.startswith("\\U"),
+                      F.decode(F.unhex(F.substr(p, F.lit(3))), "UTF-32"))
+                .when(p.startswith("\\"),
+                      F.translate(F.substr(p, F.lit(2)), "tbnrf",
+                                  "\t\b\n\r\f"))
+                .otherwise(p))
+    pieces = F.regexp_extract_all(c, F.lit(f"{UCHAR}|{ECHAR}|[^\\\\]+"),
+                                  F.lit(0))
+    return F.when(c.contains("\\"),
+                  F.array_join(F.transform(pieces, piece), "")).otherwise(c)
 
 
 def _term(uri_or_blank: Column) -> Column:
@@ -85,24 +94,18 @@ def _term(uri_or_blank: Column) -> Column:
 
 
 def _object_term(cols: set[str]) -> Column:
-    """Render the object column as an N-Triples term: a typed/lang-tagged
-    object is always a literal; otherwise IRI-shaped strings become URI
-    terms and ``_:`` labels stay blank nodes.  Shared by the line formats
-    here and the whole-document serializers (io/serialize.py)."""
-    obj = F.col("object")
-    dt = F.col("obj_datatype") if "obj_datatype" in cols else F.lit(None).cast("string")
-    lang = F.col("obj_lang") if "obj_lang" in cols else F.lit(None).cast("string")
+    """Render the object column as an N-Triples term by its
+    ``object_kind``."""
+    obj, dt, lang = object_columns(cols)
+    kind = object_kind(obj, dt, lang)
     literal = F.concat(
         F.lit('"'), _escape_literal(obj), F.lit('"'),
         F.when(dt.isNotNull(), F.concat(F.lit("^^<"), dt, F.lit(">")))
-         .when(lang.isNotNull(), F.concat(F.lit("@"), lang))
+         .when(lang != "", F.concat(F.lit("@"), lang))
          .otherwise(F.lit("")),
     )
-    return F.when(
-        dt.isNull() & lang.isNull() & obj.rlike(URI_SHAPE), _term(obj)
-    ).when(
-        dt.isNull() & lang.isNull() & obj.startswith("_:"), obj
-    ).otherwise(literal)
+    return (F.when(kind == IRI, _term(obj)).when(kind == BLANK, obj)
+            .otherwise(literal))
 
 
 def serialize_lines(triples: DataFrame, fmt: str = "ntriples") -> DataFrame:
@@ -181,9 +184,7 @@ def load_ntriples(spark, path: str, default_graph: str | None = None) -> DataFra
     return parsed.select(
         bn("subject").alias("subject"),
         F.col("predicate"),
-        F.when(F.col("object").startswith("_:")
-               & F.col("obj_datatype").isNull()
-               & F.col("obj_lang").isNull(),
+        F.when(object_kind(*object_columns(parsed.columns)) == BLANK,
                F.concat(F.col("object"), suf))
          .otherwise(F.col("object")).alias("object"),
         "obj_datatype", "obj_lang",

@@ -41,18 +41,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .rdf import _escape_literal, _object_term, _term
-from .terms import RDF_NS, RDF_TYPE, URI_SHAPE
+from .rdf import _escape_literal, _term
+from .terms import (BLANK, IRI, LITERAL, RDF_NS, RDF_TYPE, object_columns,
+                    object_kind)
 
 _SAFE_LOCAL = r"^[A-Za-z_][A-Za-z0-9_\-]*$"
-
-
-def _dt_lang(cols: set[str]) -> tuple[Column, Column]:
-    dt = (F.col("obj_datatype") if "obj_datatype" in cols
-          else F.lit(None).cast("string"))
-    lang = (F.col("obj_lang") if "obj_lang" in cols
-            else F.lit(None).cast("string"))
-    return dt, lang
 
 
 # ------------------------------------------------------------- Turtle / TriG
@@ -75,18 +68,16 @@ def _prefixed(iri: Column, prefixes: dict[str, str] | None) -> Column:
 def _turtle_blocks(triples: DataFrame, group_graph: bool,
                    prefixes: dict[str, str] | None = None) -> DataFrame:
     cols = set(triples.columns)
-    dt, lang = _dt_lang(cols)
-    obj = F.col("object")
-    is_lit = dt.isNotNull() | lang.isNotNull() | (
-        ~obj.rlike(URI_SHAPE) & ~obj.startswith("_:"))
+    obj, dt, lang = object_columns(cols)
+    kind = object_kind(obj, dt, lang)
     lit_term = F.concat(
         F.lit('"'), _escape_literal(obj), F.lit('"'),
         F.when(dt.isNotNull(),
                F.concat(F.lit("^^"), _prefixed(dt, prefixes)))
-         .when(lang.isNotNull(), F.concat(F.lit("@"), lang))
+         .when(lang != "", F.concat(F.lit("@"), lang))
          .otherwise(F.lit("")))
-    obj_term = F.when(is_lit, lit_term).when(
-        obj.startswith("_:"), obj).otherwise(_prefixed(obj, prefixes))
+    obj_term = F.when(kind == LITERAL, lit_term).when(
+        kind == BLANK, obj).otherwise(_prefixed(obj, prefixes))
     pred_term = F.when(F.col("predicate") == RDF_TYPE, F.lit("a")) \
         .otherwise(_prefixed(F.col("predicate"), prefixes))
     base = triples.select(
@@ -152,11 +143,8 @@ def serialize_jsonld(triples: DataFrame) -> DataFrame:
     one struct type.  Each row alone is a valid JSON-LD document; a full
     document is the array of them (``dump_rdf_string`` adds the
     brackets).  Named graphs are ignored (use TriG / N-Quads)."""
-    cols = set(triples.columns)
-    dt, lang = _dt_lang(cols)
-    obj = F.col("object")
-    is_ref = dt.isNull() & lang.isNull() & (
-        obj.rlike(URI_SHAPE) | obj.startswith("_:"))
+    obj, dt, lang = object_columns(triples.columns)
+    is_ref = object_kind(obj, dt, lang) != LITERAL
     vstruct = F.struct(
         F.when(is_ref, obj).alias("@id"),
         F.when(~is_ref, obj).alias("@value"),
@@ -212,9 +200,9 @@ def serialize_rdfxml(triples: DataFrame) -> DataFrame:
     ``<rdf:RDF>`` root (XML's single-root rule makes whole-document XML
     a driver-side format; use N-Triples for scale sinks).  Named graphs
     are ignored (RDF/XML has none)."""
-    cols = set(triples.columns)
-    dt, lang = _dt_lang(cols)
-    obj, pred = F.col("object"), F.col("predicate")
+    obj, dt, lang = object_columns(triples.columns)
+    kind = object_kind(obj, dt, lang)
+    pred = F.col("predicate")
     local = F.regexp_extract(pred, _NCNAME_TAIL, 0)
     ns = F.substring(pred, F.lit(1), F.length(pred) - F.length(local))
     bad = (F.length(local) == 0) | (F.length(ns) == 0)
@@ -223,13 +211,12 @@ def serialize_rdfxml(triples: DataFrame) -> DataFrame:
         pred))).otherwise(local)
     open_tag = F.concat(F.lit("<n:"), local, F.lit(' xmlns:n="'),
                         _xml_attr(ns), F.lit('"'))
-    is_ref = dt.isNull() & lang.isNull() & obj.rlike(URI_SHAPE)
     prop = F.when(
-        is_ref,
+        kind == IRI,
         F.concat(open_tag, F.lit(' rdf:resource="'), _xml_attr(obj),
                  F.lit('"/>')),
     ).when(
-        dt.isNull() & lang.isNull() & obj.startswith("_:"),
+        kind == BLANK,
         F.concat(open_tag, F.lit(' rdf:nodeID="'),
                  F.substr(obj, F.lit(3)), F.lit('"/>')),
     ).otherwise(F.concat(
@@ -237,7 +224,7 @@ def serialize_rdfxml(triples: DataFrame) -> DataFrame:
         F.when(dt.isNotNull(),
                F.concat(F.lit(' rdf:datatype="'), _xml_attr(dt),
                         F.lit('"'))).otherwise(F.lit("")),
-        F.when(lang.isNotNull(),
+        F.when(lang != "",
                F.concat(F.lit(' xml:lang="'), lang,
                         F.lit('"'))).otherwise(F.lit("")),
         F.lit(">"), _xml_text(obj), F.lit("</n:"), local, F.lit(">"),

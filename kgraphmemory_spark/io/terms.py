@@ -5,9 +5,12 @@ library, pyoxigraph (kgraph_rdf_db.py:238-357,410-427,493-511), so its
 term syntax and base-IRI resolution exist once; this module is that
 one place here.
 
-- the RDF / XSD namespace constants, the IRI scheme regex and the
-  IRI-shape heuristic the store and serializers use for datatype-less
-  objects;
+- the RDF / XSD namespace constants and the IRI scheme regex;
+- the one rule for the triple table's object term, which is stored as a
+  string plus ``obj_datatype`` / ``obj_lang``: ``object_kind`` decides
+  IRI, blank node or literal and ``literal_datatype`` a literal's
+  effective datatype (as Column expressions), for every RDF writer,
+  ``remove_object`` and the SPARQL evaluator;
 - the token sub-patterns of the Turtle and SPARQL grammars — IRIREF,
   PNAME per PN_PREFIX / PN_LOCAL (a local name never ends in ``.``),
   BLANK_NODE_LABEL, the four string quote forms, INTEGER / DECIMAL /
@@ -15,7 +18,9 @@ one place here.
   with its own keywords and punctuation;
 - ``literal``: the one typing rule for literal tokens (numeric shorthand,
   a string's ``^^datatype`` / ``@lang`` suffix) and ``unescape`` for
-  string bodies (ECHAR plus ``\\uXXXX`` / ``\\UXXXXXXXX``);
+  string bodies: the ``ECHAR`` / ``UCHAR`` patterns, which N-Triples'
+  JVM-side decoder (io/rdf.py) applies too, and an error for any other
+  escape;
 - ``resolve_iri``: RFC 3986 §5.2 reference resolution, for any scheme;
 - ``collection``: the rdf:first / rdf:rest chain behind Turtle ``( … )``,
   JSON-LD ``@list`` and RDF/XML ``parseType="Collection"``.
@@ -24,6 +29,9 @@ one place here.
 from __future__ import annotations
 
 import re
+
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 RDF_TYPE = RDF_NS + "type"
@@ -37,9 +45,51 @@ XSD_STRING = XSD + "string"
 
 # an absolute IRI starts with a scheme (RFC 3986 §3.1)
 SCHEME = re.compile(r"^[A-Za-z][A-Za-z0-9+.\-]*:")
-# IRI-shaped datatype-less objects are IRIs, everything else a literal:
-# scheme:rest with no whitespace/quotes/brackets (a Spark rlike pattern)
+# IRI shape: scheme:rest with no whitespace/quotes/brackets (a Spark
+# rlike pattern)
 URI_SHAPE = SCHEME.pattern + r'[^\s"<>]*$'
+
+# -- the object term of the triple table ---------------------------------
+# object_kind's values
+IRI, BLANK, LITERAL = "iri", "blank", "literal"
+
+
+def object_columns(columns) -> tuple[Column, Column, Column]:
+    """(object, obj_datatype, obj_lang) of a triple table with these
+    column names; an absent metadata column reads NULL."""
+    null = F.lit(None).cast("string")
+    return (F.col("object"),
+            F.col("obj_datatype") if "obj_datatype" in columns else null,
+            F.col("obj_lang") if "obj_lang" in columns else null)
+
+
+def object_is_literal(obj: Column, dt: Column, lang: Column) -> Column:
+    """An object with a datatype or a language tag is a literal;
+    otherwise a ``_:`` label or an IRI-shaped string is not, and
+    anything else is.  An empty tag is no tag (SPARQL's ``LANG`` of an
+    untagged literal)."""
+    return (dt.isNotNull() | (lang != "")
+            | ~(obj.startswith("_:") | obj.rlike(URI_SHAPE)))
+
+
+def term_kind(term: Column, literal: Column) -> Column:
+    """IRI / BLANK / LITERAL of a term, given whether it is a literal: a
+    ``_:`` label that is no literal is a blank node, any other an IRI."""
+    return (F.when(literal, F.lit(LITERAL))
+            .when(term.startswith("_:"), F.lit(BLANK))
+            .otherwise(F.lit(IRI)))
+
+
+def object_kind(obj: Column, dt: Column, lang: Column) -> Column:
+    """IRI / BLANK / LITERAL of an object by ``object_is_literal``."""
+    return term_kind(obj, object_is_literal(obj, dt, lang))
+
+
+def literal_datatype(dt: Column, lang: Column) -> Column:
+    """A literal's effective datatype: its own, else rdf:langString
+    when it has a tag, else xsd:string."""
+    return F.coalesce(dt, F.when(lang != "", F.lit(RDF_LANGSTRING))
+                      .otherwise(F.lit(XSD_STRING)))
 
 # -- token sub-patterns (Turtle §6.5 / SPARQL §19.8 terminals) -----------
 IRIREF = r'<[^<>"{}|^`\\\s]*>'
@@ -60,10 +110,20 @@ LANGTAG = r"@[A-Za-z]+(?:-[A-Za-z0-9]+)*"
 DTMARK = r"\^\^"
 
 _PN_LOCAL_ESC = re.compile(r"\\(.)")
-_ECHAR = {"t": "\t", "b": "\b", "n": "\n", "r": "\r", "f": "\f",
-          '"': '"', "'": "'", "\\": "\\"}
-_ESCAPE = re.compile(r"\\(?:u([0-9A-Fa-f]{4})|U([0-9A-Fa-f]{8})|(.))",
-                     re.S)
+
+# -- string escapes (regexes Python's re and Java's Pattern read alike) --
+ECHAR = r"""\\[tbnrf"'\\]"""
+# a UCHAR names a Unicode scalar value: a \u surrogate pair (read as one
+# character), a \u that is no surrogate, or a \U up to 10FFFF that is no
+# surrogate
+_HEX2 = "[0-9A-Fa-f]{2}"
+_NO_SURROGATE = "(?![dD][89a-fA-F])"
+UCHAR = (rf"\\u[dD][89abAB]{_HEX2}\\u[dD][c-fC-F]{_HEX2}"
+         rf"|\\u{_NO_SURROGATE}{_HEX2}{_HEX2}"
+         rf"|\\U(?:0000{_NO_SURROGATE}|000[1-9A-Fa-f]|0010){_HEX2}{_HEX2}")
+_ESCAPE = re.compile(rf"(?P<ok>{UCHAR}|{ECHAR})"
+                     r"|\\(?:u[0-9A-Fa-f]{4}|U[0-9A-Fa-f]{8}|.?)", re.S)
+_ECHAR = {"t": "\t", "b": "\b", "n": "\n", "r": "\r", "f": "\f"}
 
 
 def lexer(*rules: tuple[str, str]) -> re.Pattern:
@@ -87,11 +147,17 @@ def tokens(lex: re.Pattern, text: str, what: str):
 
 def unescape(body: str) -> str:
     """String-body escapes: ECHAR (``\\t \\b \\n \\r \\f \\" \\' \\\\``)
-    and UCHAR (``\\uXXXX`` / ``\\UXXXXXXXX``); any other escaped
-    character stands for itself."""
+    and UCHAR (``\\uXXXX`` / ``\\UXXXXXXXX``).  Any other escape, a
+    lone surrogate or a code point past 10FFFF raises ``ValueError``."""
     def one(m: re.Match) -> str:
-        u4, u8, c = m.groups()
-        return _ECHAR.get(c, c) if c is not None else chr(int(u4 or u8, 16))
+        esc = m.group()
+        if m.lastgroup != "ok":
+            raise ValueError(f"invalid string escape {esc!r}")
+        if esc[1] == "u":
+            return bytes.fromhex(esc.replace("\\u", "")).decode("utf-16-be")
+        if esc[1] == "U":
+            return chr(int(esc[2:], 16))
+        return _ECHAR.get(esc[1], esc[1])
     return _ESCAPE.sub(one, body)
 
 

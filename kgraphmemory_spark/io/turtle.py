@@ -133,8 +133,8 @@ class _Parser:
 
     def _predicate_objects(self, subj: str, toks, rows: list[tuple],
                            ends: tuple[str, ...]) -> str:
-        """``p1 o1, o2 ; p2 o3`` about ``subj`` (a trailing ``;`` is
-        allowed), up to the punctuation in ``ends`` that closes it —
+        """``p1 o1, o2 ; p2 o3`` about ``subj`` (repeated and trailing
+        ``;`` are allowed), up to the punctuation in ``ends`` that closes it —
         left unread and returned."""
         while True:
             pk, pt = toks.next()
@@ -152,7 +152,7 @@ class _Parser:
                     break
                 toks.next()
             more = toks.peek() == ("punct", ";")
-            if more:
+            while toks.peek() == ("punct", ";"):
                 toks.next()
             nk, nt = toks.peek()
             if nk == "punct" and nt in ends:

@@ -21,7 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..io.terms import URI_SHAPE, XSD
+from ..io.terms import IRI, XSD, object_columns, object_kind
 from ..semantics import RDF_TYPE, VITAL_TYPE
 
 _XSD_BY_SPARK = {
@@ -191,26 +191,15 @@ def remove_object(triples: DataFrame, uri: str) -> DataFrame:
     deletes quads with subject=URI AND quads whose object is the
     NamedNode(uri) (kgraph.py:147-181) so no edge points at a ghost.
 
-    URI-object detection on the long table: typed / lang-tagged objects
-    are literals and survive, and a datatype-less object only cascades
-    when it is IRI-shaped (io/terms.py's ``URI_SHAPE``, the serializers'
-    heuristic) — a plain prose literal that lexically equals the URI is
-    kept.  A scheme-shaped plain literal identical to the URI is still
-    indistinguishable; writers that need that distinction carry an
-    ``obj_is_uri`` flag column, honored here when present.
+    An object cascades when it equals the URI and io/terms.py's
+    ``object_kind`` reads it as an IRI: typed and lang-tagged objects
+    are literals and survive, as does a datatype-less object that is
+    not IRI-shaped.  A datatype-less, IRI-shaped literal equal to the
+    URI is indistinguishable from the IRI in this table and cascades.
     """
-    cols = set(triples.columns)
-    obj = F.col("object")
-    if "obj_is_uri" in cols:
-        obj_is_uri = F.col("obj_is_uri")
-    else:
-        obj_is_uri = obj.rlike(URI_SHAPE)
-        if "obj_datatype" in cols:
-            obj_is_uri = obj_is_uri & F.col("obj_datatype").isNull()
-        if "obj_lang" in cols:
-            obj_is_uri = obj_is_uri & F.col("obj_lang").isNull()
+    obj, dt, lang = object_columns(triples.columns)
     subj_match = F.col("subject").eqNullSafe(uri)
-    obj_match = obj.eqNullSafe(uri) & F.coalesce(obj_is_uri, F.lit(False))
+    obj_match = obj.eqNullSafe(uri) & (object_kind(obj, dt, lang) == IRI)
     return triples.where(~subj_match & ~obj_match)
 
 

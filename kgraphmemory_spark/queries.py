@@ -2757,10 +2757,10 @@ def q_g2(spark, sf):
 """)
 def q_sparql_introspect(spark, sf):
     """Term introspection through the raw SPARQL front-end: per-predicate
-    census of IRI-valued objects (isIRI over a table with no obj_is_uri
-    column exercises the engine-wide shape heuristic, which the DuckDB
-    twin reproduces as a regexp); below the certified fold,
-    mirror-verified."""
+    census of IRI-valued objects (isIRI applies the object-term rule of
+    io/terms.py, whose IRI-shape test the DuckDB twin reproduces as a
+    regexp; the KG's IRI-shaped objects carry no datatype or tag); below
+    the certified fold, mirror-verified."""
     from .sparql import SparqlEngine
     eng = SparqlEngine(kg_tables(spark, sf).triples)
     return eng.query("""SELECT ?p (SUM(IF(isIRI(?o), 1, 0)) AS ?n_iri)

@@ -85,13 +85,16 @@ Documented deviations (all on the engine's string data model):
   hash-joinable;
 - a typed object literal matches on lexical form, plus datatype when
   the table carries ``obj_datatype``;
-- term introspection reads the store's metadata columns
-  (``obj_datatype`` / ``obj_lang`` / ``obj_is_uri``; the last falls
-  back to the engine-wide IRI shape heuristic): a variable bound only
-  where no metadata exists (property-path objects, VALUES rows,
-  BIND/subquery results) is treated as a simple literal, and when a
-  variable is bound in several positions the first binding's metadata
-  wins (joins coalesce left-first);
+- term introspection decides IRI, blank node or literal by the one
+  object-term rule (io/terms.py ``object_kind``): a datatype or a
+  language tag makes a literal, otherwise a ``_:`` label is a blank
+  node, an IRI-shaped string an IRI and anything else a literal.  An
+  object reads ``obj_datatype`` / ``obj_lang``; a subject, predicate or
+  graph is never a literal; a variable bound where no metadata exists
+  (property-path objects, VALUES rows, subquery results) has no
+  datatype or tag, so the rule reads its value alone.  When a variable
+  is bound in several positions the first binding's metadata wins
+  (joins coalesce left-first);
 - ``CONSTRUCT`` returns the deduplicated triple set (a graph is a set);
 - ``SPARQL UPDATE`` (``INSERT DATA`` / ``DELETE DATA`` /
   ``DELETE WHERE`` / ``[WITH <g>] DELETE {} INSERT {} WHERE {}`` and
@@ -146,9 +149,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .io.terms import (
-    BLANK_NODE_LABEL, DTMARK, IRIREF, LANGTAG, NUMBER, PNAME, RDF_LANGSTRING,
-    RDF_TYPE, STRING, URI_SHAPE, XSD, XSD_STRING, expand_pname, lexer, literal,
-    resolve_iri, string_value, tokens)
+    BLANK, BLANK_NODE_LABEL, DTMARK, IRI, IRIREF, LANGTAG, LITERAL, NUMBER,
+    PNAME, RDF_TYPE, STRING, XSD, expand_pname, lexer, literal,
+    literal_datatype, object_columns, object_is_literal, resolve_iri,
+    string_value, term_kind, tokens)
 from .session import driver_frame
 
 _NUMERIC_DTS = {XSD + s for s in ("integer", "decimal", "double", "float",
@@ -619,12 +623,12 @@ class _Parser:
                     self.i += 1
                     continue
                 break
-            if self._at("op", ";"):
+            if not self._at("op", ";"):
+                break
+            while self._at("op", ";"):          # ';' may repeat
                 self.i += 1
-                if self._at("op", ".") or self._at("op", "}"):
-                    break                       # dangling ';'
-                continue
-            break
+            if self._at("op", ".") or self._at("op", "}"):
+                break                           # dangling ';'
 
     # -- expressions ----------------------------------------------------
     def _bracketed_expr(self):
@@ -1669,32 +1673,21 @@ class SparqlEngine:
                 else:
                     proj[name] = F.col(colname)
                     if name in self._meta:
-                        # metadata sidecars for introspected variables;
-                        # first-binding position wins (joins coalesce)
+                        # metadata sidecars for introspected variables
+                        # (read by _term_meta); first-binding position
+                        # wins (joins coalesce).  An object leaves its
+                        # kind to the object-term rule (NULL "uri");
+                        # subject, predicate and graph positions hold
+                        # references (IRIs or blank nodes), never literals
                         null_s = F.lit(None).cast("string")
                         if literal_pos:
-                            meta_proj[_meta_col(name, "dt")] = (
-                                F.col("obj_datatype").cast("string")
-                                if "obj_datatype" in self.cols else null_s)
-                            meta_proj[_meta_col(name, "lang")] = (
-                                F.col("obj_lang").cast("string")
-                                if "obj_lang" in self.cols else null_s)
-                            # "uri" sidecar = is-a-reference (IRI or
-                            # blank node), not a literal
-                            meta_proj[_meta_col(name, "uri")] = (
-                                F.col("obj_is_uri").cast("boolean")
-                                if "obj_is_uri" in self.cols
-                                else F.col(colname).rlike(URI_SHAPE)
-                                | F.col(colname).startswith("_:"))
+                            _, dt, lang = object_columns(self.cols)
                         else:
-                            # subject/predicate/graph positions hold IRIs
-                            # or blank nodes, never literals — the "uri"
-                            # sidecar means is-a-reference, so it is True
-                            # here unconditionally; _introspect splits
-                            # isIRI/isBLANK on the startswith("_:") check
-                            meta_proj[_meta_col(name, "dt")] = null_s
-                            meta_proj[_meta_col(name, "lang")] = null_s
-                            meta_proj[_meta_col(name, "uri")] = F.lit(True)
+                            dt = lang = null_s
+                        meta_proj[_meta_col(name, "dt")] = dt
+                        meta_proj[_meta_col(name, "lang")] = lang
+                        meta_proj[_meta_col(name, "uri")] = F.lit(
+                            None if literal_pos else True).cast("boolean")
             elif kind == "iri":
                 conds.append(F.col(colname) == term[1])
             elif kind == "in":                   # dataset-restricted graph
@@ -2229,30 +2222,20 @@ class SparqlEngine:
         raise ValueError(f"unsupported expression {e!r}")
 
     def _bind_meta(self, df, var: str, expr) -> DataFrame:
-        """Metadata sidecars for an introspected BIND target: copied
-        from the source variable for a plain copy, static for constant
-        terms and the term constructors IRI()/URI()/STRLANG/STRDT,
-        simple-literal for every other computed expression."""
+        """Metadata sidecars for an introspected BIND target: those of
+        the source for a variable or constant term (_term_meta), static
+        for the term constructors IRI()/URI()/STRLANG/STRDT and the
+        typed builtins, simple-literal for every other computed
+        expression."""
         null_s = F.lit(None).cast("string")
-        dt, lang, uri = null_s, null_s, F.lit(False)
-        if expr[0] == "var" and _meta_col(expr[1], "dt") in df.columns:
-            dt = F.col(_meta_col(expr[1], "dt"))
-            lang = F.col(_meta_col(expr[1], "lang"))
-            uri = F.col(_meta_col(expr[1], "uri"))
-        elif expr[0] == "var":
-            # copying a sidecar-less variable: keep the same shape
-            # heuristic its direct introspection would use
-            src = F.col(expr[1])
-            uri = src.rlike(URI_SHAPE) | src.startswith("_:")
-        elif expr[0] == "iri":
-            uri = F.lit(True)
-        elif expr[0] == "lit":
-            _, _lex, dt0, lang0 = expr
-            dt = F.lit(dt0) if dt0 else null_s
-            lang = F.lit(lang0) if lang0 else null_s
-        elif expr[0] == "func":
+        if expr[0] in ("var", "iri", "lit"):
+            _, dt, lang, kind = self._term_meta(expr, df)
+            uri = kind != LITERAL
+        else:
+            dt, lang, uri = null_s, null_s, F.lit(False)
+        if expr[0] == "func":
             nm = expr[1]
-            if nm in ("IRI", "URI"):
+            if nm in ("IRI", "URI", "UUID", "BNODE"):
                 uri = F.lit(True)
             elif nm == "STRLANG":
                 tag = expr[2][1]
@@ -2268,119 +2251,65 @@ class SparqlEngine:
                 dt = F.lit(expr[2][0][1])
             elif nm == "NOW":
                 dt = F.lit(XSD + "dateTime")
-            elif nm in ("UUID", "BNODE"):
-                uri = F.lit(True)
         return (df.withColumn(_meta_col(var, "dt"), dt)
                 .withColumn(_meta_col(var, "lang"), lang)
                 .withColumn(_meta_col(var, "uri"), uri))
 
-    def _introspect(self, name: str, arg, df) -> Column:
-        """LANG / DATATYPE / isIRI / isURI / isLiteral / isBlank over a
-        variable (via its metadata sidecars) or a constant term.
-
-        Documented model: a variable bound only where no metadata exists
-        (property-path objects, VALUES rows, BIND/subquery results) is a
-        simple literal — LANG "" , DATATYPE xsd:string, isLiteral true;
-        isIRI falls back to the engine-wide IRI shape heuristic
-        (operators/store.py's obj_is_uri fallback)."""
-        if arg[0] == "lit":
-            _, lex, dt, lang = arg
-            return {
-                "LANG": F.lit(lang or ""),
-                "DATATYPE": F.lit(
-                    dt or (RDF_LANGSTRING if lang else XSD_STRING)),
-                "ISIRI": F.lit(False), "ISURI": F.lit(False),
-                "ISBLANK": F.lit(False), "ISLITERAL": F.lit(True),
-            }[name]
-        if arg[0] == "iri":
-            if name in ("ISIRI", "ISURI"):
-                return F.lit(True)
-            if name in ("ISLITERAL", "ISBLANK"):
-                return F.lit(False)
-            # LANG/DATATYPE of an IRI is a type error → NULL (errors are
-            # NULL in this engine: FILTER drops, BIND leaves unbound)
-            return F.lit(None).cast("string")
-        v = arg[1]
+    def _term_meta(self, term, df) -> tuple[Column, Column, Column, Column]:
+        """(value, datatype, lang, kind) of a variable or a constant
+        term, kind being IRI / BLANK / LITERAL.  A variable reads the
+        metadata sidecars _scan / _bind_meta made for it; a variable
+        without them, or with a NULL "uri" sidecar, gets its kind from
+        the object-term rule (io/terms.py ``object_is_literal``)."""
+        null_s = F.lit(None).cast("string")
+        if term[0] == "lit":
+            _, lex, dt, lang = term
+            return (F.lit(lex), F.lit(dt).cast("string"),
+                    F.lit(lang).cast("string"), F.lit(LITERAL))
+        if term[0] == "iri":
+            return F.lit(term[1]), null_s, null_s, F.lit(IRI)
+        v = term[1]
         val = F.col(v)
-        has = df is not None and _meta_col(v, "dt") in df.columns
-        if not has:
-            heur_uri = val.rlike(URI_SHAPE)
-            return {
-                "LANG": F.when(val.isNotNull(), F.lit("")),
-                "DATATYPE": F.when(val.isNotNull(), F.lit(XSD_STRING)),
-                "ISIRI": heur_uri, "ISURI": heur_uri,
-                "ISBLANK": val.startswith("_:"),
-                "ISLITERAL": val.isNotNull() & ~heur_uri
-                & ~val.startswith("_:"),
-            }[name]
-        dt_c = F.col(_meta_col(v, "dt"))
-        lang_c = F.col(_meta_col(v, "lang"))
-        uri_c = F.coalesce(F.col(_meta_col(v, "uri")), F.lit(False))
-        is_blank = uri_c & val.startswith("_:")
-        is_iri = uri_c & ~val.startswith("_:")
-        if name in ("ISIRI", "ISURI"):
-            return F.when(val.isNotNull(), is_iri)
-        if name == "ISBLANK":
-            return F.when(val.isNotNull(), is_blank)
-        if name == "ISLITERAL":
-            return F.when(val.isNotNull(), ~uri_c)
-        lit_dt = F.coalesce(
-            dt_c,
-            F.when(lang_c.isNotNull() & (lang_c != ""),
-                   F.lit(RDF_LANGSTRING)).otherwise(F.lit(XSD_STRING)))
-        if name == "DATATYPE":
-            return F.when(val.isNotNull() & ~uri_c, lit_dt)
-        # LANG: "" for literals without a tag; NULL (error) for IRIs
-        return F.when(val.isNotNull() & ~uri_c,
-                      F.coalesce(lang_c, F.lit("")))
+        if df is not None and _meta_col(v, "uri") in df.columns:
+            dt, lang, uri = (F.col(_meta_col(v, k))
+                             for k in ("dt", "lang", "uri"))
+            is_lit = F.coalesce(~uri, object_is_literal(val, dt, lang))
+        else:
+            dt = lang = null_s
+            is_lit = object_is_literal(val, dt, lang)
+        return val, dt, lang, term_kind(val, is_lit)
+
+    def _introspect(self, name: str, arg, df) -> Column:
+        """LANG / DATATYPE / isIRI / isURI / isLiteral / isBlank of a
+        variable or a constant term (_term_meta).  LANG and DATATYPE of
+        an IRI or a blank node are type errors → NULL (errors are NULL
+        in this engine: FILTER drops, BIND leaves unbound)."""
+        val, dt, lang, kind = self._term_meta(arg, df)
+        is_lit = kind == LITERAL
+        out = {
+            "ISIRI": kind == IRI, "ISURI": kind == IRI,
+            "ISBLANK": kind == BLANK, "ISLITERAL": is_lit,
+            "DATATYPE": F.when(is_lit, literal_datatype(dt, lang)),
+            # "" for a literal without a tag
+            "LANG": F.when(is_lit, F.coalesce(lang, F.lit(""))),
+        }[name]
+        return F.when(val.isNotNull(), out)
 
     def _term_key(self, arg, df) -> Column:
-        """Canonical term-identity key for sameTerm: ``R|<lex>`` for
-        references (IRIs / blank nodes), ``L|<dt>|<lang>|<lex>`` for
-        literals, with the same effective-datatype and shape-heuristic
-        fallbacks as _introspect.  NULL (error) when unbound."""
-        if arg[0] == "lit":
-            _, lex, dt, lang = arg
-            eff = dt or (RDF_LANGSTRING if lang else XSD_STRING)
-            return F.lit(f"L|{eff}|{lang or ''}|{lex}")
-        if arg[0] == "iri":
-            return F.lit("R|" + arg[1])
-        v = arg[1]
-        val = F.col(v)
-        if df is not None and _meta_col(v, "dt") in df.columns:
-            dt_c = F.col(_meta_col(v, "dt"))
-            lang_c = F.col(_meta_col(v, "lang"))
-            uri_c = F.coalesce(F.col(_meta_col(v, "uri")), F.lit(False))
-            eff = F.coalesce(
-                dt_c, F.when(lang_c.isNotNull() & (lang_c != ""),
-                             F.lit(RDF_LANGSTRING))
-                .otherwise(F.lit(XSD_STRING)))
-            key = F.when(uri_c, F.concat(F.lit("R|"), val)).otherwise(
-                F.concat(F.lit("L|"), eff, F.lit("|"),
-                         F.coalesce(lang_c, F.lit("")), F.lit("|"), val))
-        else:
-            heur = val.rlike(URI_SHAPE) | val.startswith("_:")
-            key = F.when(heur, F.concat(F.lit("R|"), val)).otherwise(
-                F.concat(F.lit(f"L|{XSD_STRING}||"), val))
-        return F.when(val.isNotNull(), key)
+        """Canonical term-identity key for sameTerm: ``kind|<lex>`` for
+        IRIs and blank nodes, ``literal|<dt>|<lang>|<lex>`` for literals
+        (effective datatype).  NULL (error) when unbound."""
+        val, dt, lang, kind = self._term_meta(arg, df)
+        is_lit = kind == LITERAL
+        return F.when(val.isNotNull(), F.concat_ws(
+            "|", kind, F.when(is_lit, literal_datatype(dt, lang)),
+            F.when(is_lit, F.coalesce(lang, F.lit(""))), val))
 
     def _is_numeric(self, arg, df) -> Column:
-        """isNumeric (§17.4.2.4): literal with a numeric datatype.
-        Sidecar-less bindings follow the engine's simple-literal model
-        (datatype xsd:string) → false."""
-        if arg[0] == "lit":
-            return F.lit(arg[2] in _NUMERIC_DTS)
-        if arg[0] == "iri":
-            return F.lit(False)
-        v = arg[1]
-        val = F.col(v)
-        if df is not None and _meta_col(v, "dt") in df.columns:
-            uri_c = F.coalesce(F.col(_meta_col(v, "uri")), F.lit(False))
-            num = F.coalesce(
-                F.col(_meta_col(v, "dt")).isin(list(_NUMERIC_DTS)),
-                F.lit(False))
-            return F.when(val.isNotNull(), ~uri_c & num)
-        return F.when(val.isNotNull(), F.lit(False))
+        """isNumeric (§17.4.2.4): literal with a numeric datatype."""
+        val, dt, _, kind = self._term_meta(arg, df)
+        return F.when(val.isNotNull(), (kind == LITERAL) & F.coalesce(
+            dt.isin(list(_NUMERIC_DTS)), F.lit(False)))
 
     def _xsd_cast(self, dt: str, col: Column) -> Column:
         """XPath constructor cast (§17.5) in the engine's string data

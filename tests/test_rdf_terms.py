@@ -3,6 +3,7 @@ JSON-LD and RDF/XML parsers: string escapes, prefixed names, long
 strings and base-IRI resolution give the answer the specs give, in
 every parser.  Pure Python — no SparkSession."""
 
+import re
 from urllib.parse import urljoin
 
 import pytest
@@ -142,3 +143,37 @@ def test_resolve_iri_without_a_base_or_for_an_absolute_ref():
     assert resolve_iri("", "ns#") == "ns#"
     assert resolve_iri("http://a/b/", "urn:x:y") == "urn:x:y"
     assert resolve_iri("http://a/b/", "ns#") == "http://a/b/ns#"
+
+
+@pytest.mark.parametrize("text, escape", [
+    ('<urn:s> <urn:p> "\\q" .', "\\q"),
+    ('<urn:s> <urn:p> "a\\d+" .', "\\d"),
+    ('<urn:s> <urn:p> "\\uD800" .', "\\uD800"),
+    ('<urn:s> <urn:p> "\\U00110000" .', "\\U00110000"),
+])
+def test_turtle_rejects_an_invalid_string_escape(text, escape):
+    with pytest.raises(ValueError, match=re.escape(repr(escape))):
+        parse_turtle_text(text)
+
+
+@pytest.mark.parametrize("query, escape", [
+    ('SELECT * WHERE { ?s <urn:p> ?x FILTER(REGEX(?x, "\\d+")) }', "\\d"),
+    ('SELECT * WHERE { ?s <urn:p> "\\q" }', "\\q"),
+    ("SELECT * WHERE { ?s <urn:p> '\\uDE00' }", "\\uDE00"),
+])
+def test_sparql_rejects_an_invalid_string_escape(query, escape):
+    with pytest.raises(ValueError, match=re.escape(repr(escape))):
+        _Parser(query).parse()
+
+
+def test_turtle_repeated_semicolons():
+    rows = parse_turtle_text('<urn:a> <urn:p> <urn:o> ;; <urn:q> <urn:r> ;; .')
+    assert [r[:3] for r in rows] == [("urn:a", "urn:p", "urn:o"),
+                                     ("urn:a", "urn:q", "urn:r")]
+
+
+def test_sparql_repeated_semicolons():
+    pats = _Parser("SELECT * WHERE { ?s <urn:p> ?o ;; <urn:q> ?x ;; }"
+                   ).parse()["where"].patterns
+    assert [(p, o) for _s, p, o, _g in pats] == [
+        (("iri", "urn:p"), ("var", "o")), (("iri", "urn:q"), ("var", "x"))]

@@ -26,6 +26,10 @@ ROWS = [
     ("http://e/alice", "http://e/knows", "_:b1", None, None, None),
     ("_:b1", "http://e/note", "plain <tag> & stuff\t.", None, None, None),
     ("http://e/bob", "http://e/motto", "héllo wörld \r ok", None, None, "g1"),
+    # IRI-shaped literals: the datatype or the tag keeps them literals
+    ("http://e/bob", "http://e/home", "http://example.org/x", XSD + "anyURI",
+     None, None),
+    ("http://e/bob", "http://e/mail", "mailto:a@b", None, "en", "g1"),
 ]
 SCHEMA = ("subject string, predicate string, object string, "
           "obj_datatype string, obj_lang string, graph string")

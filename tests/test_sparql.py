@@ -942,11 +942,16 @@ def test_construct_where_shorthand(eng):
 def test_term_introspection_builtins(spark):
     """LANG / DATATYPE / isIRI / isLITERAL / isBLANK / LANGMATCHES over
     typed, lang-tagged, plain-literal, IRI and blank-node objects —
-    metadata sidecars flow through joins, OPTIONAL and UNION."""
+    metadata sidecars flow through joins, OPTIONAL and UNION.  A typed
+    or tagged object is a literal even when its lexical form is
+    IRI-shaped."""
     xsd_int = "http://www.w3.org/2001/XMLSchema#integer"
     xsd_str = "http://www.w3.org/2001/XMLSchema#string"
+    xsd_any = "http://www.w3.org/2001/XMLSchema#anyURI"
     rdf_ls = "http://www.w3.org/1999/02/22-rdf-syntax-ns#langString"
     rows = [
+        ("urn:a", "urn:typed", "http://example.org/x", xsd_any, None, None),
+        ("urn:a", "urn:tagged", "mailto:a@b", None, "en", None),
         ("urn:a", "urn:label", "chat", None, "fr", None),
         ("urn:a", "urn:label", "cat hello", None, "en-US", None),
         ("urn:a", "urn:num", "42", xsd_int, None, None),
@@ -973,8 +978,10 @@ def test_term_introspection_builtins(spark):
     assert got["chat"] == rdf_ls
     assert got["just text"] == xsd_str
     assert got["urn:b"] is None and got["_:blank0"] is None
-    # isIRI / isBLANK / isLITERAL (obj_is_uri column absent → the shape
-    # heuristic classifies urn:b as IRI, _:blank0 as blank)
+    assert got["http://example.org/x"] == xsd_any
+    assert got["mailto:a@b"] == rdf_ls
+    # isIRI / isBLANK / isLITERAL: a datatype-less, tagless urn:b is an
+    # IRI, _:blank0 a blank node
     r = eng.query("""SELECT ?o WHERE { <urn:a> <urn:ref> ?o .
         FILTER(isIRI(?o)) }""").collect()
     assert [x["o"] for x in r] == ["urn:b"]
@@ -983,7 +990,30 @@ def test_term_introspection_builtins(spark):
     assert [x["o"] for x in r] == ["_:blank0"]
     r = eng.query("""SELECT ?o WHERE { <urn:a> ?p ?o .
         FILTER(isLITERAL(?o)) } ORDER BY ?o""").collect()
-    assert [x["o"] for x in r] == ["42", "cat hello", "chat", "just text"]
+    assert [x["o"] for x in r] == ["42", "cat hello", "chat",
+                                   "http://example.org/x", "just text",
+                                   "mailto:a@b"]
+    r = eng.query("""SELECT ?o WHERE { <urn:a> ?p ?o .
+        FILTER(isIRI(?o)) }""").collect()
+    assert [x["o"] for x in r] == ["urn:b"]
+    # the typed and the tagged IRI-shaped objects, through a UNION
+    r = eng.query("""SELECT ?o ?iri ?lit ?blank ?dt ?lang ?num ?same WHERE {
+        { <urn:a> <urn:typed> ?o } UNION { <urn:a> <urn:tagged> ?o }
+        BIND(isIRI(?o) AS ?iri) BIND(isLITERAL(?o) AS ?lit)
+        BIND(isBLANK(?o) AS ?blank) BIND(DATATYPE(?o) AS ?dt)
+        BIND(LANG(?o) AS ?lang) BIND(isNUMERIC(?o) AS ?num)
+        BIND(sameTerm(?o, <http://example.org/x>) AS ?same) }
+        ORDER BY ?o""").collect()
+    assert [tuple(x) for x in r] == [
+        ("http://example.org/x", False, True, False, xsd_any, "", False,
+         False),
+        ("mailto:a@b", False, True, False, rdf_ls, "en", False, False)]
+    # a VALUES binding has no metadata: an IRI has no datatype or tag
+    r = eng.query("""SELECT ?iri ?lit ?dt ?lang WHERE {
+        VALUES ?x { <urn:b> }
+        BIND(isIRI(?x) AS ?iri) BIND(isLITERAL(?x) AS ?lit)
+        BIND(DATATYPE(?x) AS ?dt) BIND(LANG(?x) AS ?lang) }""").collect()
+    assert [tuple(x) for x in r] == [(True, False, None, None)]
     # subject-position introspection: statically an IRI
     r = eng.query("""SELECT DISTINCT ?s WHERE { ?s <urn:label> ?l .
         FILTER(isIRI(?s)) } ORDER BY ?s""").collect()

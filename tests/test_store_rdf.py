@@ -121,20 +121,33 @@ def test_remove_triples_null_safe(spark):
 
 
 def test_remove_object_spares_literals(spark):
-    """Cascade delete hits URI-shaped datatype-less objects only — typed
-    literals and prose literals survive (reference deletes NamedNode
-    objects only, kgraph.py:147-181; ADVICE round 1)."""
+    """Cascade delete hits URI-shaped datatype-less, tagless objects
+    only — typed, lang-tagged and prose literals survive (reference
+    deletes NamedNode objects only, kgraph.py:147-181; ADVICE round 1)."""
     xsd_str = "http://www.w3.org/2001/XMLSchema#string"
+    xsd_any = "http://www.w3.org/2001/XMLSchema#anyURI"
     t = spark.createDataFrame(
-        [("urn:e9", "urn:prop:dest", "urn:e1", None, "urn:g"),
-         ("urn:e9", "urn:prop:title", "plain text", None, "urn:g"),
-         ("urn:e8", "urn:prop:code", "urn:e1", xsd_str, "urn:g")],
+        [("urn:e9", "urn:prop:dest", "urn:e1", None, None, "urn:g"),
+         ("urn:e9", "urn:prop:title", "plain text", None, None, "urn:g"),
+         ("urn:e8", "urn:prop:code", "urn:e1", xsd_str, None, "urn:g"),
+         ("urn:e7", "urn:prop:home", "http://example.org/x", xsd_any, None,
+          "urn:g"),
+         ("urn:e7", "urn:prop:link", "http://example.org/x", None, None,
+          "urn:g"),
+         ("urn:e7", "urn:prop:mail", "mailto:a@b", None, "en", "urn:g")],
         "subject string, predicate string, object string, "
-        "obj_datatype string, graph string")
+        "obj_datatype string, obj_lang string, graph string")
     keys = {(r.subject, r.predicate) for r in remove_object(t, "urn:e1").collect()}
     assert ("urn:e9", "urn:prop:dest") not in keys   # URI object → cascaded
     assert ("urn:e8", "urn:prop:code") in keys       # typed literal survives
     assert ("urn:e9", "urn:prop:title") in keys
+    keys = {(r.subject, r.predicate) for r in
+            remove_object(t, "http://example.org/x").collect()}
+    assert ("urn:e7", "urn:prop:link") not in keys
+    assert ("urn:e7", "urn:prop:home") in keys
+    keys = {(r.subject, r.predicate) for r in
+            remove_object(t, "mailto:a@b").collect()}
+    assert ("urn:e7", "urn:prop:mail") in keys
 
 
 def test_clear(spark, triples):
@@ -190,6 +203,38 @@ def test_nt_roundtrip_adversarial_literals(spark):
     got = {r.subject: r.object for r in back.collect()}
     want = {s: o for s, _, o, _, _ in rows}
     assert got == want
+
+
+def test_nt_literal_escapes_decode_like_terms_unescape(spark):
+    """parse_lines decodes every ECHAR and UCHAR of a literal body the
+    way io/terms.py's ``unescape`` does — surrogate pairs join, an
+    escaped backslash stays literal — and drops a line with any other
+    escape; the decoded table round-trips through serialize_lines.  One
+    Spark batch for all examples."""
+    import random
+
+    from kgraphmemory_spark.io.terms import unescape
+    rng = random.Random(1717)
+    atoms = [r"\t", r"\b", r"\n", r"\r", r"\f", r'\"', r"\'", r"\\",
+             r"\u00e9", r"\u0041", r"\uD83D\uDE00", r"\U0001F600",
+             r"\U0010FFFF", r"\\u0041", "u0041", "a", "é", " ", "😀"]
+    bodies = sorted({"".join(rng.choice(atoms)
+                             for _ in range(rng.randint(1, 8)))
+                     for _ in range(150)} | {r"\\u0041"})
+    bad = [r"\q", r"a\d+", r"\uD800", r"\U00110000", r"\u00e"]
+    for b in bad:
+        with pytest.raises(ValueError, match="invalid string escape"):
+            unescape(b)
+    lines = ([(f'<urn:s{i}> <urn:p> "{b}" .',) for i, b in enumerate(bodies)]
+             + [(f'<urn:bad> <urn:p> "{b}" .',) for b in bad])
+    back = parse_lines(spark.createDataFrame(lines, "value string"))
+    got = {r.subject: r.object for r in back.collect()}
+    assert got == {f"urn:s{i}": unescape(b) for i, b in enumerate(bodies)}
+    # an escaped backslash stays literal: six characters, not "A"
+    i = bodies.index(r"\\u0041")
+    assert got[f"urn:s{i}"] == r"\u0041"
+    again = parse_lines(serialize_lines(back))
+    assert {r.subject: r.object for r in again.collect()} == got
 
 
 def test_nt_roundtrip_exact(triples):
